@@ -11,10 +11,11 @@ module is the single-pipeline Spark-native equivalent:
   its frontier when it changes — exactly the reference's update-mode
   stage-1 contract, minus the Kafka round-trip.
 * stage 2 = the ``foreachBatch`` global merge: each micro-batch of
-  emitted frontiers is reduced with the batch skyline operator and
-  folded into the running global frontier (``SkylineStreamState``) —
-  the reference's complete-mode stage 2, with the single-task
-  ``collect_list`` reduce replaced by the engine's tree merge.
+  emitted frontiers is folded into the running global frontier
+  (``SkylineStreamState``) — the reference's complete-mode stage 2,
+  with the single-task ``collect_list`` reduce replaced by the
+  state's count-gated anti-join (or the engine's partitioned operator
+  for huge pools).
 
 Correctness rests on the same monotonicity argument the reference
 exploits (SURVEY.md §3.2): under append-only input a dominated point
@@ -70,16 +71,12 @@ def run_two_stage_skyline_stream(
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
         # materialize the emissions ONCE: foreachBatch re-executes the
-        # batch plan per ACTION, so the previous isEmpty + bounds agg +
-        # kernel pass re-ran the stage-1 stateful stage three-plus
-        # times per batch (round-14 profile: three 8-task stateful
-        # stages per merge). The emissions are frontier-sized by
-        # construction — cheap to checkpoint — and the materialized
-        # update path reduces them in one count-gated pass.
-        batch = batch_df.drop(_CELL).localCheckpoint(eager=True)
-        if batch.isEmpty():
-            return
-        state.update(batch, materialized=True)
+        # batch plan per ACTION, so the update's size probe and pool
+        # checkpoint would each re-run the stage-1 stateful stage. The
+        # emissions are frontier-sized by construction — cheap to
+        # checkpoint — and the update reduces them in one count-gated
+        # pass.
+        state.update(batch_df.drop(_CELL).localCheckpoint(eager=True))
 
     writer = (
         cells.writeStream.foreachBatch(merge)
