@@ -41,6 +41,7 @@ import math
 
 from pyspark_skyline_spark.operators.skyline import (
     _bucket,
+    _comparable,
     _compute_bounds,
     _minspace_exprs,
     _normalize_dims,
@@ -88,7 +89,8 @@ def k_skyband(
     """Rows of ``df`` dominated by fewer than ``k`` rows under the
     per-dimension MIN/MAX senses, with the exact dominator count in
     ``count_col``. ``k_skyband(df, dims, k=1)`` equals
-    ``skyline(df, dims)``.
+    ``skyline(df, dims)``; rows with a NULL or NaN dimension are
+    excluded, as there.
     """
     if k <= 0:
         raise ValueError("k must be positive")
@@ -103,7 +105,7 @@ def k_skyband(
         2, math.ceil((4 * spark.sparkContext.defaultParallelism) ** (1.0 / d))
     )
 
-    df = df.filter(F.expr(" AND ".join(f"`{c}` IS NOT NULL" for c, _ in dims)))
+    df = _comparable(df, dims)
     bounds = _compute_bounds(df, dims)
     vs = _minspace_exprs(df, dims, bounds)
     digits = [_bucket(v, b) for v in vs]

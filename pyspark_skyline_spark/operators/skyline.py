@@ -46,6 +46,18 @@ ALGORITHMS = ("MR_DIM", "MR_DIM_Q", "MR_GRID", "MR_ANGLE", "auto")
 
 _CELL = "__sky_cell"
 
+# The merge policy of ``skyline()`` (see its docstring), in one place:
+#: tree-merge fan-in (one fold pass up to 256 cells, two up to 65536,
+#: ...; local frontiers are small, so a wide fan-in saves whole passes)
+_MERGE_FANOUT = 256
+#: candidate counts in (_BROADCAST_MIN, _BROADCAST_CAP] take the
+#: parallel broadcast filter; past the cap they are never collected
+_BROADCAST_MIN = 8192
+_BROADCAST_CAP = 2_000_000
+#: estimated input size past which the map-side combiner runs and the
+#: merge probe runs at any d
+_LARGE_INPUT_BYTES = 4 * 1024**3
+
 # Make our kernel module picklable by value so applyInPandas closures run
 # on executors that don't have the package on their PYTHONPATH.
 try:  # pragma: no cover - defensive
@@ -88,6 +100,36 @@ def _numeric_expr(df: DataFrame, col: str):
     if dtype == "date":
         return F.datediff(c, F.to_date(F.lit("1970-01-01"))).cast("double")
     return c.cast("double")
+
+
+def _comparable(df: DataFrame, dims) -> DataFrame:
+    """Rows with a value in every skyline dimension: NULL dims are
+    excluded (SQL NOT EXISTS oracle semantics), and so are NaN dims —
+    IEEE comparisons make NaN rows incomparable (the kernel would keep
+    every one of them), Spark orders NaN above every value, and engines
+    disagree on NaN ordering, so the only portable semantics is "no
+    value, no row". Every operator of the skyline family filters
+    through here."""
+    guards = []
+    for c, _ in dims:
+        if c not in df.columns:
+            raise ValueError(f"skyline dimension {c!r} not in DataFrame columns {df.columns}")
+        guards.append(f"`{c}` IS NOT NULL")
+        if df.schema[c].dataType.typeName() in ("double", "float"):
+            guards.append(f"NOT isnan(`{c}`)")
+    return df.filter(F.expr(" AND ".join(guards)))
+
+
+def _dominates(q_cols, p_cols, senses):
+    """Column predicate: the row of ``q_cols`` dominates the row of
+    ``p_cols`` — no worse in every dimension, strictly better in one."""
+    no_worse = strictly_better = None
+    for qc, pc, sense in zip(q_cols, p_cols, senses):
+        nw = (qc <= pc) if sense == "min" else (qc >= pc)
+        sb = (qc < pc) if sense == "min" else (qc > pc)
+        no_worse = nw if no_worse is None else (no_worse & nw)
+        strictly_better = sb if strictly_better is None else (strictly_better | sb)
+    return no_worse & strictly_better
 
 
 def _compute_bounds(df: DataFrame, dims) -> dict[str, tuple[float, float]]:
@@ -279,7 +321,9 @@ def _mr_angle_key(vs, p: int):
 
 def _estimated_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for the plan (parquet footer stats when
-    available); used to auto-enable the map-side combiner."""
+    available); the one size input of ``skyline()``'s merge policy.
+    0 when the estimate fails; a plan without statistics (e.g. a frame
+    built from local rows) estimates as Long.MaxValue, i.e. large."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # pragma: no cover - estimation is best-effort
@@ -312,7 +356,7 @@ def _default_param(algo: str, d: int, parallelism: int) -> int:
     raise ValueError(f"unknown algorithm {algo!r}")
 
 
-def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, prune_rounds: int, by=()):
+def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=()):
     """One per-(by + cell) skyline pass; keeps the cell col.
 
     The grouped kernel is Python/Arrow LATENCY-bound (per-group IPC
@@ -342,7 +386,7 @@ def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, prune_rounds: int
         n = df_keyed.sparkSession.sparkContext.defaultParallelism
 
     def fn(pdf):
-        mask = find_skyline_mask([pdf[c] for c in dim_cols], senses, prune_rounds)
+        mask = find_skyline_mask([pdf[c] for c in dim_cols], senses)
         return pdf[mask]
 
     return (
@@ -350,7 +394,7 @@ def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, prune_rounds: int
     )
 
 
-def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, prune_rounds: int, by=()):
+def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=()):
     """Combiner: reduce each Arrow batch with ONE batch-global kernel
     call BEFORE the shuffle, so the groupBy exchange only carries
     frontier candidates — the skyline analogue of map-side partial
@@ -368,17 +412,13 @@ def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, prune_rounds: int
             if len(pdf) == 0:
                 continue
             if not by:
-                mask = find_skyline_mask(
-                    [pdf[c] for c in dim_cols], senses, prune_rounds
-                )
+                mask = find_skyline_mask([pdf[c] for c in dim_cols], senses)
                 yield pdf[mask]
                 continue
             keep = np.zeros(len(pdf), dtype=bool)
             for gidx in pdf.groupby(list(by), dropna=False, sort=False).indices.values():
                 sub = pdf.iloc[gidx]
-                mask = find_skyline_mask(
-                    [sub[c] for c in dim_cols], senses, prune_rounds
-                )
+                mask = find_skyline_mask([sub[c] for c in dim_cols], senses)
                 keep[gidx[mask]] = True
             yield pdf[keep]
 
@@ -489,13 +529,7 @@ def skyline(
     algo: str = "auto",
     partitions: int | None = None,
     bounds: dict[str, tuple[float, float]] | None = None,
-    merge_fanout: int = 256,
-    prune_rounds: int = 8,
     by: list[str] | None = None,
-    map_side_combine: bool | None = None,
-    merge_strategy: str = "auto",
-    broadcast_threshold: int = 8192,
-    broadcast_cap: int = 2_000_000,
 ) -> DataFrame:
     """Skyline of ``df`` under per-dimension MIN/MAX senses.
 
@@ -509,56 +543,49 @@ def skyline(
         output, unlike the reference's coordinate-only structs)
     dims : list of ``(column, "min"|"max")`` or a query string
         ``"SKYLINE OF c1 MIN, c2 MAX"``
-    algo : MR_DIM | MR_GRID | MR_ANGLE | auto
+    algo : MR_DIM | MR_DIM_Q | MR_GRID | MR_ANGLE | auto
     partitions : fan-out parameter ``p`` (algorithm-specific, see
         reference README.md:47-60); derived from cluster parallelism
         when None
     bounds : optional precomputed per-column (lo, hi) to skip the
         bounds pass
-    merge_fanout : fan-in of the tree merge (256 => one merge pass up to
-        256 cells, two up to 65536, ...; local frontiers are small, so a
-        wide fan-in saves whole passes)
-    prune_rounds : pivot pre-prune rounds inside the NumPy kernel
-    map_side_combine : pre-shuffle batch-level reduction (None = auto by
-        estimated input size: on for cluster-scale inputs where the
-        exchange is the bottleneck, off for small local runs)
-    merge_strategy : "auto" | "tree" | "broadcast". The tree merge's
-        final fold runs the whole frontier through ONE applyInPandas
-        group — fine for typical frontiers, minutes-single-threaded for
-        the huge ones (high-d / anticorrelated data). "auto"
-        materializes the local frontiers (localCheckpoint), counts
-        them, and switches to ``_broadcast_final_filter`` when the
-        count is in (broadcast_threshold, broadcast_cap]; outside that
-        range (or for grouped skylines, whose parallelism comes from
-        groups) it tree-merges. The probe job itself is skipped (straight
-        to tree) for small low-d inputs — estimated input <= 4 GiB and
-        d <= 4 — where the wall frontier shape cannot occur and the
-        probe is pure per-query overhead. "broadcast" forces the
-        parallel filter, "tree" forces the fold (also the >cap fallback
-        — frontiers past the cap are never collected).
+    by : optional group columns
 
-    Rows with NULL in any skyline dimension are excluded (SQL
-    ``NOT EXISTS`` oracle semantics need the same guard).
+    Merge policy: one size-driven decision, read from ONE Catalyst size
+    estimate ``est`` of the input (``_estimated_bytes``; 0 when it
+    fails) and the dimension count ``d``:
+
+    * **combiner** — iff ``est > _LARGE_INPUT_BYTES`` (4 GiB), each
+      Arrow batch is reduced to its frontier before the shuffle
+      (``_map_side_prereduce``): an extra Python pass that pays only
+      when the exchange is the bottleneck.
+    * **probe** — skipped iff ``d <= 4`` and ``0 < est <=
+      _LARGE_INPUT_BYTES``: a small low-d input cannot grow a frontier
+      big enough to hit the tree's single-group wall, and the probe
+      (checkpoint + count of the local frontiers) is one fixed extra job.
+      High d keeps it at any size (frontier growth is exponential in d:
+      the d=10/1e5 shape is ~8 MB of input but a 68k-point frontier),
+      large inputs keep it at any d, and a failed estimate keeps it —
+      unknown is not small. A small but all-frontier low-d input pays
+      the tree fold. Grouped skylines (parallel by group) and a single
+      cell never probe.
+    * **broadcast filter** — iff the probe ran and its candidate count
+      ``n_cand`` is in ``(_BROADCAST_MIN, _BROADCAST_CAP]`` (8192,
+      2e6]: ``_broadcast_final_filter`` verifies the frontier across
+      every core instead of in the tree's final single group.
+    * **tree fold** — otherwise: fold cell ids ``_MERGE_FANOUT`` (256)
+      at a time and re-run the kernel until one group remains; also
+      the fallback past the cap, whose candidates are never collected.
+
+    Rows with NULL or NaN in any skyline dimension are excluded, the
+    rule the whole skyline family shares (``_comparable``).
     """
     dims = _normalize_dims(dims)
-    for c, _ in dims:
-        if c not in df.columns:
-            raise ValueError(f"skyline dimension {c!r} not in DataFrame columns {df.columns}")
     d = len(dims)
     algo = _pick_algo(algo, d)
     if algo not in ("MR_DIM", "MR_DIM_Q", "MR_GRID", "MR_ANGLE"):
         raise ValueError(f"algo must be one of {ALGORITHMS}, got {algo!r}")
-
-    # NULL dims are excluded (SQL NOT EXISTS oracle semantics); NaN dims
-    # too — IEEE comparisons make NaN rows incomparable (the kernel
-    # would keep every one of them), and engines disagree on NaN
-    # ordering, so the only portable semantics is "no value, no row"
-    guards = []
-    for c, _ in dims:
-        guards.append(f"`{c}` IS NOT NULL")
-        if df.schema[c].dataType.typeName() in ("double", "float"):
-            guards.append(f"NOT isnan(`{c}`)")
-    df = df.filter(F.lit(True) & F.expr(" AND ".join(guards)))
+    df = _comparable(df, dims)
 
     if bounds is None:
         bounds = _compute_bounds(df, dims)
@@ -626,37 +653,17 @@ def skyline(
         keyed = keyed.withColumn(_CELL, F.col(_CELL) * F.lit(salt_mod) + salt)
         ncells *= salt_mod
 
-    if map_side_combine is None:
-        # auto: the combiner pays an extra Python/Arrow pass to shrink the
-        # exchange — worth it when the shuffle is network/disk-bound (big
-        # inputs on a cluster), a net loss for small local shuffles
-        map_side_combine = _estimated_bytes(df) > 4 * 1024**3
-    if map_side_combine:
+    est = _estimated_bytes(df)
+    large = est > _LARGE_INPUT_BYTES
+    if large:
         # pre-shuffle combiner: the exchange only carries per-batch
         # frontier survivors, not the whole table
-        keyed = _map_side_prereduce(keyed, dim_cols, senses, prune_rounds, by)
+        keyed = _map_side_prereduce(keyed, dim_cols, senses, by)
 
-    out = _local_skyline_pass(keyed, dim_cols, senses, prune_rounds, by)
+    out = _local_skyline_pass(keyed, dim_cols, senses, by)
 
-    if merge_strategy not in ("auto", "tree", "broadcast"):
-        raise ValueError(f"merge_strategy must be auto/tree/broadcast, got {merge_strategy!r}")
-    if merge_strategy == "auto" and d <= 4 and 0 < _estimated_bytes(df) <= 4 * 1024**3:
-        # Probe-skip gate (same size gate as the map-side combiner): the
-        # adaptive probe below costs one fixed extra job (checkpoint +
-        # count) before the merge — pure overhead at small SF (~+1 s per
-        # query in the r3 bench). A small LOW-d input cannot grow a
-        # frontier big enough to hit the tree's single-group wall, so go
-        # straight to the tree. High d keeps the probe regardless of
-        # size (frontier growth is exponential in d: the d=10/1e5 shape
-        # is ~8 MB of input but a 68k-point frontier — minutes in the
-        # tree's final fold, seconds broadcast-filtered), and large
-        # inputs keep it at any d (a 100 TB anticorrelated 2-d scan can
-        # still surface a multi-million-point frontier). A pathological
-        # small-but-all-frontier low-d input pays the tree fold; force
-        # merge_strategy="broadcast" to override. A FAILED size estimate
-        # (_estimated_bytes == 0) keeps the probe — unknown is not small.
-        merge_strategy = "tree"
-    if merge_strategy != "tree" and not by and ncells > 1:
+    probe = not (d <= 4 and 0 < est <= _LARGE_INPUT_BYTES)
+    if probe and not by and ncells > 1:
         # Adaptive global merge: materialize the (small relative to the
         # input) local frontiers once, then pick the merge shape by
         # candidate count. The lazy checkpoint materializes inside the
@@ -664,9 +671,7 @@ def skyline(
         # reuses the materialization instead of recomputing the pass.
         out = out.localCheckpoint(eager=False)
         n_cand = out.count()
-        if merge_strategy == "broadcast" or (
-            broadcast_threshold < n_cand <= broadcast_cap
-        ):
+        if _BROADCAST_MIN < n_cand <= _BROADCAST_CAP:
             return _broadcast_final_filter(out, dim_cols, senses).drop(_CELL)
 
     # Tree merge: repeatedly fold cell ids and re-run the kernel until a
@@ -674,9 +679,9 @@ def skyline(
     # reduce (src/jobs/batch_job.py:183-188) that its own report calls
     # the scaling wall (report p.3).
     while ncells > 1:
-        ncells = max(1, math.ceil(ncells / merge_fanout))
+        ncells = max(1, math.ceil(ncells / _MERGE_FANOUT))
         out = out.withColumn(_CELL, F.pmod(F.col(_CELL), F.lit(ncells)))
-        out = _local_skyline_pass(out, dim_cols, senses, prune_rounds, by)
+        out = _local_skyline_pass(out, dim_cols, senses, by)
 
     return out.drop(_CELL)
 
@@ -692,23 +697,18 @@ def skyline_antijoin(df: DataFrame, dims) -> DataFrame:
     debug check, the oracle cross-check); the partitioned kernel path
     (``skyline``) is the at-scale operator. Provided because it is
     whole-stage-codegen'd, zero-Python, and exactly mirrors the SQL
-    oracle — a differential anchor for the kernel path.
+    oracle — a differential anchor for the kernel path. NULL and NaN
+    dims are excluded as in ``skyline`` (``_comparable``).
     """
     dims = _normalize_dims(dims)
-    for c, _ in dims:
-        if c not in df.columns:
-            raise ValueError(f"skyline dimension {c!r} not in DataFrame columns {df.columns}")
-    df = df.filter(F.expr(" AND ".join(f"`{c}` IS NOT NULL" for c, _ in dims)))
+    df = _comparable(df, dims)
     p, q = df.alias("p"), df.alias("q")
-    no_worse = None
-    strictly_better = None
-    for c, sense in dims:
-        qc, pc = F.col(f"q.`{c}`"), F.col(f"p.`{c}`")
-        nw = (qc <= pc) if sense == "min" else (qc >= pc)
-        sb = (qc < pc) if sense == "min" else (qc > pc)
-        no_worse = nw if no_worse is None else (no_worse & nw)
-        strictly_better = sb if strictly_better is None else (strictly_better | sb)
-    return p.join(q, no_worse & strictly_better, "left_anti")
+    dominated = _dominates(
+        [F.col(f"q.`{c}`") for c, _ in dims],
+        [F.col(f"p.`{c}`") for c, _ in dims],
+        [s for _, s in dims],
+    )
+    return p.join(q, dominated, "left_anti")
 
 
 def skyline_witness(
@@ -752,16 +752,14 @@ def skyline_witness(
             "broadcasting it for the dominance join would not be safe "
             "(anticorrelated data can put most of the table on the frontier)"
         )
-    no_worse, strictly_better = None, None
-    for i, (c, sense) in enumerate(dims):
-        qc, pc = F.col(f"__w_{i}"), F.col(f"`{c}`")
-        nw = (qc <= pc) if sense == "min" else (qc >= pc)
-        sb = (qc < pc) if sense == "min" else (qc > pc)
-        no_worse = nw if no_worse is None else (no_worse & nw)
-        strictly_better = sb if strictly_better is None else (strictly_better | sb)
+    dominated = _dominates(
+        [F.col(f"__w_{i}") for i in range(len(dims))],
+        [F.col(f"`{c}`") for c, _ in dims],
+        [s for _, s in dims],
+    )
     dim_cols = [c for c, _ in dims]
     joined = df.select(id_col, *dim_cols).join(
-        F.broadcast(frontier), no_worse & strictly_better, "left"
+        F.broadcast(frontier), dominated, "left"
     )
     return joined.groupBy(id_col, *[F.col(f"`{c}`") for c in dim_cols]).agg(
         F.min("__w_id").alias("witness")
@@ -961,25 +959,7 @@ def skyline_layers(
     # data, and every remainder is a subset of df — saves one agg job
     # per layer
     if skyline_kwargs.get("bounds") is None:
-        skyline_kwargs["bounds"] = _compute_bounds(
-            df.filter(F.expr(" AND ".join(f"`{c}` IS NOT NULL" for c, _ in dims_n))),
-            dims_n,
-        )
-    # hoist skyline()'s size-gated decisions out of the loop (round 13):
-    # each gate costs an optimizer pass (_estimated_bytes) PER CALL per
-    # layer, and every remainder is a subset of df, so df's estimate
-    # decides identically for all peels. Only the small-input fast path
-    # is pinned; large inputs keep the per-layer adaptive behavior.
-    # INTENTIONAL divergence (ADVICE r13): this estimate reads the RAW
-    # df while skyline()'s internal gates read the NULL/NaN-filtered
-    # input — the raw estimate is >= the filtered one, so near the
-    # 4 GiB threshold the hoist can only err toward keeping the
-    # adaptive (probe-paying) path, never toward unsafely pinning it.
-    est = _estimated_bytes(df)
-    if 0 < est <= 4 * 1024**3:
-        skyline_kwargs.setdefault("map_side_combine", False)
-        if len(dims_n) <= 4:
-            skyline_kwargs.setdefault("merge_strategy", "tree")
+        skyline_kwargs["bounds"] = _compute_bounds(_comparable(df, dims_n), dims_n)
     remainder = df
     out: DataFrame | None = None
     for layer in range(1, n_layers + 1):
@@ -988,8 +968,8 @@ def skyline_layers(
         # local-pass + merge pipeline re-executes per consumer (round-13
         # profile: the final union re-ran every layer's kernel passes).
         # A frontier is small relative to its dataset, so materializing
-        # it is cheap; measured with the hoisted gates above, the
-        # checkpointed loop is 3.4 s vs 4.5 s without at sf0.1.
+        # it is cheap; measured, the checkpointed loop is 3.4 s vs 4.5 s
+        # without at sf0.1.
         front = skyline(remainder, dims_n, algo=algo, **skyline_kwargs).localCheckpoint(
             eager=False
         )

@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from pyspark_skyline_spark.operators.skyline import (
     _normalize_dims,
@@ -155,9 +155,8 @@ class SkylineStreamState:
         skyline: a single codegen'd NOT-EXISTS anti-join when the pool
         is small (every stream pool but the rare huge raw batch), the
         partitioned kernel operator past ``_ANTIJOIN_MAX``. The two
-        forms are semantically identical (differential-tested); the
-        anti-join path replicates skyline()'s NaN guard explicitly
-        because ``skyline_antijoin`` alone only filters NULLs.
+        forms are semantically identical (differential-tested), NULL/NaN
+        exclusion included.
 
         The anti-join's output keeps its streamed side's partitions, so
         the pool is coalesced first to k partitions that do not depend on
@@ -167,13 +166,6 @@ class SkylineStreamState:
         n = cand.count()
         if n > _ANTIJOIN_MAX:
             return skyline(cand, self.dims, algo=self.algo, **self.kwargs)
-        nan_guards = [
-            f"NOT isnan(`{c}`)"
-            for c, _ in self.dims
-            if dict(cand.dtypes).get(c) in ("double", "float")
-        ]
-        if nan_guards:
-            cand = cand.filter(F.expr(" AND ".join(nan_guards)))
         par = cand.sparkSession.sparkContext.defaultParallelism
         k = max(1, math.ceil(par * (n / _ANTIJOIN_MAX) ** 2))
         return skyline_antijoin(cand.coalesce(k), self.dims)

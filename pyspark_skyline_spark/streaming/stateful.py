@@ -41,7 +41,6 @@ def stateful_cell_skyline(
     dims,
     bounds: dict[str, tuple[float, float]],
     partitions: int = 32,
-    prune_rounds: int = 8,
 ) -> DataFrame:
     """Streaming DataFrame -> update-mode stream of per-cell local
     skylines (full input rows + ``__sky_cell``).
@@ -71,9 +70,7 @@ def stateful_cell_skyline(
         if not batches:
             return
         merged = pd.concat(batches, ignore_index=True)
-        mask = find_skyline_mask(
-            [merged[c] for c in dim_cols], senses, prune_rounds
-        )
+        mask = find_skyline_mask([merged[c] for c in dim_cols], senses)
         frontier = merged[mask]
         state.update((pickle.dumps(frontier),))
         yield frontier

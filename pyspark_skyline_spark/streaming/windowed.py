@@ -55,7 +55,6 @@ def windowed_stream_skyline(
     bounds: dict[str, tuple[float, float]],
     delay: str = "10 minutes",
     partitions: int = 8,
-    prune_rounds: int = 8,
 ) -> DataFrame:
     """Streaming DataFrame -> update-mode stream of per-(window, cell)
     local frontiers: input columns + ``window_start`` + ``__sky_cell``.
@@ -125,7 +124,7 @@ def windowed_stream_skyline(
         if not batches:
             return
         merged = pd.concat(batches, ignore_index=True)
-        mask = find_skyline_mask([merged[c] for c in dim_cols], senses, prune_rounds)
+        mask = find_skyline_mask([merged[c] for c in dim_cols], senses)
         frontier = merged[mask]
         state.update((pickle.dumps(frontier),))
         # Expiry anchor: the timeout must exceed the current watermark,

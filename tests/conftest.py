@@ -39,3 +39,57 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def merge_policy(spark, monkeypatch):
+    """Context manager over ``skyline()``'s merge policy. Patches its
+    module constants (and, with ``est=``, the size estimate) for the
+    block, and counts what ran: ``est`` size estimates read, ``probe``
+    counts of the cell-keyed local frontiers, ``combiner`` and
+    ``broadcast`` passes, and ``local_pass`` kernel passes (more than
+    one per call means the tree fold ran)."""
+    import collections
+    import contextlib
+
+    from pyspark_skyline_spark.operators import skyline as S
+
+    frame = type(spark.range(1))
+
+    @contextlib.contextmanager
+    def policy(est=None, **consts):
+        ran = collections.Counter()
+
+        def counting(fn, key):
+            def wrapped(*a, **kw):
+                ran[key] += 1
+                return fn(*a, **kw)
+
+            return wrapped
+
+        real_est, real_count = S._estimated_bytes, frame.count
+
+        def estimate(df):
+            ran["est"] += 1
+            return real_est(df) if est is None else est
+
+        def count(self):
+            if S._CELL in self.columns:
+                ran["probe"] += 1
+            return real_count(self)
+
+        with monkeypatch.context() as m:
+            for name, value in consts.items():
+                assert hasattr(S, name), name
+                m.setattr(S, name, value)
+            m.setattr(S, "_estimated_bytes", estimate)
+            m.setattr(frame, "count", count)
+            for name, key in (
+                ("_map_side_prereduce", "combiner"),
+                ("_broadcast_final_filter", "broadcast"),
+                ("_local_skyline_pass", "local_pass"),
+            ):
+                m.setattr(S, name, counting(getattr(S, name), key))
+            yield ran
+
+    return policy

@@ -29,11 +29,15 @@ def empty_docs(spark):
     )
 
 
-def test_skyline_family_empty(spark, empty_pts):
+def test_skyline_family_empty(spark, empty_pts, merge_policy):
     dims = [("x", "min"), ("y", "min")]
     for algo in ("MR_DIM", "MR_GRID", "MR_ANGLE"):
         assert skyline(empty_pts, dims, algo=algo).count() == 0
-    assert skyline(empty_pts, dims, merge_strategy="broadcast").count() == 0
+    # the broadcast filter on zero candidates: a failed size estimate
+    # keeps the probe, and a count of 0 is past a minimum of -1
+    with merge_policy(est=0, _BROADCAST_MIN=-1) as ran:
+        assert skyline(empty_pts, dims).count() == 0
+    assert ran["broadcast"] == 1
     assert skyline_layers(empty_pts, dims, n_layers=2).count() == 0
     assert k_skyband(empty_pts, dims, k=2).count() == 0
     assert skyline(empty_pts, dims, by=["x"]).count() == 0

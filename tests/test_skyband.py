@@ -46,6 +46,13 @@ def test_k_skyband_k1_is_skyline(spark):
     assert {r.id for r in k_skyband(df, dims, k=1).collect()} == {
         r.id for r in skyline(df, dims).collect()
     }
+    # a NaN dimension is excluded as in skyline(): it must not reach the
+    # bounds pass either, where hi = NaN would collapse the dimension
+    rows = [(0, 1.0, 5.0), (1, 2.0, 1.0), (2, 3.0, 3.0), (3, float("nan"), 0.5), (4, 0.5, 9.0)]
+    df = spark.createDataFrame(rows, "id long, x double, y double")
+    dims = [("x", "min"), ("y", "min")]
+    got = {r.id for r in k_skyband(df, dims, k=1).collect()}
+    assert got == {r.id for r in skyline(df, dims).collect()} == {0, 1, 4}
 
 
 def test_k_skyband_duplicates_count_rows(spark):

@@ -1,13 +1,23 @@
 """Batch skyline operator vs DuckDB oracle + cross-algorithm differential
 (SURVEY.md §5 test plan)."""
 
+import math
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from pyspark_skyline_spark import skyline, skyline_sql
+from pyspark_skyline_spark.operators import skyline as S
 
 ALGOS = ["MR_DIM", "MR_GRID", "MR_ANGLE"]
+
+# ``merge_policy`` settings that pin skyline()'s global merge: the tree
+# fold (no candidate count is in an empty broadcast range), or the
+# broadcast filter (a failed size estimate keeps the probe at any d,
+# and every candidate count is past the minimum)
+PIN_TREE = {"_BROADCAST_MIN": S._BROADCAST_CAP}
+PIN_BROADCAST = {"est": 0, "_BROADCAST_MIN": -1}
 
 
 def duck_skyline(parquet_path, cols, senses):
@@ -149,23 +159,32 @@ def test_grouped_grid_prune_census_cap(orders):
     assert capped is keyed  # skipped, not filtered
 
 
-def test_map_side_combine_equivalent(lineitem):
+def test_map_side_combine_equivalent(lineitem, merge_policy):
+    # a size limit below every estimate turns the combiner on
     dims = [("l_extendedprice", "min"), ("l_quantity", "min")]
-    with_c = spark_skyline_set(lineitem, dims, map_side_combine=True)
-    without = spark_skyline_set(lineitem, dims, map_side_combine=False)
+    with merge_policy(_LARGE_INPUT_BYTES=-1) as ran:
+        with_c = spark_skyline_set(lineitem, dims)
+    assert ran["combiner"] == 1
+    with merge_policy() as ran:
+        without = spark_skyline_set(lineitem, dims)
+    assert ran["combiner"] == 0
     assert with_c == without
 
 
-def test_map_side_combine_grouped(orders):
+def test_map_side_combine_grouped(orders, merge_policy):
     dims = [("o_totalprice", "max"), ("o_orderdate", "min")]
     def run(combine):
-        res = skyline(orders, dims, by=["o_orderstatus"], map_side_combine=combine)
-        return sorted(
-            tuple(r)
-            for r in res.select("o_orderstatus", "o_totalprice", "o_orderdate")
-            .dropDuplicates()
-            .collect()
-        )
+        consts = {"_LARGE_INPUT_BYTES": -1} if combine else {}
+        with merge_policy(**consts) as ran:
+            res = skyline(orders, dims, by=["o_orderstatus"])
+            got = sorted(
+                tuple(r)
+                for r in res.select("o_orderstatus", "o_totalprice", "o_orderdate")
+                .dropDuplicates()
+                .collect()
+            )
+        assert ran["combiner"] == int(combine)
+        return got
     assert run(True) == run(False)
 
 
@@ -314,7 +333,7 @@ def test_grouped_grid_prune_keeps_null_group_keys(spark):
     assert {r for r in got if r[0] is None} == {(None, 1.0, 2.0), (None, 3.0, 1.0)}
 
 
-def test_broadcast_merge_matches_tree_on_anticorrelated(spark):
+def test_broadcast_merge_matches_tree_on_anticorrelated(spark, merge_policy):
     # adversarial shape for the final merge: anticorrelated dims put a
     # large fraction of rows on the frontier, where the tree merge's
     # final fold funnels everything through one kernel group and the
@@ -331,50 +350,113 @@ def test_broadcast_merge_matches_tree_on_anticorrelated(spark):
 
     df = spark.createDataFrame(pd.DataFrame(arr, columns=cols))
     dims = [(c, "min") for c in cols]
-    tree = {tuple(r) for r in skyline(df, dims, merge_strategy="tree").collect()}
-    bcast = {tuple(r) for r in skyline(df, dims, merge_strategy="broadcast").collect()}
-    # auto with a tiny threshold must take the broadcast path and agree
-    auto = {
-        tuple(r)
-        for r in skyline(df, dims, merge_strategy="auto", broadcast_threshold=8).collect()
-    }
+    with merge_policy(**PIN_TREE) as tree_ran:
+        tree = {tuple(r) for r in skyline(df, dims).collect()}
+    with merge_policy(**PIN_BROADCAST) as bcast_ran:
+        bcast = {tuple(r) for r in skyline(df, dims).collect()}
+    # the policy with a tiny broadcast minimum must take the broadcast
+    # path and agree
+    with merge_policy(_BROADCAST_MIN=8) as auto_ran:
+        auto = {tuple(r) for r in skyline(df, dims).collect()}
+    assert [tree_ran["broadcast"], bcast_ran["broadcast"], auto_ran["broadcast"]] == [0, 1, 1]
     assert tree == bcast == auto
     assert len(tree) > 100  # genuinely wide frontier, not a trivial case
 
 
-def test_broadcast_merge_cap_falls_back_to_tree(spark):
-    # past broadcast_cap the candidates are never collected; the tree
-    # fallback must still produce the same frontier
+def test_broadcast_merge_cap_falls_back_to_tree(spark, merge_policy):
+    # past _BROADCAST_CAP the candidates are never collected; the tree
+    # fallback must still produce the same frontier. A size limit below
+    # every estimate makes this 2-d input probe whatever Catalyst
+    # estimates for it: 101 candidates, past the cap of 5.
     rows = [(float(i), float(100 - i)) for i in range(100)] + [(50.0, 50.0)]
     df = spark.createDataFrame(rows, "x double, y double")
     dims = [("x", "min"), ("y", "min")]
-    capped = {
-        tuple(r)
-        for r in skyline(
-            df, dims, merge_strategy="auto", broadcast_threshold=2, broadcast_cap=5
-        ).collect()
-    }
-    tree = {tuple(r) for r in skyline(df, dims, merge_strategy="tree").collect()}
+    with merge_policy(
+        _LARGE_INPUT_BYTES=-1, _BROADCAST_MIN=2, _BROADCAST_CAP=5
+    ) as ran:
+        capped = {tuple(r) for r in skyline(df, dims).collect()}
+    assert (ran["probe"], ran["broadcast"]) == (1, 0) and ran["local_pass"] > 1
+    with merge_policy(**PIN_TREE) as ran:
+        tree = {tuple(r) for r in skyline(df, dims).collect()}
+    assert ran["broadcast"] == 0 and ran["local_pass"] > 1
     assert capped == tree
 
 
-def test_broadcast_merge_handles_timestamp_dims(spark, sf_dir):
+@pytest.mark.parametrize(
+    "d, est, consts, grouped, want",
+    [
+        # small input with d <= 4: no probe, straight to the tree fold
+        pytest.param(2, None, {}, False, (0, 0, 0), id="small_low_d"),
+        # d > 4 probes at any size; n_cand below the default minimum
+        pytest.param(5, None, {}, False, (1, 0, 0), id="high_d_below_min"),
+        pytest.param(5, None, {"_BROADCAST_MIN": 0}, False, (1, 0, 1), id="high_d_inside"),
+        pytest.param(
+            5, None, {"_BROADCAST_MIN": 0, "_BROADCAST_CAP": 1}, False, (1, 0, 0),
+            id="high_d_above_cap",
+        ),
+        # a failed estimate (0) keeps the probe: unknown is not small
+        pytest.param(2, 0, {}, False, (1, 0, 0), id="est_failed"),
+        # past the size limit: the combiner, and the probe at any d
+        pytest.param(2, S._LARGE_INPUT_BYTES + 1, {}, False, (1, 1, 0), id="est_large"),
+        # grouped skylines never probe, even with the broadcast range open
+        pytest.param(5, None, {"_BROADCAST_MIN": 0}, True, (0, 0, 0), id="grouped"),
+    ],
+)
+def test_merge_policy_paths(spark, tmp_path, merge_policy, d, est, consts, grouped, want):
+    """skyline()'s merge policy: (probe, combiner, broadcast) as
+    recorded per input shape, the tree fold iff no broadcast, one size
+    estimate per call, and the exact frontier on every path. The input
+    is read back from parquet, so Catalyst's own estimate is small
+    (a frame built from local rows estimates as Long.MaxValue)."""
+    import numpy as np
+    import pandas as pd
+
+    from pyspark_skyline_spark.operators.skyline import skyline_antijoin
+
+    rng = np.random.default_rng(13)
+    n = 400
+    energy = rng.normal(0.5, 0.05, size=n).clip(0, 1)
+    props = rng.dirichlet(np.ones(5), size=n)
+    arr = ((props * (energy[:, None] * 5)).clip(0, 1) * 1000).astype("int64")
+    pdf = pd.DataFrame(arr[:, :d], columns=[f"x{i}" for i in range(d)])
+    pdf["g"] = np.arange(n) % 2
+    spark.createDataFrame(pdf).write.parquet(str(tmp_path / "pts"))
+    df = spark.read.parquet(str(tmp_path / "pts"))
+    dims = [(f"x{i}", "min") for i in range(d)]
+    with merge_policy(est=est, **consts) as ran:
+        got = sorted(map(tuple, skyline(df, dims, by=["g"] if grouped else None).collect()))
+    assert ran["est"] == 1
+    assert (ran["probe"], ran["combiner"], ran["broadcast"]) == want
+    assert (ran["local_pass"] > 1) == (not want[2])
+    if grouped:
+        expect = [
+            r
+            for g in (0, 1)
+            for r in skyline_antijoin(df.filter(F.col("g") == g), dims).collect()
+        ]
+    else:
+        expect = skyline_antijoin(df, dims).collect()
+    assert got == sorted(map(tuple, expect))
+
+
+def test_broadcast_merge_handles_timestamp_dims(spark, sf_dir, merge_policy):
     # datetime64 dims go through to_min_space on both sides of the
     # broadcast filter (driver collect + executor batches)
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     dims = [("value", "min"), ("ts", "min")]
-    tree = {
-        (r.value, r.ts)
-        for r in skyline(df, dims, merge_strategy="tree").select("value", "ts").collect()
-    }
-    bcast = {
-        (r.value, r.ts)
-        for r in skyline(df, dims, merge_strategy="broadcast").select("value", "ts").collect()
-    }
+    with merge_policy(**PIN_TREE) as tree_ran:
+        tree = {
+            (r.value, r.ts) for r in skyline(df, dims).select("value", "ts").collect()
+        }
+    with merge_policy(**PIN_BROADCAST) as bcast_ran:
+        bcast = {
+            (r.value, r.ts) for r in skyline(df, dims).select("value", "ts").collect()
+        }
+    assert (tree_ran["broadcast"], bcast_ran["broadcast"]) == (0, 1)
     assert tree == bcast
 
 
-def test_broadcast_merge_property_vs_antijoin(spark):
+def test_broadcast_merge_property_vs_antijoin(spark, merge_policy):
     # property differential: the broadcast-merged kernel path must agree
     # with the declarative NOT EXISTS anti-join on random mixed-sense
     # frames (duplicates likely at this value range)
@@ -400,13 +482,14 @@ def test_broadcast_merge_property_vs_antijoin(spark):
     def check(rows, senses):
         df = spark.createDataFrame(rows, "a long, b long, c long")
         dims = list(zip(["a", "b", "c"], senses))
-        got = sorted(
-            map(tuple, skyline(df, dims, merge_strategy="broadcast").collect())
-        )
+        got = sorted(map(tuple, skyline(df, dims).collect()))
         want = sorted(map(tuple, skyline_antijoin(df, dims).collect()))
         assert got == want
 
-    check()
+    with merge_policy(**PIN_BROADCAST) as ran:
+        check()
+    # every example took the broadcast filter
+    assert ran["broadcast"] == ran["est"] > 0
 
 
 def test_warm_up_runs_full_pipeline_and_is_deterministic(spark):
@@ -426,14 +509,27 @@ def test_warm_up_runs_full_pipeline_and_is_deterministic(spark):
 def test_skyline_excludes_nan_dims(spark):
     # NaN rows are incomparable under IEEE comparisons (the kernel would
     # keep all of them) and engines disagree on NaN ordering — so NaN
-    # dims are excluded exactly like NULLs
-    rows = [(1.0, 2.0), (float("nan"), 0.5), (2.0, 1.0), (0.5, float("nan"))]
-    df = spark.createDataFrame(rows, "x double, y double")
-    got = {
-        (r.x, r.y)
-        for r in skyline(df, [("x", "min"), ("y", "min")]).collect()
-    }
-    assert got == {(1.0, 2.0), (2.0, 1.0)}
+    # dims are excluded exactly like NULLs, by every skyline operator
+    from pyspark_skyline_spark.operators.skyline import skyline_antijoin, skyline_layers
+
+    nan = float("nan")
+    cases = [
+        ([(1.0, 2.0), (nan, 0.5), (2.0, 1.0), (0.5, nan)], {(1.0, 2.0), (2.0, 1.0)}),
+        # Spark orders NaN above every value: an unguarded anti-join
+        # keeps (nan, 0.5) and lets it drop (0.5, 9)
+        (
+            [(1.0, 5.0), (2.0, 1.0), (3.0, 3.0), (nan, 0.5), (0.5, 9.0)],
+            {(0.5, 9.0), (1.0, 5.0), (2.0, 1.0)},
+        ),
+    ]
+    dims = [("x", "min"), ("y", "min")]
+    for rows, want in cases:
+        df = spark.createDataFrame(rows, "x double, y double")
+        assert {(r.x, r.y) for r in skyline(df, dims).collect()} == want
+        assert {(r.x, r.y) for r in skyline_antijoin(df, dims).collect()} == want
+        layers = skyline_layers(df, dims, n_layers=3).collect()
+        assert {(r.x, r.y) for r in layers if r.layer == 1} == want
+        assert not any(math.isnan(r.x) or math.isnan(r.y) for r in layers)
 
 
 def test_local_pass_fold_matches_one_shot_group_kernel(spark):
