@@ -102,14 +102,13 @@ def _numeric_expr(df: DataFrame, col: str):
     return c.cast("double")
 
 
-def _comparable(df: DataFrame, dims) -> DataFrame:
-    """Rows with a value in every skyline dimension: NULL dims are
-    excluded (SQL NOT EXISTS oracle semantics), and so are NaN dims —
-    IEEE comparisons make NaN rows incomparable (the kernel would keep
-    every one of them), Spark orders NaN above every value, and engines
-    disagree on NaN ordering, so the only portable semantics is "no
-    value, no row". Every operator of the skyline family filters
-    through here."""
+def _has_values(df: DataFrame, dims):
+    """Column predicate: the row has a value in every skyline dimension.
+    NULL dims fail it (SQL NOT EXISTS oracle semantics), and so do NaN
+    dims — IEEE comparisons make NaN rows incomparable (the kernel would
+    keep every one of them), Spark orders NaN above every value, and
+    engines disagree on NaN ordering, so the only portable semantics is
+    "no value, no row". Also the one missing-column check."""
     guards = []
     for c, _ in dims:
         if c not in df.columns:
@@ -117,7 +116,14 @@ def _comparable(df: DataFrame, dims) -> DataFrame:
         guards.append(f"`{c}` IS NOT NULL")
         if df.schema[c].dataType.typeName() in ("double", "float"):
             guards.append(f"NOT isnan(`{c}`)")
-    return df.filter(F.expr(" AND ".join(guards)))
+    return F.expr(" AND ".join(guards))
+
+
+def _comparable(df: DataFrame, dims) -> DataFrame:
+    """The rows of ``df`` that pass ``_has_values``. Every batch
+    operator of the skyline family filters through here, and
+    ``skyline_witness`` gives the other rows a NULL witness."""
+    return df.filter(_has_values(df, dims))
 
 
 def _dominates(q_cols, p_cols, senses):
@@ -727,18 +733,15 @@ def skyline_witness(
     theta-join + min-aggregate runs map-side against the full table:
     one broadcast, one shuffle-free scan, one hash aggregate keyed on
     ``id_col`` (which must be unique — the witness contract is
-    per-entity). Rows with NULL skyline dimensions are incomparable by
-    convention: they are outside the frontier and their witness is
-    NULL.
+    per-entity). Rows with a NULL or NaN skyline dimension are
+    incomparable, as in ``skyline``: they are outside the frontier and
+    their witness is NULL.
 
     Returns ``(id_col, *dim_cols, witness)``.
     """
     dims = _normalize_dims(dims)
     if id_col not in df.columns:
         raise ValueError(f"id_col {id_col!r} not in DataFrame columns {df.columns}")
-    for c, _ in dims:
-        if c not in df.columns:
-            raise ValueError(f"skyline dimension {c!r} not in DataFrame columns")
     # lazy checkpoint: the guard count is the materializing job (same
     # one-job pattern as the adaptive merge in skyline())
     frontier = skyline(df, dims).select(
@@ -758,8 +761,10 @@ def skyline_witness(
         [s for _, s in dims],
     )
     dim_cols = [c for c, _ in dims]
+    # a row without a value in some dimension (``_has_values``) is
+    # incomparable: no frontier row may match it, so its witness is NULL
     joined = df.select(id_col, *dim_cols).join(
-        F.broadcast(frontier), dominated, "left"
+        F.broadcast(frontier), dominated & _has_values(df, dims), "left"
     )
     return joined.groupBy(id_col, *[F.col(f"`{c}`") for c in dim_cols]).agg(
         F.min("__w_id").alias("witness")

@@ -33,11 +33,12 @@ def test_skyline_family_empty(spark, empty_pts, merge_policy):
     dims = [("x", "min"), ("y", "min")]
     for algo in ("MR_DIM", "MR_GRID", "MR_ANGLE"):
         assert skyline(empty_pts, dims, algo=algo).count() == 0
-    # the broadcast filter on zero candidates: a failed size estimate
-    # keeps the probe, and a count of 0 is past a minimum of -1
-    with merge_policy(est=0, _BROADCAST_MIN=-1) as ran:
+    # the combiner and the broadcast filter on zero candidates: a frame
+    # from local rows estimates as Long.MaxValue, and a count of 0 is
+    # past a minimum of -1
+    with merge_policy(_BROADCAST_MIN=-1) as ran:
         assert skyline(empty_pts, dims).count() == 0
-    assert ran["broadcast"] == 1
+    assert ran["combiner"] == ran["broadcast"] == 1
     assert skyline_layers(empty_pts, dims, n_layers=2).count() == 0
     assert k_skyband(empty_pts, dims, k=2).count() == 0
     assert skyline(empty_pts, dims, by=["x"]).count() == 0

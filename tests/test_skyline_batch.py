@@ -14,10 +14,12 @@ ALGOS = ["MR_DIM", "MR_GRID", "MR_ANGLE"]
 
 # ``merge_policy`` settings that pin skyline()'s global merge: the tree
 # fold (no candidate count is in an empty broadcast range), or the
-# broadcast filter (a failed size estimate keeps the probe at any d,
-# and every candidate count is past the minimum)
+# broadcast filter once the probe runs (every candidate count is past
+# the minimum). A frame built by createDataFrame from local rows
+# estimates as Long.MaxValue, so it probes and runs the combiner under
+# its real estimate; a small input with d <= 4 needs ``est=0`` to probe.
 PIN_TREE = {"_BROADCAST_MIN": S._BROADCAST_CAP}
-PIN_BROADCAST = {"est": 0, "_BROADCAST_MIN": -1}
+PIN_BROADCAST = {"_BROADCAST_MIN": -1}
 
 
 def duck_skyline(parquet_path, cols, senses):
@@ -358,7 +360,10 @@ def test_broadcast_merge_matches_tree_on_anticorrelated(spark, merge_policy):
     # path and agree
     with merge_policy(_BROADCAST_MIN=8) as auto_ran:
         auto = {tuple(r) for r in skyline(df, dims).collect()}
-    assert [tree_ran["broadcast"], bcast_ran["broadcast"], auto_ran["broadcast"]] == [0, 1, 1]
+    runs = (tree_ran, bcast_ran, auto_ran)
+    assert [ran["broadcast"] for ran in runs] == [0, 1, 1]
+    # a frame from pandas estimates small: d = 5 probes, no combiner
+    assert [ran["combiner"] for ran in runs] == [0, 0, 0]
     assert tree == bcast == auto
     assert len(tree) > 100  # genuinely wide frontier, not a trivial case
 
@@ -448,11 +453,13 @@ def test_broadcast_merge_handles_timestamp_dims(spark, sf_dir, merge_policy):
         tree = {
             (r.value, r.ts) for r in skyline(df, dims).select("value", "ts").collect()
         }
-    with merge_policy(**PIN_BROADCAST) as bcast_ran:
+    # a failed estimate makes this small 2-d input probe, with no combiner
+    with merge_policy(est=0, **PIN_BROADCAST) as bcast_ran:
         bcast = {
             (r.value, r.ts) for r in skyline(df, dims).select("value", "ts").collect()
         }
     assert (tree_ran["broadcast"], bcast_ran["broadcast"]) == (0, 1)
+    assert bcast_ran["combiner"] == 0
     assert tree == bcast
 
 
@@ -488,8 +495,9 @@ def test_broadcast_merge_property_vs_antijoin(spark, merge_policy):
 
     with merge_policy(**PIN_BROADCAST) as ran:
         check()
-    # every example took the broadcast filter
-    assert ran["broadcast"] == ran["est"] > 0
+    # every example ran the combiner, then the probe and the broadcast
+    # filter
+    assert ran["combiner"] == ran["probe"] == ran["broadcast"] == ran["est"] > 0
 
 
 def test_warm_up_runs_full_pipeline_and_is_deterministic(spark):

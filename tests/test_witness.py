@@ -1,6 +1,6 @@
 """skyline_witness (operators/skyline.py): frontier members get NULL,
-dominated rows get the minimal frontier dominator, NULL dims are
-incomparable, and the frontier side broadcasts."""
+dominated rows get the minimal frontier dominator, NULL and NaN dims
+are incomparable, and the frontier side broadcasts."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -75,6 +75,28 @@ def test_witness_broadcasts_frontier(spark, sf_dir):
     out = skyline_witness(part, [("p_retailprice", "min"), ("p_size", "min")], "p_partkey")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+
+
+def test_witness_nan_dims_incomparable(spark):
+    # Spark orders NaN above every value, so under MIN an unguarded
+    # dominance join finds (0.5, 9) dominating (nan, 9.5); a NaN dim is
+    # incomparable like a NULL one, and its witness is NULL
+    nan = float("nan")
+    rows = [
+        (0, 1.0, 5.0),
+        (1, 2.0, 1.0),
+        (2, 3.0, 3.0),
+        (3, nan, 0.5),
+        (4, 0.5, 9.0),
+        (5, nan, 9.5),
+        (6, 1.0, nan),
+    ]
+    df = spark.createDataFrame(rows, "id long, x double, y double")
+    out = {
+        r.id: r.witness
+        for r in skyline_witness(df, [("x", "min"), ("y", "min")], "id").collect()
+    }
+    assert out == {0: None, 1: None, 2: 1, 3: None, 4: None, 5: None, 6: None}
 
 
 def test_witness_validates(pts):
