@@ -30,6 +30,8 @@ reference's tuple-at-a-time Python loop, we
 
 from __future__ import annotations
 
+import datetime
+
 import numpy as np
 
 __all__ = ["to_min_space", "find_skyline_mask", "skyline_of_array"]
@@ -41,13 +43,21 @@ MIN, MAX = "min", "max"
 def to_min_space(values, sense: str) -> np.ndarray:
     """Convert one dimension to float64 "smaller is better" space.
 
-    Handles numeric dtypes and datetime64 (converted to microseconds
-    since epoch, which stays exactly representable in float64 until
-    year ~2255). MAX dims are negated.
+    Handles numeric dtypes, datetime64 and ``datetime.date`` objects
+    (how Arrow hands a Spark DATE column to pandas), converted to
+    microseconds since epoch, which stays exactly representable in
+    float64 until year ~2255. A missing time (None/NaT) becomes NaN,
+    like a NULL number. MAX dims are negated.
     """
     arr = np.asarray(values)
+    if arr.dtype == object:
+        first = next((v for v in arr if v is not None), None)
+        if isinstance(first, datetime.date):
+            arr = arr.astype("datetime64[us]")
     if np.issubdtype(arr.dtype, np.datetime64):
-        arr = arr.astype("datetime64[us]").astype(np.int64)
+        nat = np.isnat(arr)
+        arr = arr.astype("datetime64[us]").astype(np.int64).astype(np.float64)
+        arr[nat] = np.nan
     arr = arr.astype(np.float64, copy=False)
     if sense == MAX:
         arr = -arr
@@ -142,6 +152,13 @@ def find_skyline_mask(cols, senses, prune_rounds: int = 8) -> np.ndarray:
     return mask
 
 
+def _frontier_rows(pdf, dim_cols, senses):
+    """The rows of the pandas frame ``pdf`` on its skyline over the
+    columns ``dim_cols``: the one kernel call of every Python pass of
+    the batch operator."""
+    return pdf[find_skyline_mask([pdf[c] for c in dim_cols], senses)]
+
+
 def _dominated_by(
     C: np.ndarray, K: np.ndarray, sC: np.ndarray, sK: np.ndarray
 ) -> np.ndarray:
@@ -181,21 +198,36 @@ def _dominated_by(
     # Equal-float-sum band: all-≤ + any coordinate difference ⇒ strict
     # somewhere ⇒ dominance. (All-≤ rows beyond the band would need a
     # larger sum, contradicting monotone summation, so none exist.)
+    # Only the pairs that are both all-≤ and inside the row's window reach
+    # the coordinate compare. Narrow windows (distinct sums: within a
+    # chunk each row's window is itself) are enumerated pair by pair;
+    # wide ones (a constant-sum input puts every row in one window) are
+    # cut out of ``le`` as one masked block: enumerating costs several
+    # int64 arrays per pair, the block a few boolean passes per cell,
+    # hence the factor 8.
     band = np.nonzero(any_le & ~dom)[0]
     if len(band):
-        hi = np.searchsorted(sK, sC[band], side="right")
-        cnt = hi - lo[band]
-        pos = np.nonzero(cnt > 0)[0]
-        if len(pos):
-            b_rows, b_cnt, b_lo = band[pos], cnt[pos], lo[band[pos]]
-            rows = np.repeat(b_rows, b_cnt)
-            ends = np.cumsum(b_cnt)
-            cols = np.arange(ends[-1]) - np.repeat(ends - b_cnt, b_cnt) + np.repeat(
-                b_lo, b_cnt
-            )
-            hit = le[rows, cols] & (K[cols] != C[rows]).any(axis=1)
-            if hit.any():
-                dom[rows[hit]] = True
+        b_lo = lo[band]
+        b_hi = np.searchsorted(sK, sC[band], side="right")
+        cnt = b_hi - b_lo
+        total = int(cnt.sum())
+        if total:
+            c0, c1 = int(b_lo.min()), int(b_hi.max())
+            if total * 8 < len(band) * (c1 - c0):
+                rows = np.repeat(band, cnt)
+                ends = np.cumsum(cnt)
+                cols = np.arange(total) - np.repeat(ends - cnt - b_lo, cnt)
+                keep = le[rows, cols]
+                rows, cols = rows[keep], cols[keep]
+            else:
+                span = np.arange(c0, c1)
+                win = le[band, c0:c1]  # a copy: masked in place below
+                win &= span >= b_lo[:, None]
+                win &= span < b_hi[:, None]
+                r, cols = np.nonzero(win)
+                rows, cols = band[r], cols + c0
+            hit = (K[cols] != C[rows]).any(axis=1)
+            dom[rows[hit]] = True
     return dom
 
 

@@ -25,7 +25,9 @@ schemes — MR_DIM, MR_GRID (with dominated-cell pruning), MR_ANGLE
   (src/jobs/batch_job.py:128-134);
 * the final merge is a fan-in tree of ``applyInPandas`` passes instead
   of the reference's single global reduce task — its documented
-  scalability wall (report p.3; SURVEY.md §4.3).
+  scalability wall (report p.3; SURVEY.md §4.3); only an input bounded
+  by ``_SINGLE_TASK_ROWS`` runs as one task, where the partitioned
+  plan's fixed costs would exceed the kernel work.
 
 Results are plain DataFrames preserving the full input row (the
 reference only returns the coordinate struct).
@@ -37,7 +39,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from pyspark_skyline_spark.kernel import _dominated_by, find_skyline_mask, to_min_space
+from pyspark_skyline_spark.kernel import _dominated_by, _frontier_rows, to_min_space
 from pyspark_skyline_spark.parser import parse_skyline_query
 
 __all__ = ["skyline", "skyline_sql", "skyline_antijoin", "skyline_layers", "skyline_witness", "representative_skyline", "windowed_skyline", "warm_up", "ALGORITHMS"]
@@ -57,6 +59,22 @@ _BROADCAST_CAP = 2_000_000
 #: estimated input size past which the map-side combiner runs and the
 #: merge probe runs at any d
 _LARGE_INPUT_BYTES = 4 * 1024**3
+#: comparable-row count up to which a query that ``skyline()`` plans on
+#: its own runs as one kernel call in one Python task. Measured on a
+#: 4-vCPU host, warm, wall seconds, partitioned plan -> one task:
+#: * all-frontier input (points on the positive orthant of a sphere: no
+#:   point dominates another, coordinate sums distinct): one task is
+#:   faster at every size measured, 16384 to 131072 rows at ``local[4]``
+#:   with d = 3 and 6 (d=6: 32768 rows 4.2 -> 2.9, 131072 rows
+#:   27.2 -> 25.0), 30000 and 65536 rows at ``local[2]`` with d = 3 to 10
+#:   (d=6, 65536 rows: 15.3 -> 10.1);
+#: * anticorrelated input, d = 6: the plans meet between 131072 rows
+#:   (local[4] 3.9 -> 4.0, local[2] 4.8 -> 4.1) and 262144 rows, where
+#:   the partitioned plan wins (local[4] 8.4 -> 9.6, local[2] 7.8 -> 9.4).
+#: One task used less CPU time in every run. The cap is a quarter of
+#: the smallest size where the plans met; hosts with more than four
+#: cores are unmeasured.
+_SINGLE_TASK_ROWS = 32768
 
 # Make our kernel module picklable by value so applyInPandas closures run
 # on executors that don't have the package on their PYTHONPATH.
@@ -138,19 +156,25 @@ def _dominates(q_cols, p_cols, senses):
     return no_worse & strictly_better
 
 
-def _compute_bounds(df: DataFrame, dims) -> dict[str, tuple[float, float]]:
-    """One aggregate pass for per-dimension (lo, hi) as doubles.
+def _bounds_and_count(df: DataFrame, dims) -> tuple[dict[str, tuple[float, float]], int]:
+    """One aggregate pass for per-dimension (lo, hi) as doubles, and the
+    row count, which the same pass reads for free.
 
     Data-driven replacement for the reference's fixed [0, 1e9] domain
     (src/config/configurations.py:17-18).
     """
-    aggs = []
+    aggs = [F.count(F.lit(1)).alias("__n")]
     for c, _ in dims:
         x = _numeric_expr(df, c)
         aggs.append(F.min(x).alias(f"__lo_{c}"))
         aggs.append(F.max(x).alias(f"__hi_{c}"))
     row = df.agg(*aggs).collect()[0]
-    return {c: (row[f"__lo_{c}"], row[f"__hi_{c}"]) for c, _ in dims}
+    return {c: (row[f"__lo_{c}"], row[f"__hi_{c}"]) for c, _ in dims}, row["__n"]
+
+
+def _compute_bounds(df: DataFrame, dims) -> dict[str, tuple[float, float]]:
+    """Per-dimension (lo, hi) as doubles (``_bounds_and_count``)."""
+    return _bounds_and_count(df, dims)[0]
 
 
 def _minspace_exprs(df, dims, bounds):
@@ -392,12 +416,28 @@ def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=()):
         n = df_keyed.sparkSession.sparkContext.defaultParallelism
 
     def fn(pdf):
-        mask = find_skyline_mask([pdf[c] for c in dim_cols], senses)
-        return pdf[mask]
+        return _frontier_rows(pdf, dim_cols, senses)
 
     return (
         df_keyed.repartition(n, *keys).groupBy(*keys).applyInPandas(fn, schema=schema)
     )
+
+
+def _single_task_skyline(df: DataFrame, dim_cols, senses) -> DataFrame:
+    """The whole skyline as ONE kernel call in one Python task, for an
+    input of at most ``_SINGLE_TASK_ROWS`` rows. ``repartition(1)``
+    rather than ``coalesce(1)``: the exchange carries at most that many
+    rows, while a coalesce would pull the whole upstream plan (e.g. a
+    scan with an expensive filter) into the one task."""
+
+    def fn(batches):
+        import pandas as pd
+
+        pdfs = list(batches)
+        if pdfs:
+            yield _frontier_rows(pd.concat(pdfs, ignore_index=True), dim_cols, senses)
+
+    return df.repartition(1).mapInPandas(fn, schema=df.schema)
 
 
 def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=()):
@@ -412,21 +452,18 @@ def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=()):
     schema = df_keyed.schema
 
     def fn(batches):
-        import numpy as np
+        import pandas as pd
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             if not by:
-                mask = find_skyline_mask([pdf[c] for c in dim_cols], senses)
-                yield pdf[mask]
+                yield _frontier_rows(pdf, dim_cols, senses)
                 continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            for gidx in pdf.groupby(list(by), dropna=False, sort=False).indices.values():
-                sub = pdf.iloc[gidx]
-                mask = find_skyline_mask([sub[c] for c in dim_cols], senses)
-                keep[gidx[mask]] = True
-            yield pdf[keep]
+            groups = pdf.groupby(list(by), dropna=False, sort=False).indices.values()
+            yield pd.concat(
+                [_frontier_rows(pdf.iloc[g], dim_cols, senses) for g in groups]
+            )
 
     return df_keyed.mapInPandas(fn, schema=schema)
 
@@ -557,9 +594,17 @@ def skyline(
         bounds pass
     by : optional group columns
 
-    Merge policy: one size-driven decision, read from ONE Catalyst size
-    estimate ``est`` of the input (``_estimated_bytes``; 0 when it
-    fails) and the dimension count ``d``:
+    Plan: when the caller leaves planning to ``skyline()`` (``algo=
+    "auto"``, no ``partitions``, ``by`` or ``bounds``) and the input has
+    at most ``_SINGLE_TASK_ROWS`` (32768) comparable rows, the whole
+    query is **one kernel call in one Python task**
+    (``_single_task_skyline``): no cell key, local pass, probe or merge.
+    The row count comes from the bounds aggregate, so reading it adds
+    no job. A named algorithm keeps the reference's partitioning scheme
+    at any size. Every other query is partitioned, keyed and reduced per
+    cell, then merged by one size-driven decision, read from ONE
+    Catalyst size estimate ``est`` of the input (``_estimated_bytes``;
+    0 when it fails) and the dimension count ``d``:
 
     * **combiner** — iff ``est > _LARGE_INPUT_BYTES`` (4 GiB), each
       Arrow batch is reduced to its frontier before the shuffle
@@ -588,13 +633,18 @@ def skyline(
     """
     dims = _normalize_dims(dims)
     d = len(dims)
+    self_planned = algo == "auto" and partitions is None and not by
     algo = _pick_algo(algo, d)
     if algo not in ("MR_DIM", "MR_DIM_Q", "MR_GRID", "MR_ANGLE"):
         raise ValueError(f"algo must be one of {ALGORITHMS}, got {algo!r}")
     df = _comparable(df, dims)
+    dim_cols = [c for c, _ in dims]
+    senses = [s for _, s in dims]
 
     if bounds is None:
-        bounds = _compute_bounds(df, dims)
+        bounds, n = _bounds_and_count(df, dims)
+        if self_planned and n <= _SINGLE_TASK_ROWS:
+            return _single_task_skyline(df, dim_cols, senses)
     vs = _minspace_exprs(df, dims, bounds)
 
     spark = df.sparkSession
@@ -624,8 +674,6 @@ def skyline(
                 F.col(_CELL).isNull() | F.col(_CELL).isin(survivors)
             )
 
-    dim_cols = [c for c, _ in dims]
-    senses = [s for _, s in dims]
     by = list(by or ())
 
     # Giant-cell guard (SURVEY.md §7.3): a hot or lone cell would funnel
@@ -898,6 +946,9 @@ def warm_up(
         ]
     )
     dims = [(c, "min") for c in cols]
+    # a named algorithm: the table is small enough for the single task,
+    # and it is the partitioned plan that needs warming
+    algo = _pick_algo(algo, d)
     n = 0
     for _ in range(max(1, int(passes))):
         n = skyline(df, dims, algo=algo).count()

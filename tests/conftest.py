@@ -45,10 +45,13 @@ def sf_dir():
 def merge_policy(spark, monkeypatch):
     """Context manager over ``skyline()``'s merge policy. Patches its
     module constants (and, with ``est=``, the size estimate) for the
-    block, and counts what ran: ``est`` size estimates read, ``probe``
+    block, and counts what ran: ``bounds`` bounds-and-count aggregates,
+    ``single`` single-task plans, ``est`` size estimates read, ``probe``
     counts of the cell-keyed local frontiers, ``combiner`` and
     ``broadcast`` passes, and ``local_pass`` kernel passes (more than
-    one per call means the tree fold ran)."""
+    one per call means the tree fold ran).
+    ``_SINGLE_TASK_ROWS=-1`` keeps every input, empty ones included, on
+    the partitioned plan."""
     import collections
     import contextlib
 
@@ -85,6 +88,8 @@ def merge_policy(spark, monkeypatch):
             m.setattr(S, "_estimated_bytes", estimate)
             m.setattr(frame, "count", count)
             for name, key in (
+                ("_bounds_and_count", "bounds"),
+                ("_single_task_skyline", "single"),
                 ("_map_side_prereduce", "combiner"),
                 ("_broadcast_final_filter", "broadcast"),
                 ("_local_skyline_pass", "local_pass"),

@@ -72,6 +72,16 @@ def test_datetime_dim():
     # min ts, min v: (2019,2.0) incomparable to others; (2020-06,0.5) vs (2020-01,1.0) incomparable
     mask = find_skyline_mask([ts, v], ["min", "min"])
     assert mask.tolist() == [True, True, True]
+    # a Spark DATE column reaches pandas as datetime.date objects
+    days = np.array([d.astype(object) for d in ts.astype("datetime64[D]")], dtype=object)
+    assert find_skyline_mask([days, v], ["min", "min"]).tolist() == [True, True, True]
+    assert find_skyline_mask([days, v], ["max", "min"]).tolist() == [False, True, False]
+    # a missing time (NULL DATE as None, NULL TIMESTAMP as NaT) compares
+    # like a NaN number, also in the first row, and dominates nothing
+    v0 = np.concatenate([[0.1], v])
+    for missing in (np.array([None, *days], dtype=object), np.concatenate([[np.datetime64("NaT")], ts])):
+        assert find_skyline_mask([missing, v0], ["min", "min"]).tolist() == [True] * 4
+        assert find_skyline_mask([missing, v0], ["max", "min"]).tolist() == [True, False, True, False]
 
 
 @given(
@@ -95,6 +105,49 @@ def test_matches_bruteforce(data, senses):
     got = find_skyline_mask(cols, list(senses))
     want = brute_force_mask(cols, list(senses))
     assert got.tolist() == want.tolist()
+
+
+@given(
+    parts=st.lists(
+        st.tuples(st.integers(0, 40), st.integers(0, 40), st.integers(0, 3)),
+        min_size=1,
+        max_size=150,
+    ),
+    d=st.sampled_from([2, 3, 6]),
+    senses=st.lists(st.sampled_from(["min", "max"]), min_size=6, max_size=6),
+)
+@settings(max_examples=150, deadline=None)
+def test_constant_sum_matches_bruteforce(parts, d, senses):
+    # a budget split: every row's coordinates sum to the same C, so all
+    # rows share one equal-sum window; a few rows get +1 in one
+    # coordinate (dominated by their split) and duplicates are likely
+    C = 100
+    rows = []
+    for a, b, bump in parts:
+        row = [a, b] + [0] * (d - 2)
+        row[d - 1] += C - sum(row)
+        if bump:
+            row[bump % d] += 1
+        rows.append(row)
+    arr = np.array(rows, dtype=float)
+    cols = [arr[:, i] for i in range(d)]
+    got = find_skyline_mask(cols, senses[:d])
+    assert got.tolist() == brute_force_mask(cols, senses[:d]).tolist()
+
+
+@pytest.mark.parametrize("rounds", [0, 8])
+@pytest.mark.parametrize("extra", [0, 20])
+def test_equal_float_sum_still_dominates(rounds, extra):
+    # the first two rows' sums round to the same float, yet the first
+    # dominates the second by 4e-17 in one coordinate; without pivot
+    # rounds only the equal-sum band check can find that. The `extra`
+    # rows are incomparable to everything and have distinct sums, so the
+    # band's windows turn narrow and its pair-by-pair branch runs (with
+    # none, the three rows share one window and the masked block runs)
+    arr = np.array([[0.1, 0.2, 0.3], [0.1, 0.2, 0.30000000000000004], [0.3, 0.2, 0.1]])
+    arr = np.vstack([arr] + [[[10.0 + k, -10.0 - 2 * k, 5.0]] for k in range(extra)])
+    mask = find_skyline_mask([arr[:, i] for i in range(3)], ["min"] * 3, prune_rounds=rounds)
+    assert mask.tolist() == [True, False, True] + [True] * extra
 
 
 @given(

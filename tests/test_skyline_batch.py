@@ -12,14 +12,17 @@ from pyspark_skyline_spark.operators import skyline as S
 
 ALGOS = ["MR_DIM", "MR_GRID", "MR_ANGLE"]
 
-# ``merge_policy`` settings that pin skyline()'s global merge: the tree
-# fold (no candidate count is in an empty broadcast range), or the
-# broadcast filter once the probe runs (every candidate count is past
-# the minimum). A frame built by createDataFrame from local rows
-# estimates as Long.MaxValue, so it probes and runs the combiner under
-# its real estimate; a small input with d <= 4 needs ``est=0`` to probe.
-PIN_TREE = {"_BROADCAST_MIN": S._BROADCAST_CAP}
-PIN_BROADCAST = {"_BROADCAST_MIN": -1}
+# ``merge_policy`` settings: PARTITIONED keeps a small input off the
+# single-task plan, so it reaches the partitioned machinery; the pins
+# then fix skyline()'s global merge: the tree fold (no candidate count
+# is in an empty broadcast range), or the broadcast filter once the
+# probe runs (every candidate count is past the minimum). A frame built
+# by createDataFrame from local rows estimates as Long.MaxValue, so it
+# probes and runs the combiner under its real estimate; a small input
+# with d <= 4 needs ``est=0`` to probe.
+PARTITIONED = {"_SINGLE_TASK_ROWS": -1}
+PIN_TREE = {**PARTITIONED, "_BROADCAST_MIN": S._BROADCAST_CAP}
+PIN_BROADCAST = {**PARTITIONED, "_BROADCAST_MIN": -1}
 
 
 def duck_skyline(parquet_path, cols, senses):
@@ -164,12 +167,12 @@ def test_grouped_grid_prune_census_cap(orders):
 def test_map_side_combine_equivalent(lineitem, merge_policy):
     # a size limit below every estimate turns the combiner on
     dims = [("l_extendedprice", "min"), ("l_quantity", "min")]
-    with merge_policy(_LARGE_INPUT_BYTES=-1) as ran:
+    with merge_policy(_LARGE_INPUT_BYTES=-1, **PARTITIONED) as ran:
         with_c = spark_skyline_set(lineitem, dims)
-    assert ran["combiner"] == 1
-    with merge_policy() as ran:
+    assert (ran["single"], ran["combiner"]) == (0, 1) and ran["local_pass"] > 0
+    with merge_policy(**PARTITIONED) as ran:
         without = spark_skyline_set(lineitem, dims)
-    assert ran["combiner"] == 0
+    assert (ran["single"], ran["combiner"]) == (0, 0) and ran["local_pass"] > 0
     assert with_c == without
 
 
@@ -358,9 +361,11 @@ def test_broadcast_merge_matches_tree_on_anticorrelated(spark, merge_policy):
         bcast = {tuple(r) for r in skyline(df, dims).collect()}
     # the policy with a tiny broadcast minimum must take the broadcast
     # path and agree
-    with merge_policy(_BROADCAST_MIN=8) as auto_ran:
+    with merge_policy(_BROADCAST_MIN=8, **PARTITIONED) as auto_ran:
         auto = {tuple(r) for r in skyline(df, dims).collect()}
     runs = (tree_ran, bcast_ran, auto_ran)
+    assert [ran["single"] for ran in runs] == [0, 0, 0]
+    assert [ran["probe"] for ran in runs] == [1, 1, 1]
     assert [ran["broadcast"] for ran in runs] == [0, 1, 1]
     # a frame from pandas estimates small: d = 5 probes, no combiner
     assert [ran["combiner"] for ran in runs] == [0, 0, 0]
@@ -377,13 +382,14 @@ def test_broadcast_merge_cap_falls_back_to_tree(spark, merge_policy):
     df = spark.createDataFrame(rows, "x double, y double")
     dims = [("x", "min"), ("y", "min")]
     with merge_policy(
-        _LARGE_INPUT_BYTES=-1, _BROADCAST_MIN=2, _BROADCAST_CAP=5
+        _LARGE_INPUT_BYTES=-1, _BROADCAST_MIN=2, _BROADCAST_CAP=5, **PARTITIONED
     ) as ran:
         capped = {tuple(r) for r in skyline(df, dims).collect()}
-    assert (ran["probe"], ran["broadcast"]) == (1, 0) and ran["local_pass"] > 1
+    assert (ran["single"], ran["probe"], ran["broadcast"]) == (0, 1, 0)
+    assert ran["local_pass"] > 1
     with merge_policy(**PIN_TREE) as ran:
         tree = {tuple(r) for r in skyline(df, dims).collect()}
-    assert ran["broadcast"] == 0 and ran["local_pass"] > 1
+    assert (ran["single"], ran["broadcast"]) == (0, 0) and ran["local_pass"] > 1
     assert capped == tree
 
 
@@ -428,9 +434,9 @@ def test_merge_policy_paths(spark, tmp_path, merge_policy, d, est, consts, group
     spark.createDataFrame(pdf).write.parquet(str(tmp_path / "pts"))
     df = spark.read.parquet(str(tmp_path / "pts"))
     dims = [(f"x{i}", "min") for i in range(d)]
-    with merge_policy(est=est, **consts) as ran:
+    with merge_policy(est=est, **PARTITIONED, **consts) as ran:
         got = sorted(map(tuple, skyline(df, dims, by=["g"] if grouped else None).collect()))
-    assert ran["est"] == 1
+    assert (ran["single"], ran["est"]) == (0, 1)
     assert (ran["probe"], ran["combiner"], ran["broadcast"]) == want
     assert (ran["local_pass"] > 1) == (not want[2])
     if grouped:
@@ -458,6 +464,7 @@ def test_broadcast_merge_handles_timestamp_dims(spark, sf_dir, merge_policy):
         bcast = {
             (r.value, r.ts) for r in skyline(df, dims).select("value", "ts").collect()
         }
+    assert (tree_ran["single"], bcast_ran["single"]) == (0, 0)
     assert (tree_ran["broadcast"], bcast_ran["broadcast"]) == (0, 1)
     assert bcast_ran["combiner"] == 0
     assert tree == bcast
@@ -497,17 +504,22 @@ def test_broadcast_merge_property_vs_antijoin(spark, merge_policy):
         check()
     # every example ran the combiner, then the probe and the broadcast
     # filter
+    assert ran["single"] == 0
     assert ran["combiner"] == ran["probe"] == ran["broadcast"] == ran["est"] > 0
 
 
-def test_warm_up_runs_full_pipeline_and_is_deterministic(spark):
+def test_warm_up_runs_full_pipeline_and_is_deterministic(spark, merge_policy):
     """warm_up must execute the REAL skyline path (a frontier comes
     back, deterministic for a given d/rows — it's xxhash64-mixed
-    synthetic data) and reject nonsense d. Timing effects are graded
-    by the sweep protocol, not here."""
+    synthetic data) and reject nonsense d. Its table is far below
+    ``_SINGLE_TASK_ROWS``, yet it must warm the partitioned plan that
+    large queries run. Timing effects are graded by the sweep protocol,
+    not here."""
     from pyspark_skyline_spark.operators.skyline import warm_up
 
-    a = warm_up(spark, 3, rows=2000, passes=1)
+    with merge_policy() as ran:
+        a = warm_up(spark, 3, rows=2000, passes=1)
+    assert ran["single"] == 0 and ran["local_pass"] > 0
     b = warm_up(spark, 3, rows=2000, passes=1)
     assert a == b > 0
     with pytest.raises(ValueError, match="d must be"):
@@ -540,7 +552,7 @@ def test_skyline_excludes_nan_dims(spark):
         assert not any(math.isnan(r.x) or math.isnan(r.y) for r in layers)
 
 
-def test_local_pass_fold_matches_one_shot_group_kernel(spark):
+def test_local_pass_fold_matches_one_shot_group_kernel(spark, merge_policy):
     """Round 14: _local_skyline_pass is a mapInPandas incremental fold
     (per-batch, per-group) instead of one applyInPandas call per group.
     Force groups to SPAN multiple Arrow batches (tiny
@@ -568,10 +580,111 @@ def test_local_pass_fold_matches_one_shot_group_kernel(spark):
         key = lambda r: (r.g, r.x, r.y)  # noqa: E731
         assert sorted(map(key, got)) == sorted(map(key, want))
         # ungrouped too (salted cells: many sub-groups per partition)
-        got_u = skyline(df, dims).collect()
+        with merge_policy(**PARTITIONED) as ran:
+            got_u = skyline(df, dims).collect()
+        assert ran["single"] == 0 and ran["local_pass"] > 0
         want_u = skyline_antijoin(df, dims).collect()
         assert sorted((r.x, r.y) for r in got_u) == sorted(
             (r.x, r.y) for r in want_u
         )
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def test_single_task_gate_differential(spark, merge_policy):
+    """The single-task plan runs iff skyline() plans on its own and the
+    input has at most ``_SINGLE_TASK_ROWS`` comparable rows (63, 64 and
+    65 against a cap of 64; NULL and NaN rows do not count). It returns
+    the same multiset as the partitioned plan and the anti-join, over
+    exact duplicates, mixed senses and date/timestamp dimensions. An
+    explicit algo, ``partitions``, ``by`` or ``bounds`` stays
+    partitioned, and the row count costs no job beyond the bounds
+    aggregate."""
+    import datetime as dt
+    import random
+
+    from pyspark_skyline_spark.operators.skyline import skyline_antijoin
+
+    schema = "id long, g int, x double, y long, day date, ts timestamp"
+    dims = [("x", "min"), ("y", "max"), ("day", "min"), ("ts", "max")]
+    t0, d0 = dt.datetime(2024, 1, 1), dt.date(2024, 1, 1)
+    rng = random.Random(17)
+
+    def frame(n):
+        rows = [
+            (
+                i,
+                0,
+                float(rng.randrange(6)),
+                rng.randrange(6),
+                d0 + dt.timedelta(days=rng.randrange(6)),
+                t0 + dt.timedelta(minutes=rng.randrange(6)),
+            )
+            for i in range(n - 4)
+        ]
+        rows += rows[:4]  # exact duplicates, id included
+        rows += [  # not comparable: excluded, and not counted
+            (900, 0, None, 1, d0, t0),
+            (901, 0, float("nan"), 1, d0, t0),
+            (902, 0, 0.0, None, d0, t0),
+            (903, 0, 0.0, 1, None, t0),
+            (904, 0, 0.0, 1, d0, None),
+        ]
+        return spark.createDataFrame(rows, schema)
+
+    def bag(df):
+        return sorted(map(tuple, df.collect()))
+
+    for n in (63, 64, 65):
+        df = frame(n)
+        with merge_policy(_SINGLE_TASK_ROWS=64) as ran:
+            auto = bag(skyline(df, dims))
+        assert ran["bounds"] == 1
+        assert ran["single"] == int(n <= 64), n
+        assert (ran["local_pass"] == 0) == (n <= 64), n
+        with merge_policy(**PARTITIONED) as ran:
+            part = bag(skyline(df, dims))
+        assert ran["single"] == 0 and ran["local_pass"] > 0
+        assert auto == part == bag(skyline_antijoin(df, dims)), n
+        assert len(auto) >= 4 and not any(r[0] >= 900 for r in auto)
+
+    # under the cap, only a query skyline() plans on its own takes it
+    df = frame(63)
+    want = bag(skyline_antijoin(df, dims))
+    bounds = S._compute_bounds(S._comparable(df, dims), dims)
+    for kw in (
+        {"algo": "MR_ANGLE"},
+        {"algo": "MR_DIM"},
+        {"partitions": 4},
+        {"by": ["g"]},  # one group: the grouped frontier is the frontier
+        {"bounds": bounds},
+    ):
+        with merge_policy(_SINGLE_TASK_ROWS=64) as ran:
+            got = bag(skyline(df, dims, **kw))
+        assert ran["single"] == 0 and ran["local_pass"] > 0, kw
+        assert got == want, kw
+
+    # empty input, and an input whose rows are all incomparable
+    for empty in (spark.createDataFrame([], schema), frame(4).filter("id >= 900")):
+        with merge_policy(_SINGLE_TASK_ROWS=64) as ran:
+            assert skyline(empty, dims).count() == 0
+        assert (ran["single"], ran["local_pass"]) == (1, 0)
+
+    # one aggregate reads bounds and count: building the single-task
+    # query runs the jobs of a plain min/max aggregate and nothing more
+    sc = spark.sparkContext
+
+    def jobs(fn, group):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    comparable = S._comparable(df, dims)
+    plain = jobs(lambda: comparable.agg(F.min("x"), F.max("x")).collect(), "gate-agg")
+    with merge_policy(_SINGLE_TASK_ROWS=64) as ran:
+        built = jobs(lambda: skyline(df, dims), "gate-build")
+    assert ran["single"] == 1
+    assert built == plain >= 1

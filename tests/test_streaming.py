@@ -114,12 +114,14 @@ def _row_counter(df):
 
 
 @pytest.mark.parametrize("first", [63, 64, 65])
-def test_update_gate_differential(spark, monkeypatch, first):
+def test_update_gate_differential(spark, monkeypatch, merge_policy, first):
     """Around the probe's gate (lowered to 64 rows), raw batches of
     cap-1, cap and cap+1 rows reach either the anti-join reduce or the
     partitioned operator; after every step the frontier must equal
     skyline() of the prefix, duplicates included, under skyline()'s
-    NULL/NaN semantics."""
+    NULL/NaN semantics. The stream's skyline() calls are pinned to the
+    partitioned plan (these batches are far below the single-task cap),
+    while the reference skyline() of the prefix runs as one task."""
     cap = 64
     monkeypatch.setattr(skyline_stream, "_ANTIJOIN_MAX", cap)
     kernel_inputs = []
@@ -139,8 +141,11 @@ def test_update_gate_differential(spark, monkeypatch, first):
         prefix += rows
         batch = spark.createDataFrame(rows, GATE_SCHEMA)
         kernel_inputs.clear()
-        got = state.update(batch)
+        with merge_policy(_SINGLE_TASK_ROWS=-1) as ran:
+            got = state.update(batch)
         # the raw batch goes to the partitioned operator iff it is past the cap
         assert any(df is batch for df in kernel_inputs) == (n > cap), n
+        if n > cap:
+            assert ran["local_pass"] > 0, n
         want = skyline(spark.createDataFrame(prefix, GATE_SCHEMA), GATE_DIMS)
         assert _row_counter(got) == _row_counter(want), n
