@@ -25,9 +25,11 @@ schemes — MR_DIM, MR_GRID (with dominated-cell pruning), MR_ANGLE
   (src/jobs/batch_job.py:128-134);
 * the final merge is a fan-in tree of ``applyInPandas`` passes instead
   of the reference's single global reduce task — its documented
-  scalability wall (report p.3; SURVEY.md §4.3); only an input bounded
-  by ``_SINGLE_TASK_ROWS`` runs as one task, where the partitioned
-  plan's fixed costs would exceed the kernel work.
+  scalability wall (report p.3; SURVEY.md §4.3). Small inputs, where
+  the partitioned plan's fixed costs would exceed the kernel work, skip
+  it: up to ``_ANTIJOIN_MAX`` rows run as one codegen'd NOT-EXISTS
+  anti-join, up to ``_SINGLE_TASK_ROWS`` as one kernel task. The batch
+  operator and the streaming state share this one size policy.
 
 Results are plain DataFrames preserving the full input row (the
 reference only returns the coordinate struct).
@@ -75,6 +77,20 @@ _LARGE_INPUT_BYTES = 4 * 1024**3
 #: the smallest size where the plans met; hosts with more than four
 #: cores are unmeasured.
 _SINGLE_TASK_ROWS = 32768
+#: comparable-row count up to which a query that ``skyline()`` plans on
+#: its own runs as ONE codegen'd NOT-EXISTS broadcast-NL anti-join
+#: (``_antijoin``), with no Python task at all: below this size a
+#: Python task costs more than the join. Measured on a 4-vCPU host,
+#: ``local[2]``, warm, median process-tree CPU seconds of three runs
+#: per shape, anti-join -> one task:
+#: * uniform input, d = 3 and 6: the anti-join used no more CPU at
+#:   2048, 4096 and 8192 rows (d=6, 8192 rows: 0.89 -> 0.90);
+#: * all-frontier input (sphere, as above): the anti-join used less or
+#:   equal CPU up to 4096 rows (d=3 0.78 -> 0.78, d=6 0.94 -> 1.09),
+#:   but MORE at 8192 (d=3 1.59 -> 0.99, d=6 1.83 -> 1.36): its
+#:   O(n²) comparisons have no early exit when nothing is dominated.
+#: So the cap is 4096, the largest size where one task did not win.
+_ANTIJOIN_MAX = 4096
 
 # Make our kernel module picklable by value so applyInPandas closures run
 # on executors that don't have the package on their PYTHONPATH.
@@ -595,13 +611,21 @@ def skyline(
     by : optional group columns
 
     Plan: when the caller leaves planning to ``skyline()`` (``algo=
-    "auto"``, no ``partitions``, ``by`` or ``bounds``) and the input has
-    at most ``_SINGLE_TASK_ROWS`` (32768) comparable rows, the whole
-    query is **one kernel call in one Python task**
-    (``_single_task_skyline``): no cell key, local pass, probe or merge.
-    The row count comes from the bounds aggregate, so reading it adds
-    no job. A named algorithm keeps the reference's partitioning scheme
-    at any size. Every other query is partitioned, keyed and reduced per
+    "auto"``, no ``partitions``, ``by`` or ``bounds``), the comparable
+    row count ``n`` picks one of three tiers:
+
+    * **anti-join** — ``n <= _ANTIJOIN_MAX`` (4096): one codegen'd
+      NOT-EXISTS broadcast-NL join (``_antijoin``) over the input
+      coalesced to at most ``defaultParallelism`` partitions; no Python
+      task. Every micro-batch of a steady stream folds here.
+    * **single task** — ``n <= _SINGLE_TASK_ROWS`` (32768): one kernel
+      call in one Python task (``_single_task_skyline``).
+    * **partitioned** — otherwise, as below.
+
+    Neither small tier has a cell key, local pass, probe or merge. The
+    row count comes from the bounds aggregate, so reading it adds no
+    job. A named algorithm keeps the reference's partitioning scheme at
+    any size. Every other query is partitioned, keyed and reduced per
     cell, then merged by one size-driven decision, read from ONE
     Catalyst size estimate ``est`` of the input (``_estimated_bytes``;
     0 when it fails) and the dimension count ``d``:
@@ -643,6 +667,14 @@ def skyline(
 
     if bounds is None:
         bounds, n = _bounds_and_count(df, dims)
+        if self_planned and n <= _ANTIJOIN_MAX:
+            # the join's output keeps its streamed side's partitions, so
+            # coalesce to k first: each task compares its rows with all
+            # n, so its work is (n/k)·n, and k gives the cap
+            # defaultParallelism tasks and no task more work than that
+            par = df.sparkSession.sparkContext.defaultParallelism
+            k = max(1, math.ceil(par * (n / _ANTIJOIN_MAX) ** 2))
+            return _antijoin(df.coalesce(k), dims)
         if self_planned and n <= _SINGLE_TASK_ROWS:
             return _single_task_skyline(df, dim_cols, senses)
     vs = _minspace_exprs(df, dims, bounds)
@@ -740,29 +772,43 @@ def skyline(
     return out.drop(_CELL)
 
 
+def _antijoin(df: DataFrame, dims) -> DataFrame:
+    """Skyline of an already-comparable ``df`` (``_comparable``) as a
+    dominance ANTI-join: keep row p iff no row q is at least as good in
+    every dimension and strictly better in one. ``dims`` normalized.
+
+    The q side is ``df`` projected to its dimensions under fresh names,
+    so the broadcast carries only those and the condition needs no
+    ``alias``: an aliased self-join of a memory-sink table does not
+    resolve its second alias."""
+    q_cols = [f"__sky_q{i}" for i in range(len(dims))]
+    q = df.select(*[F.col(f"`{c}`").alias(n) for (c, _), n in zip(dims, q_cols)])
+    dominated = _dominates(
+        [F.col(n) for n in q_cols],
+        [F.col(f"`{c}`") for c, _ in dims],
+        [s for _, s in dims],
+    )
+    return df.join(q, dominated, "left_anti")
+
+
 def skyline_antijoin(df: DataFrame, dims) -> DataFrame:
     """Skyline as a pure-Catalyst dominance ANTI-join — the declarative
     ``NOT EXISTS`` formulation (SURVEY.md §2.3): keep row p iff no row q
     is at-least-as-good in every dimension and strictly better in one.
 
     This is a theta join, so Spark executes it as a broadcast
-    nested-loop — O(n²) work with one side broadcast. It is the right
-    tool ONLY for small inputs (a pre-filtered candidate set, a local
-    debug check, the oracle cross-check); the partitioned kernel path
-    (``skyline``) is the at-scale operator. Provided because it is
-    whole-stage-codegen'd, zero-Python, and exactly mirrors the SQL
-    oracle — a differential anchor for the kernel path. NULL and NaN
-    dims are excluded as in ``skyline`` (``_comparable``).
+    nested-loop — O(n²) work with one side broadcast, whole-stage
+    codegen'd and free of Python. ``skyline()`` takes this form on its
+    own for an input of at most ``_ANTIJOIN_MAX`` comparable rows, and
+    the streaming state folds its small pools through that tier. Called
+    directly it runs at any size, so use it on small inputs (a
+    pre-filtered candidate set, a local debug check); it exactly mirrors
+    the SQL oracle, which makes it a differential anchor for the kernel
+    paths. NULL and NaN dims are excluded as in ``skyline``
+    (``_comparable``).
     """
     dims = _normalize_dims(dims)
-    df = _comparable(df, dims)
-    p, q = df.alias("p"), df.alias("q")
-    dominated = _dominates(
-        [F.col(f"q.`{c}`") for c, _ in dims],
-        [F.col(f"p.`{c}`") for c, _ in dims],
-        [s for _, s in dims],
-    )
-    return p.join(q, dominated, "left_anti")
+    return _antijoin(_comparable(df, dims), dims)
 
 
 def skyline_witness(

@@ -6,12 +6,11 @@ stage bus (reference src/jobs/stream_job.py:87-206, SURVEY.md §3.2).
 This engine uses a single ``foreachBatch`` query with a driver-held
 candidate-skyline state table instead:
 
-* per micro-batch: one bounded probe sizes the batch. A batch of at
-  most ``_ANTIJOIN_MAX`` rows (every batch of a steady stream) is
-  unioned with the current candidate set as it is, and the pool is
-  reduced by one codegen'd NOT-EXISTS anti-join; a larger batch is
-  first reduced with the partitioned batch skyline operator. Either
-  way the result is checkpointed once.
+* per micro-batch: the batch, checkpointed once, is unioned with the
+  current candidate set and the pool is reduced by ONE ``skyline()``
+  call. Its size policy picks the plan: a steady stream's pools (a
+  batch plus the frontier) take the codegen'd NOT-EXISTS anti-join
+  tier, a larger pool the single kernel task or the partitioned plan.
 * correctness rests on the same monotonicity the reference exploits
   (SURVEY.md §3.2): under append-only input a point, once dominated,
   can never re-enter the skyline — so the candidate set IS the running
@@ -22,10 +21,12 @@ candidate-skyline state table instead:
   triggers reproduce the continuous job (stream_job.py:147).
 
 State is bounded in rows by the frontier size, and in partitions by
-``defaultParallelism`` (the anti-join reduce coalesces its pool), so a
-long-running stream neither grows its per-batch task count nor writes
-more part files per published version. ``localCheckpoint`` breaks
-lineage so plan depth stays O(1) in the number of batches.
+``defaultParallelism`` (``skyline()``'s anti-join tier coalesces its
+input, the single task writes one partition), so a long-running stream
+neither grows its per-batch task count nor writes more part files per
+published version. ``localCheckpoint`` breaks lineage so plan depth
+stays O(1) in the number of batches. With ``by``, every fold is a
+grouped ``skyline()``: dominance never crosses groups.
 
 Restart/recovery: pass ``state_dir`` (plus ``checkpointLocation`` on
 the query) to make the frontier DURABLE. Each update writes the new
@@ -40,36 +41,20 @@ foreachBatch restart can produce still yields the exactly-once result.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 
-from pyspark_skyline_spark.operators.skyline import (
-    _normalize_dims,
-    skyline,
-    skyline_antijoin,
-)
+from pyspark_skyline_spark.operators.skyline import _normalize_dims, skyline
 from pyspark_skyline_spark.streaming import fsio
 
 __all__ = ["SkylineStreamState", "run_skyline_stream"]
 
 _MARKER = "_LATEST"
 
-#: candidate-pool size under which the update runs as ONE codegen'd
-#: NOT-EXISTS broadcast-NL join instead of the partitioned kernel
-#: machinery (bounds pass + salted cells + tree merge — ~4 jobs and a
-#: Python stage for a pool that is usually a batch plus a few hundred
-#: frontier rows). The worst pool the gate admits, 8192 rows that are
-#: all frontier (d = 3), reduces in about 0.5 s wall and 1.2 JVM
-#: CPU-s on local[2] of a 4-vCPU VM in its 2 coalesced partitions
-#: (uncoalesced in 20 partitions: 0.57 s and 1.45 CPU-s); past the cap
-#: the partitioned operator is the right tool.
-_ANTIJOIN_MAX = 8192
-
-
 class SkylineStreamState:
     """Driver-held running-skyline state; one instance per streaming
-    query. ``update(batch)`` returns the new running skyline.
+    query. ``update(batch)`` returns the new running skyline, folded
+    by one ``skyline(pool, dims, algo, **skyline_kwargs)`` call, so the
+    keyword arguments (``by`` included) mean what they mean there.
 
     With ``state_dir`` the frontier also persists across processes:
     versioned parquet directories plus a marker file naming the last
@@ -90,9 +75,6 @@ class SkylineStreamState:
         spark: SparkSession | None = None,
         **skyline_kwargs,
     ):
-        if skyline_kwargs.get("by"):
-            # the anti-join reduce would compare rows across groups
-            raise ValueError("grouped (by=) skylines are not supported on a stream")
         self.dims = _normalize_dims(dims)
         self.algo = algo
         self.kwargs = skyline_kwargs
@@ -150,50 +132,24 @@ class SkylineStreamState:
             )
         self._version = nxt
 
-    def _reduce_pool(self, cand: DataFrame) -> DataFrame:
-        """Reduce a MATERIALIZED (checkpointed) candidate pool to its
-        skyline: a single codegen'd NOT-EXISTS anti-join when the pool
-        is small (every stream pool but the rare huge raw batch), the
-        partitioned kernel operator past ``_ANTIJOIN_MAX``. The two
-        forms are semantically identical (differential-tested), NULL/NaN
-        exclusion included.
-
-        The anti-join's output keeps its streamed side's partitions, so
-        the pool is coalesced first to k partitions that do not depend on
-        how many batches ran. Each task compares its rows with the whole
-        pool, so a task's work is (n/k)·n; k gives the cap
-        ``defaultParallelism`` tasks and no task more work than that."""
-        n = cand.count()
-        if n > _ANTIJOIN_MAX:
-            return skyline(cand, self.dims, algo=self.algo, **self.kwargs)
-        par = cand.sparkSession.sparkContext.defaultParallelism
-        k = max(1, math.ceil(par * (n / _ANTIJOIN_MAX) ** 2))
-        return skyline_antijoin(cand.coalesce(k), self.dims)
-
     def update(self, batch_df: DataFrame) -> DataFrame | None:
         """Fold a micro-batch into the running skyline; returns it
         (``None`` while every batch so far was empty).
 
-        One bounded probe sizes the batch: an empty batch is a no-op;
-        one of at most ``_ANTIJOIN_MAX`` rows is unioned with the
-        frontier as it is and the pool reduced in one count-gated pass
-        (``_reduce_pool``); only a larger batch is first reduced with
-        the partitioned operator. The probe reads at most
-        ``_ANTIJOIN_MAX + 1`` rows, so a huge batch costs it what an
-        ``isEmpty`` would."""
-        n = batch_df.limit(_ANTIJOIN_MAX + 1).count()
-        if n == 0:
+        The batch is checkpointed once, eagerly: foreachBatch re-runs
+        its plan (a source scan, or a stateful stage) per action, and it
+        is read three times — by the empty-batch count (an empty batch is
+        a no-op), by ``skyline()``'s bounds-and-count aggregate and by
+        the plan that count picks. The pool, batch ∪ frontier, is then
+        two materialized inputs, reduced by one ``skyline()`` call."""
+        batch = batch_df.localCheckpoint(eager=True)
+        if batch.count() == 0:
             return self.current
-        if n <= _ANTIJOIN_MAX:
-            cand = batch_df if self.current is None else batch_df.unionByName(self.current)
-            reduced = self._reduce_pool(cand.localCheckpoint(eager=True))
-        else:
-            reduced = skyline(batch_df, self.dims, algo=self.algo, **self.kwargs)
-            if self.current is not None:
-                cand = reduced.unionByName(self.current).localCheckpoint(eager=True)
-                reduced = self._reduce_pool(cand)
+        pool = batch if self.current is None else batch.unionByName(self.current)
         # materialize & cut lineage: state must not grow a plan per batch
-        self.current = reduced.localCheckpoint(eager=True)
+        self.current = skyline(
+            pool, self.dims, algo=self.algo, **self.kwargs
+        ).localCheckpoint(eager=True)
         if self.state_dir:
             self._publish(self.current)
         return self.current

@@ -13,9 +13,9 @@ module is the single-pipeline Spark-native equivalent:
 * stage 2 = the ``foreachBatch`` global merge: each micro-batch of
   emitted frontiers is folded into the running global frontier
   (``SkylineStreamState``) — the reference's complete-mode stage 2,
-  with the single-task ``collect_list`` reduce replaced by the
-  state's count-gated anti-join (or the engine's partitioned operator
-  for huge pools).
+  with the single-task ``collect_list`` reduce replaced by one
+  ``skyline()`` call per micro-batch, whose size policy runs the small
+  pools of a steady stream as one codegen'd NOT-EXISTS anti-join.
 
 Correctness rests on the same monotonicity argument the reference
 exploits (SURVEY.md §3.2): under append-only input a dominated point
@@ -64,19 +64,12 @@ def run_two_stage_skyline_stream(
     bounds pass (see ``stateful_cell_skyline``).
     """
     cells = stateful_cell_skyline(stream_df, dims, bounds, partitions)
-    # the stage-2 fallback reduce can reuse the caller's bounds: every
-    # emission is an input row, so the stage-1 domain contains them
-    skyline_kwargs.setdefault("bounds", bounds)
     state = SkylineStreamState(dims, algo, **skyline_kwargs)
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        # materialize the emissions ONCE: foreachBatch re-executes the
-        # batch plan per ACTION, so the update's size probe and pool
-        # checkpoint would each re-run the stage-1 stateful stage. The
-        # emissions are frontier-sized by construction — cheap to
-        # checkpoint — and the update reduces them in one count-gated
-        # pass.
-        state.update(batch_df.drop(_CELL).localCheckpoint(eager=True))
+        # the update checkpoints the emissions once, so the stage-1
+        # stateful stage runs once per micro-batch
+        state.update(batch_df.drop(_CELL))
 
     writer = (
         cells.writeStream.foreachBatch(merge)

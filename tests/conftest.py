@@ -46,12 +46,14 @@ def merge_policy(spark, monkeypatch):
     """Context manager over ``skyline()``'s merge policy. Patches its
     module constants (and, with ``est=``, the size estimate) for the
     block, and counts what ran: ``bounds`` bounds-and-count aggregates,
+    ``antijoin`` anti-join plans (``skyline_antijoin`` calls included),
     ``single`` single-task plans, ``est`` size estimates read, ``probe``
     counts of the cell-keyed local frontiers, ``combiner`` and
     ``broadcast`` passes, and ``local_pass`` kernel passes (more than
     one per call means the tree fold ran).
-    ``_SINGLE_TASK_ROWS=-1`` keeps every input, empty ones included, on
-    the partitioned plan."""
+    ``_ANTIJOIN_MAX=-1`` keeps every input, empty ones included, off the
+    anti-join; with ``_SINGLE_TASK_ROWS=-1`` too, on the partitioned
+    plan."""
     import collections
     import contextlib
 
@@ -89,6 +91,7 @@ def merge_policy(spark, monkeypatch):
             m.setattr(frame, "count", count)
             for name, key in (
                 ("_bounds_and_count", "bounds"),
+                ("_antijoin", "antijoin"),
                 ("_single_task_skyline", "single"),
                 ("_map_side_prereduce", "combiner"),
                 ("_broadcast_final_filter", "broadcast"),

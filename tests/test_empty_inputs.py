@@ -36,14 +36,14 @@ def test_skyline_family_empty(spark, empty_pts, merge_policy):
     # the combiner and the broadcast filter on zero candidates: a frame
     # from local rows estimates as Long.MaxValue, and a count of 0 is
     # past a minimum of -1
-    with merge_policy(_BROADCAST_MIN=-1, _SINGLE_TASK_ROWS=-1) as ran:
+    with merge_policy(_BROADCAST_MIN=-1, _ANTIJOIN_MAX=-1, _SINGLE_TASK_ROWS=-1) as ran:
         assert skyline(empty_pts, dims).count() == 0
-    assert ran["single"] == 0
+    assert (ran["antijoin"], ran["single"]) == (0, 0)
     assert ran["combiner"] == ran["probe"] == ran["broadcast"] == 1
-    # and the single task on zero rows
+    # and the anti-join, the smallest tier, on zero rows
     with merge_policy() as ran:
         assert skyline(empty_pts, dims).count() == 0
-    assert (ran["single"], ran["local_pass"]) == (1, 0)
+    assert (ran["antijoin"], ran["single"], ran["local_pass"]) == (1, 0, 0)
     assert skyline_layers(empty_pts, dims, n_layers=2).count() == 0
     assert k_skyband(empty_pts, dims, k=2).count() == 0
     assert skyline(empty_pts, dims, by=["x"]).count() == 0

@@ -13,14 +13,16 @@ from pyspark_skyline_spark.operators import skyline as S
 ALGOS = ["MR_DIM", "MR_GRID", "MR_ANGLE"]
 
 # ``merge_policy`` settings: PARTITIONED keeps a small input off the
-# single-task plan, so it reaches the partitioned machinery; the pins
+# anti-join and single-task plans, so it reaches the partitioned
+# machinery (and a differential against ``skyline_antijoin`` does not
+# compare the anti-join with itself); the pins
 # then fix skyline()'s global merge: the tree fold (no candidate count
 # is in an empty broadcast range), or the broadcast filter once the
 # probe runs (every candidate count is past the minimum). A frame built
 # by createDataFrame from local rows estimates as Long.MaxValue, so it
 # probes and runs the combiner under its real estimate; a small input
 # with d <= 4 needs ``est=0`` to probe.
-PARTITIONED = {"_SINGLE_TASK_ROWS": -1}
+PARTITIONED = {"_ANTIJOIN_MAX": -1, "_SINGLE_TASK_ROWS": -1}
 PIN_TREE = {**PARTITIONED, "_BROADCAST_MIN": S._BROADCAST_CAP}
 PIN_BROADCAST = {**PARTITIONED, "_BROADCAST_MIN": -1}
 
@@ -526,10 +528,12 @@ def test_warm_up_runs_full_pipeline_and_is_deterministic(spark, merge_policy):
         warm_up(spark, 0)
 
 
-def test_skyline_excludes_nan_dims(spark):
+def test_skyline_excludes_nan_dims(spark, merge_policy):
     # NaN rows are incomparable under IEEE comparisons (the kernel would
     # keep all of them) and engines disagree on NaN ordering — so NaN
-    # dims are excluded exactly like NULLs, by every skyline operator
+    # dims are excluded exactly like NULLs, by every skyline operator.
+    # skyline() runs these few rows as its anti-join tier, and once more
+    # pinned to the kernel (the single task).
     from pyspark_skyline_spark.operators.skyline import skyline_antijoin, skyline_layers
 
     nan = float("nan")
@@ -545,7 +549,10 @@ def test_skyline_excludes_nan_dims(spark):
     dims = [("x", "min"), ("y", "min")]
     for rows, want in cases:
         df = spark.createDataFrame(rows, "x double, y double")
-        assert {(r.x, r.y) for r in skyline(df, dims).collect()} == want
+        for consts, path in (({}, "antijoin"), ({"_ANTIJOIN_MAX": -1}, "single")):
+            with merge_policy(**consts) as ran:
+                assert {(r.x, r.y) for r in skyline(df, dims).collect()} == want
+            assert ran[path] == 1, path
         assert {(r.x, r.y) for r in skyline_antijoin(df, dims).collect()} == want
         layers = skyline_layers(df, dims, n_layers=3).collect()
         assert {(r.x, r.y) for r in layers if r.layer == 1} == want
@@ -592,19 +599,21 @@ def test_local_pass_fold_matches_one_shot_group_kernel(spark, merge_policy):
 
 
 def test_single_task_gate_differential(spark, merge_policy):
-    """The single-task plan runs iff skyline() plans on its own and the
-    input has at most ``_SINGLE_TASK_ROWS`` comparable rows (63, 64 and
-    65 against a cap of 64; NULL and NaN rows do not count). It returns
-    the same multiset as the partitioned plan and the anti-join, over
-    exact duplicates, mixed senses and date/timestamp dimensions. An
-    explicit algo, ``partitions``, ``by`` or ``bounds`` stays
-    partitioned, and the row count costs no job beyond the bounds
-    aggregate."""
+    """skyline()'s size tiers, with its caps lowered to 64 (anti-join)
+    and 128 (single task): when skyline() plans on its own, an input of
+    n = 63, 64, 65, 127, 128 or 129 comparable rows (NULL and NaN rows
+    do not count) runs exactly one of the anti-join, the single task and
+    the partitioned plan, and returns the same multiset as the
+    partitioned plan, over exact duplicates, mixed senses and
+    date/timestamp dimensions. An explicit algo, ``partitions``, ``by``
+    or ``bounds`` stays partitioned, and the row count costs no job
+    beyond the bounds aggregate."""
     import datetime as dt
     import random
 
     from pyspark_skyline_spark.operators.skyline import skyline_antijoin
 
+    caps = {"_ANTIJOIN_MAX": 64, "_SINGLE_TASK_ROWS": 128}
     schema = "id long, g int, x double, y long, day date, ts timestamp"
     dims = [("x", "min"), ("y", "max"), ("day", "min"), ("ts", "max")]
     t0, d0 = dt.datetime(2024, 1, 1), dt.date(2024, 1, 1)
@@ -635,20 +644,22 @@ def test_single_task_gate_differential(spark, merge_policy):
     def bag(df):
         return sorted(map(tuple, df.collect()))
 
-    for n in (63, 64, 65):
+    def paths(ran):
+        return (ran["antijoin"], ran["single"], int(ran["local_pass"] > 0))
+
+    for n in (63, 64, 65, 127, 128, 129):
         df = frame(n)
-        with merge_policy(_SINGLE_TASK_ROWS=64) as ran:
+        with merge_policy(**caps) as ran:
             auto = bag(skyline(df, dims))
         assert ran["bounds"] == 1
-        assert ran["single"] == int(n <= 64), n
-        assert (ran["local_pass"] == 0) == (n <= 64), n
+        assert paths(ran) == (int(n <= 64), int(64 < n <= 128), int(n > 128)), n
         with merge_policy(**PARTITIONED) as ran:
             part = bag(skyline(df, dims))
-        assert ran["single"] == 0 and ran["local_pass"] > 0
+        assert paths(ran) == (0, 0, 1), n
         assert auto == part == bag(skyline_antijoin(df, dims)), n
         assert len(auto) >= 4 and not any(r[0] >= 900 for r in auto)
 
-    # under the cap, only a query skyline() plans on its own takes it
+    # under the caps, only a query skyline() plans on its own takes them
     df = frame(63)
     want = bag(skyline_antijoin(df, dims))
     bounds = S._compute_bounds(S._comparable(df, dims), dims)
@@ -659,19 +670,19 @@ def test_single_task_gate_differential(spark, merge_policy):
         {"by": ["g"]},  # one group: the grouped frontier is the frontier
         {"bounds": bounds},
     ):
-        with merge_policy(_SINGLE_TASK_ROWS=64) as ran:
+        with merge_policy(**caps) as ran:
             got = bag(skyline(df, dims, **kw))
-        assert ran["single"] == 0 and ran["local_pass"] > 0, kw
+        assert paths(ran) == (0, 0, 1), kw
         assert got == want, kw
 
     # empty input, and an input whose rows are all incomparable
     for empty in (spark.createDataFrame([], schema), frame(4).filter("id >= 900")):
-        with merge_policy(_SINGLE_TASK_ROWS=64) as ran:
+        with merge_policy(**caps) as ran:
             assert skyline(empty, dims).count() == 0
-        assert (ran["single"], ran["local_pass"]) == (1, 0)
+        assert paths(ran) == (1, 0, 0)
 
-    # one aggregate reads bounds and count: building the single-task
-    # query runs the jobs of a plain min/max aggregate and nothing more
+    # one aggregate reads bounds and count: building a small-tier query
+    # runs the jobs of a plain min/max aggregate and nothing more
     sc = spark.sparkContext
 
     def jobs(fn, group):
@@ -682,9 +693,11 @@ def test_single_task_gate_differential(spark, merge_policy):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    comparable = S._comparable(df, dims)
-    plain = jobs(lambda: comparable.agg(F.min("x"), F.max("x")).collect(), "gate-agg")
-    with merge_policy(_SINGLE_TASK_ROWS=64) as ran:
-        built = jobs(lambda: skyline(df, dims), "gate-build")
-    assert ran["single"] == 1
-    assert built == plain >= 1
+    for n, path in ((63, "antijoin"), (100, "single")):
+        df = frame(n)
+        comparable = S._comparable(df, dims)
+        plain = jobs(lambda: comparable.agg(F.min("x"), F.max("x")).collect(), f"agg-{n}")
+        with merge_policy(**caps) as ran:
+            built = jobs(lambda: skyline(df, dims), f"build-{n}")
+        assert ran[path] == 1, path
+        assert built == plain >= 1, path

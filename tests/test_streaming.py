@@ -60,10 +60,26 @@ def test_result_before_update_raises():
         state.result()
 
 
-def test_grouped_state_rejected():
-    # the anti-join reduce has no notion of groups
-    with pytest.raises(ValueError, match="by="):
-        SkylineStreamState(DIMS, by=["o_custkey"])
+def test_grouped_prefix_consistency(spark, sf_dir):
+    """With ``by``, each fold is a grouped skyline(): after every batch
+    the frontier equals skyline(prefix, by=...), which keeps rows that
+    another group's rows dominate."""
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    by = ["o_orderstatus"]
+    cols = [*by, "o_totalprice", "o_orderdate"]
+
+    def grouped_set(df):
+        return {tuple(r) for r in df.select(*cols).dropDuplicates().collect()}
+
+    batches = [orders.filter(F.pmod(F.col("o_orderkey"), 3) == i) for i in range(3)]
+    state = SkylineStreamState(DIMS, by=by)
+    prefix = None
+    for b in batches:
+        got = state.update(b)
+        prefix = b if prefix is None else prefix.unionByName(b)
+        want = grouped_set(skyline(prefix, DIMS, by=by))
+        assert grouped_set(got) == want
+    assert len(want) > len(frontier_set(skyline(prefix, DIMS)))
 
 
 @pytest.mark.parametrize("durable", [False, True], ids=["memory", "state_dir"])
@@ -115,37 +131,39 @@ def _row_counter(df):
 
 @pytest.mark.parametrize("first", [63, 64, 65])
 def test_update_gate_differential(spark, monkeypatch, merge_policy, first):
-    """Around the probe's gate (lowered to 64 rows), raw batches of
-    cap-1, cap and cap+1 rows reach either the anti-join reduce or the
-    partitioned operator; after every step the frontier must equal
+    """Every non-empty update folds batch ∪ frontier with ONE skyline()
+    call, whose size tiers (caps lowered to 64 anti-join and 128 single
+    task rows) pick the plan from the pool's comparable rows; an empty
+    batch calls nothing. After every step the frontier must equal
     skyline() of the prefix, duplicates included, under skyline()'s
-    NULL/NaN semantics. The stream's skyline() calls are pinned to the
-    partitioned plan (these batches are far below the single-task cap),
-    while the reference skyline() of the prefix runs as one task."""
-    cap = 64
-    monkeypatch.setattr(skyline_stream, "_ANTIJOIN_MAX", cap)
-    kernel_inputs = []
+    NULL/NaN semantics."""
+    from pyspark_skyline_spark.operators import skyline as S
+
+    calls = []
 
     def spy(df, *a, **kw):
-        kernel_inputs.append(df)
+        calls.append(df)
         return skyline(df, *a, **kw)
 
     monkeypatch.setattr(skyline_stream, "skyline", spy)
     rng = random.Random(first)
-    # the query-string form of the dims must reach the anti-join too
+    # the query-string form of the dims must reach skyline() too
     state = SkylineStreamState(GATE_QUERY)
-    prefix, next_id = [], 0
-    for n in [first, 8, cap + 1, cap - 1, cap]:
+    prefix, next_id, tiers = [], 0, Counter()
+    for n in [first, 8, 0, 65, 129]:
         rows = _gate_rows(rng, n, next_id)
         next_id += n
         prefix += rows
         batch = spark.createDataFrame(rows, GATE_SCHEMA)
-        kernel_inputs.clear()
-        with merge_policy(_SINGLE_TASK_ROWS=-1) as ran:
+        calls.clear()
+        with merge_policy(_ANTIJOIN_MAX=64, _SINGLE_TASK_ROWS=128) as ran:
             got = state.update(batch)
-        # the raw batch goes to the partitioned operator iff it is past the cap
-        assert any(df is batch for df in kernel_inputs) == (n > cap), n
-        if n > cap:
-            assert ran["local_pass"] > 0, n
+        assert len(calls) == int(n > 0), n
+        if n:
+            pool = S._comparable(calls[0], GATE_DIMS).count()
+            tier = (int(pool <= 64), int(64 < pool <= 128), int(pool > 128))
+            assert (ran["antijoin"], ran["single"], int(ran["local_pass"] > 0)) == tier, n
+            tiers[tier] += 1
         want = skyline(spark.createDataFrame(prefix, GATE_SCHEMA), GATE_DIMS)
         assert _row_counter(got) == _row_counter(want), n
+    assert len(tiers) >= 2  # the batches reach more than one tier
