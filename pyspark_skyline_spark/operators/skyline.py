@@ -172,25 +172,19 @@ def _dominates(q_cols, p_cols, senses):
     return no_worse & strictly_better
 
 
-def _bounds_and_count(df: DataFrame, dims) -> tuple[dict[str, tuple[float, float]], int]:
-    """One aggregate pass for per-dimension (lo, hi) as doubles, and the
-    row count, which the same pass reads for free.
+def _compute_bounds(df: DataFrame, dims) -> dict[str, tuple[float, float]]:
+    """One aggregate pass for per-dimension (lo, hi) as doubles.
 
     Data-driven replacement for the reference's fixed [0, 1e9] domain
     (src/config/configurations.py:17-18).
     """
-    aggs = [F.count(F.lit(1)).alias("__n")]
+    aggs = []
     for c, _ in dims:
         x = _numeric_expr(df, c)
         aggs.append(F.min(x).alias(f"__lo_{c}"))
         aggs.append(F.max(x).alias(f"__hi_{c}"))
     row = df.agg(*aggs).collect()[0]
-    return {c: (row[f"__lo_{c}"], row[f"__hi_{c}"]) for c, _ in dims}, row["__n"]
-
-
-def _compute_bounds(df: DataFrame, dims) -> dict[str, tuple[float, float]]:
-    """Per-dimension (lo, hi) as doubles (``_bounds_and_count``)."""
-    return _bounds_and_count(df, dims)[0]
+    return {c: (row[f"__lo_{c}"], row[f"__hi_{c}"]) for c, _ in dims}
 
 
 def _minspace_exprs(df, dims, bounds):
@@ -623,12 +617,16 @@ def skyline(
     * **partitioned** — otherwise, as below.
 
     Neither small tier has a cell key, local pass, probe or merge. The
-    row count comes from the bounds aggregate, so reading it adds no
-    job. A named algorithm keeps the reference's partitioning scheme at
-    any size. Every other query is partitioned, keyed and reduced per
-    cell, then merged by one size-driven decision, read from ONE
-    Catalyst size estimate ``est`` of the input (``_estimated_bytes``;
-    0 when it fails) and the dimension count ``d``:
+    row count is one plain ``count()``, run only when ``skyline()``
+    plans on its own: a named algorithm, ``partitions``, ``by`` or
+    ``bounds`` runs none, and a named algorithm keeps the reference's
+    partitioning scheme at any size. Every other query is partitioned.
+    Only this plan pays the per-dimension bounds aggregate
+    (``_compute_bounds``), and not with ``bounds`` or ``MR_DIM_Q``,
+    whose cells come from quantiles. It is keyed and reduced per cell,
+    then merged by one size-driven decision, read from ONE Catalyst
+    size estimate ``est`` of the input (``_estimated_bytes``; 0 when it
+    fails) and the dimension count ``d``:
 
     * **combiner** — iff ``est > _LARGE_INPUT_BYTES`` (4 GiB), each
       Arrow batch is reduced to its frontier before the shuffle
@@ -655,9 +653,24 @@ def skyline(
     Rows with NULL or NaN in any skyline dimension are excluded, the
     rule the whole skyline family shares (``_comparable``).
     """
+    return _skyline(df, dims, algo, partitions, bounds, by)
+
+
+def _skyline(
+    df: DataFrame,
+    dims,
+    algo: str = "auto",
+    partitions: int | None = None,
+    bounds: dict[str, tuple[float, float]] | None = None,
+    by: list[str] | None = None,
+    n: int | None = None,
+) -> DataFrame:
+    """``skyline()``, for in-package callers that already know ``n``,
+    the comparable row count of ``df``: passing it skips the count that
+    picks the size tier. Read only when ``skyline()`` plans on its own."""
     dims = _normalize_dims(dims)
     d = len(dims)
-    self_planned = algo == "auto" and partitions is None and not by
+    self_planned = algo == "auto" and partitions is None and not by and bounds is None
     algo = _pick_algo(algo, d)
     if algo not in ("MR_DIM", "MR_DIM_Q", "MR_GRID", "MR_ANGLE"):
         raise ValueError(f"algo must be one of {ALGORITHMS}, got {algo!r}")
@@ -665,9 +678,10 @@ def skyline(
     dim_cols = [c for c, _ in dims]
     senses = [s for _, s in dims]
 
-    if bounds is None:
-        bounds, n = _bounds_and_count(df, dims)
-        if self_planned and n <= _ANTIJOIN_MAX:
+    if self_planned:
+        if n is None:
+            n = df.count()
+        if n <= _ANTIJOIN_MAX:
             # the join's output keeps its streamed side's partitions, so
             # coalesce to k first: each task compares its rows with all
             # n, so its work is (n/k)·n, and k gives the cap
@@ -675,9 +689,8 @@ def skyline(
             par = df.sparkSession.sparkContext.defaultParallelism
             k = max(1, math.ceil(par * (n / _ANTIJOIN_MAX) ** 2))
             return _antijoin(df.coalesce(k), dims)
-        if self_planned and n <= _SINGLE_TASK_ROWS:
+        if n <= _SINGLE_TASK_ROWS:
             return _single_task_skyline(df, dim_cols, senses)
-    vs = _minspace_exprs(df, dims, bounds)
 
     spark = df.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
@@ -685,12 +698,16 @@ def skyline(
 
     if algo == "MR_DIM_Q":
         key, ncells = _quantile_key(df, dims, p)
-    elif algo == "MR_DIM":
-        key, ncells = _mr_dim_key(vs, p)
-    elif algo == "MR_GRID":
-        key, ncells = _mr_grid_key(vs, p)
     else:
-        key, ncells = _mr_angle_key(vs, p)
+        if bounds is None:
+            bounds = _compute_bounds(df, dims)
+        vs = _minspace_exprs(df, dims, bounds)
+        if algo == "MR_DIM":
+            key, ncells = _mr_dim_key(vs, p)
+        elif algo == "MR_GRID":
+            key, ncells = _mr_grid_key(vs, p)
+        else:
+            key, ncells = _mr_angle_key(vs, p)
 
     keyed = df.withColumn(_CELL, key)
     if algo == "MR_GRID" and d > 1:

@@ -6,11 +6,16 @@ stage bus (reference src/jobs/stream_job.py:87-206, SURVEY.md §3.2).
 This engine uses a single ``foreachBatch`` query with a driver-held
 candidate-skyline state table instead:
 
-* per micro-batch: the batch, checkpointed once, is unioned with the
-  current candidate set and the pool is reduced by ONE ``skyline()``
-  call. Its size policy picks the plan: a steady stream's pools (a
-  batch plus the frontier) take the codegen'd NOT-EXISTS anti-join
-  tier, a larger pool the single kernel task or the partitioned plan.
+* per micro-batch: the batch's comparable rows (``_comparable``),
+  checkpointed once, are unioned with the current candidate set and
+  the pool is reduced by ONE ``skyline()`` call. Its size policy picks
+  the plan: a steady stream's pools (a batch plus the frontier) take
+  the codegen'd NOT-EXISTS anti-join tier, a larger pool the single
+  kernel task or the partitioned plan. The pool's size is known
+  without a count of its own: the batch is counted as it is
+  checkpointed, and the frontier's size is observed as it is
+  checkpointed (``pyspark.sql.Observation``), so a batch runs one
+  count, the fold's own jobs and, with ``state_dir``, the write.
 * correctness rests on the same monotonicity the reference exploits
   (SURVEY.md §3.2): under append-only input a point, once dominated,
   can never re-enter the skyline — so the candidate set IS the running
@@ -41,9 +46,9 @@ foreachBatch restart can produce still yields the exactly-once result.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from pyspark_skyline_spark.operators.skyline import _normalize_dims, skyline
+from pyspark_skyline_spark.operators.skyline import _comparable, _normalize_dims, _skyline
 from pyspark_skyline_spark.streaming import fsio
 
 __all__ = ["SkylineStreamState", "run_skyline_stream"]
@@ -81,6 +86,7 @@ class SkylineStreamState:
         self.state_dir = state_dir
         self._spark = spark
         self.current: DataFrame | None = None
+        self._n_front = 0  # rows of ``current``
         self._version = 0
         if state_dir:
             if spark is None:
@@ -90,9 +96,11 @@ class SkylineStreamState:
                 )
             self._version = self._recover_version(spark, state_dir)
             if self._version:
-                self.current = spark.read.parquet(
-                    fsio.join(state_dir, f"frontier_v{self._version}")
-                ).localCheckpoint(eager=True)
+                self._checkpoint_frontier(
+                    spark.read.parquet(
+                        fsio.join(state_dir, f"frontier_v{self._version}")
+                    )
+                )
 
     @staticmethod
     def _recover_version(spark: SparkSession, state_dir: str) -> int:
@@ -132,24 +140,36 @@ class SkylineStreamState:
             )
         self._version = nxt
 
+    def _checkpoint_frontier(self, df: DataFrame) -> None:
+        """Materialize ``df`` as the frontier and cut its lineage (state
+        must not grow a plan per batch); its row count is observed in
+        the same job."""
+        obs = Observation("skyline_frontier")
+        self.current = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
+        self._n_front = obs.get["n"]
+
     def update(self, batch_df: DataFrame) -> DataFrame | None:
         """Fold a micro-batch into the running skyline; returns it
         (``None`` while every batch so far was empty).
 
-        The batch is checkpointed once, eagerly: foreachBatch re-runs
-        its plan (a source scan, or a stateful stage) per action, and it
-        is read three times — by the empty-batch count (an empty batch is
-        a no-op), by ``skyline()``'s bounds-and-count aggregate and by
-        the plan that count picks. The pool, batch ∪ frontier, is then
-        two materialized inputs, reduced by one ``skyline()`` call."""
-        batch = batch_df.localCheckpoint(eager=True)
-        if batch.count() == 0:
+        The batch's comparable rows are checkpointed once, lazily, and
+        one ``count()`` both materializes and counts them: foreachBatch
+        re-runs its plan (a source scan, or a stateful stage) per
+        action, and the fold reads the batch again. A batch with no
+        comparable row (empty, or every row NULL or NaN in a dimension)
+        is a no-op: no fold, no publish, no new version. Otherwise the
+        pool, batch ∪ frontier, is reduced by one ``skyline()`` call that
+        is handed the pool's size, so it runs no count of its own."""
+        batch = _comparable(batch_df, self.dims).localCheckpoint(eager=False)
+        n_batch = batch.count()
+        if n_batch == 0:
             return self.current
         pool = batch if self.current is None else batch.unionByName(self.current)
-        # materialize & cut lineage: state must not grow a plan per batch
-        self.current = skyline(
-            pool, self.dims, algo=self.algo, **self.kwargs
-        ).localCheckpoint(eager=True)
+        self._checkpoint_frontier(
+            _skyline(pool, self.dims, self.algo, n=n_batch + self._n_front, **self.kwargs)
+        )
         if self.state_dir:
             self._publish(self.current)
         return self.current

@@ -45,7 +45,7 @@ def sf_dir():
 def merge_policy(spark, monkeypatch):
     """Context manager over ``skyline()``'s merge policy. Patches its
     module constants (and, with ``est=``, the size estimate) for the
-    block, and counts what ran: ``bounds`` bounds-and-count aggregates,
+    block, and counts what ran: ``bounds`` bounds aggregates,
     ``antijoin`` anti-join plans (``skyline_antijoin`` calls included),
     ``single`` single-task plans, ``est`` size estimates read, ``probe``
     counts of the cell-keyed local frontiers, ``combiner`` and
@@ -90,7 +90,7 @@ def merge_policy(spark, monkeypatch):
             m.setattr(S, "_estimated_bytes", estimate)
             m.setattr(frame, "count", count)
             for name, key in (
-                ("_bounds_and_count", "bounds"),
+                ("_compute_bounds", "bounds"),
                 ("_antijoin", "antijoin"),
                 ("_single_task_skyline", "single"),
                 ("_map_side_prereduce", "combiner"),

@@ -605,9 +605,10 @@ def test_single_task_gate_differential(spark, merge_policy):
     do not count) runs exactly one of the anti-join, the single task and
     the partitioned plan, and returns the same multiset as the
     partitioned plan, over exact duplicates, mixed senses and
-    date/timestamp dimensions. An explicit algo, ``partitions``, ``by``
-    or ``bounds`` stays partitioned, and the row count costs no job
-    beyond the bounds aggregate."""
+    date/timestamp dimensions. Only the partitioned plan pays the
+    bounds aggregate, and not for ``MR_DIM_Q``. An explicit algo,
+    ``partitions``, ``by`` or ``bounds`` stays partitioned, and the row
+    count costs the jobs of a plain ``count()`` and nothing more."""
     import datetime as dt
     import random
 
@@ -651,11 +652,12 @@ def test_single_task_gate_differential(spark, merge_policy):
         df = frame(n)
         with merge_policy(**caps) as ran:
             auto = bag(skyline(df, dims))
-        assert ran["bounds"] == 1
+        assert ran["bounds"] == int(n > 128), n
         assert paths(ran) == (int(n <= 64), int(64 < n <= 128), int(n > 128)), n
         with merge_policy(**PARTITIONED) as ran:
             part = bag(skyline(df, dims))
         assert paths(ran) == (0, 0, 1), n
+        assert ran["bounds"] == 1, n
         assert auto == part == bag(skyline_antijoin(df, dims)), n
         assert len(auto) >= 4 and not any(r[0] >= 900 for r in auto)
 
@@ -666,6 +668,7 @@ def test_single_task_gate_differential(spark, merge_policy):
     for kw in (
         {"algo": "MR_ANGLE"},
         {"algo": "MR_DIM"},
+        {"algo": "MR_DIM_Q"},  # cells from quantiles: no bounds aggregate
         {"partitions": 4},
         {"by": ["g"]},  # one group: the grouped frontier is the frontier
         {"bounds": bounds},
@@ -673,6 +676,7 @@ def test_single_task_gate_differential(spark, merge_policy):
         with merge_policy(**caps) as ran:
             got = bag(skyline(df, dims, **kw))
         assert paths(ran) == (0, 0, 1), kw
+        assert ran["bounds"] == int(not ("bounds" in kw or kw.get("algo") == "MR_DIM_Q")), kw
         assert got == want, kw
 
     # empty input, and an input whose rows are all incomparable
@@ -680,9 +684,10 @@ def test_single_task_gate_differential(spark, merge_policy):
         with merge_policy(**caps) as ran:
             assert skyline(empty, dims).count() == 0
         assert paths(ran) == (1, 0, 0)
+        assert ran["bounds"] == 0
 
-    # one aggregate reads bounds and count: building a small-tier query
-    # runs the jobs of a plain min/max aggregate and nothing more
+    # building a small-tier query runs the jobs of a plain count() and
+    # nothing more
     sc = spark.sparkContext
 
     def jobs(fn, group):
@@ -696,8 +701,9 @@ def test_single_task_gate_differential(spark, merge_policy):
     for n, path in ((63, "antijoin"), (100, "single")):
         df = frame(n)
         comparable = S._comparable(df, dims)
-        plain = jobs(lambda: comparable.agg(F.min("x"), F.max("x")).collect(), f"agg-{n}")
+        plain = jobs(lambda: comparable.count(), f"count-{n}")
         with merge_policy(**caps) as ran:
             built = jobs(lambda: skyline(df, dims), f"build-{n}")
-        assert ran[path] == 1, path
+        assert ran[path] == 1 and ran["bounds"] == 0, path
         assert built == plain >= 1, path
+

@@ -129,23 +129,32 @@ def _row_counter(df):
     return Counter(tuple(r) for r in df.select("id", "a", "b", "c").collect())
 
 
+def _spy_fold(monkeypatch):
+    """Record the pool and the pool size handed to each fold of the
+    stream."""
+    from pyspark_skyline_spark.operators import skyline as S
+
+    calls, fold = [], S._skyline
+
+    def spy(df, *a, **kw):
+        calls.append((df, kw["n"]))
+        return fold(df, *a, **kw)
+
+    monkeypatch.setattr(skyline_stream, "_skyline", spy)
+    return calls
+
+
 @pytest.mark.parametrize("first", [63, 64, 65])
 def test_update_gate_differential(spark, monkeypatch, merge_policy, first):
     """Every non-empty update folds batch ∪ frontier with ONE skyline()
-    call, whose size tiers (caps lowered to 64 anti-join and 128 single
-    task rows) pick the plan from the pool's comparable rows; an empty
-    batch calls nothing. After every step the frontier must equal
-    skyline() of the prefix, duplicates included, under skyline()'s
-    NULL/NaN semantics."""
+    call (``_skyline``, handed the pool's comparable row count), whose
+    size tiers (caps lowered to 64 anti-join and 128 single task rows)
+    pick the plan from that count; an empty batch calls nothing. After
+    every step the frontier must equal skyline() of the prefix,
+    duplicates included, under skyline()'s NULL/NaN semantics."""
     from pyspark_skyline_spark.operators import skyline as S
 
-    calls = []
-
-    def spy(df, *a, **kw):
-        calls.append(df)
-        return skyline(df, *a, **kw)
-
-    monkeypatch.setattr(skyline_stream, "skyline", spy)
+    calls = _spy_fold(monkeypatch)
     rng = random.Random(first)
     # the query-string form of the dims must reach skyline() too
     state = SkylineStreamState(GATE_QUERY)
@@ -160,10 +169,108 @@ def test_update_gate_differential(spark, monkeypatch, merge_policy, first):
             got = state.update(batch)
         assert len(calls) == int(n > 0), n
         if n:
-            pool = S._comparable(calls[0], GATE_DIMS).count()
+            # the pool size handed over is the pool's comparable count
+            pool = S._comparable(calls[0][0], GATE_DIMS).count()
+            assert calls[0][1] == pool, n
             tier = (int(pool <= 64), int(64 < pool <= 128), int(pool > 128))
             assert (ran["antijoin"], ran["single"], int(ran["local_pass"] > 0)) == tier, n
+            assert ran["bounds"] == int(pool > 128), n
             tiers[tier] += 1
         want = skyline(spark.createDataFrame(prefix, GATE_SCHEMA), GATE_DIMS)
         assert _row_counter(got) == _row_counter(want), n
     assert len(tiers) >= 2  # the batches reach more than one tier
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["memory", "state_dir"])
+def test_incomparable_batch_is_noop(spark, monkeypatch, tmp_path, durable):
+    """A batch whose rows all have a NULL or NaN dimension folds
+    nothing, publishes nothing and bumps no version, and its rows are
+    never stored in the batch checkpoint."""
+    calls = _spy_fold(monkeypatch)
+    state = (
+        SkylineStreamState(GATE_DIMS, state_dir=str(tmp_path), spark=spark)
+        if durable
+        else SkylineStreamState(GATE_DIMS)
+    )
+    bad = spark.createDataFrame(
+        [(1, None, 1, 1.0), (2, float("nan"), 1, 1.0), (3, 1.0, None, 1.0), (4, 1.0, 1, None)],
+        GATE_SCHEMA,
+    )
+    assert state.update(bad) is None and calls == []
+    with pytest.raises(ValueError):
+        state.result()
+    good = spark.createDataFrame([(5, 1.0, 2, 1.0), (6, 2.0, 1, 2.0)], GATE_SCHEMA)
+    front = state.update(good)
+    assert [n for _, n in calls] == [2]
+    version, files = state._version, sorted(os.listdir(tmp_path))
+
+    frame = type(bad)
+    checkpoints, real = [], frame.localCheckpoint
+
+    def recording(self, *a, **kw):
+        out = real(self, *a, **kw)
+        checkpoints.append(out)
+        return out
+
+    monkeypatch.setattr(frame, "localCheckpoint", recording)
+    assert state.update(bad) is front
+    monkeypatch.setattr(frame, "localCheckpoint", real)
+    assert len(calls) == 1 and state._version == version
+    assert sorted(os.listdir(tmp_path)) == files
+    assert len(checkpoints) == 1 and checkpoints[0].collect() == []
+    assert _row_counter(state.result()) == Counter({(5, 1.0, 2, 1.0): 1})
+
+
+def test_restart_tier_from_recovered_frontier(spark, monkeypatch, merge_policy, tmp_path):
+    """A state recovered from ``state_dir`` knows its frontier's size
+    without a ``count()``: the first batch after recovery picks its tier
+    (caps patched to 64 anti-join, 128 single task) from the recovered
+    frontier plus the batch, on both sides of the anti-join cap."""
+    schema = "id long, x long, y long"
+    dims = [("x", "min"), ("y", "min")]
+
+    def rows(lo, hi):  # on one anti-diagonal: no row dominates another
+        return spark.createDataFrame([(i, i, 1000 - i) for i in range(lo, hi)], schema)
+
+    calls = _spy_fold(monkeypatch)
+    state_dir = str(tmp_path)
+    SkylineStreamState(dims, state_dir=state_dir, spark=spark).update(rows(0, 60))
+    frame = type(spark.range(1))
+    for lo, hi, pool, tier in ((60, 64, 64, (1, 0)), (64, 65, 65, (0, 1))):
+
+        def no_count(self):
+            raise AssertionError("recovery ran a count()")
+
+        with monkeypatch.context() as m:
+            m.setattr(frame, "count", no_count)
+            state = SkylineStreamState(dims, state_dir=state_dir, spark=spark)
+        assert state._n_front == lo
+        with merge_policy(_ANTIJOIN_MAX=64, _SINGLE_TASK_ROWS=128) as ran:
+            got = state.update(rows(lo, hi))
+        assert calls[-1][1] == pool
+        assert (ran["antijoin"], ran["single"], ran["local_pass"]) == (*tier, 0), pool
+        assert got.count() == pool
+
+
+@pytest.mark.parametrize("durable,budget", [(False, 4), (True, 5)], ids=["memory", "state_dir"])
+def test_update_job_budget(spark, tmp_path, durable, budget):
+    """One steady-state update (anti-join tier) runs a pinned number of
+    Spark jobs: the batch's checkpointing count, the fold and its
+    frontier checkpoint, and with ``state_dir`` the frontier write. A
+    change that adds a job per batch fails here."""
+    state = (
+        SkylineStreamState(GATE_DIMS, state_dir=str(tmp_path), spark=spark)
+        if durable
+        else SkylineStreamState(GATE_DIMS)
+    )
+    rng = random.Random(3)
+    sc = spark.sparkContext
+    for i in range(3):
+        batch = spark.createDataFrame(_gate_rows(rng, 40, 40 * i), GATE_SCHEMA)
+        group = f"update-budget-{durable}-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            state.update(batch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == budget
