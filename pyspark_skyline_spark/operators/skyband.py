@@ -40,34 +40,22 @@ from pyspark.sql import DataFrame, functions as F
 import math
 
 from pyspark_skyline_spark.operators.skyline import (
-    _bucket,
+    _cell_digits,
     _comparable,
     _compute_bounds,
     _minspace_exprs,
+    _mr_grid_key,
     _normalize_dims,
 )
 
 __all__ = ["k_skyband"]
 
 
-def _count_dominators_within(X: np.ndarray, block: int = 1024) -> np.ndarray:
-    """#dominators of each row among the rows of ``X`` (min-space:
-    dominance = <= everywhere AND < somewhere). Blocked O(n^2 d)."""
-    n = len(X)
-    out = np.zeros(n, dtype=np.int64)
-    for lo in range(0, n, block):
-        hi = min(lo + block, n)
-        # le[i, j]: row i <= block-row j everywhere; eq: equal everywhere
-        le = (X[:, None, :] <= X[None, lo:hi, :]).all(axis=2)
-        eq = (X[:, None, :] == X[None, lo:hi, :]).all(axis=2)
-        out[lo:hi] = (le & ~eq).sum(axis=0)
-    return out
-
-
 def _count_dominators_from(
     cand: np.ndarray, aud: np.ndarray, block: int = 1024
 ) -> np.ndarray:
-    """#rows of ``aud`` dominating each row of ``cand`` (min-space)."""
+    """#rows of ``aud`` dominating each row of ``cand`` (min-space:
+    dominance = <= everywhere AND < somewhere). Blocked O(n m d)."""
     out = np.zeros(len(cand), dtype=np.int64)
     if len(aud) == 0:
         return out
@@ -108,10 +96,7 @@ def k_skyband(
     df = _comparable(df, dims)
     bounds = _compute_bounds(df, dims)
     vs = _minspace_exprs(df, dims, bounds)
-    digits = [_bucket(v, b) for v in vs]
-    cell = digits[0]
-    for i, dig in enumerate(digits[1:], start=1):
-        cell = cell + dig * F.lit(b**i)
+    cell, _ = _mr_grid_key(vs, b)
 
     keyed = (
         df.withColumn("__cell", cell)
@@ -131,7 +116,7 @@ def k_skyband(
 
     def local_counts(pdf: pd.DataFrame) -> pd.DataFrame:
         X = pdf[xcols].to_numpy(dtype=np.float64)
-        cnt = _count_dominators_within(X)
+        cnt = _count_dominators_from(X, X)
         keep = cnt < k
         return pd.DataFrame(
             {
@@ -162,12 +147,7 @@ def k_skyband(
     census = dimtbl.groupBy("__cell").agg(F.count(F.lit(1)).alias("__n")).collect()
     cells = np.array([r["__cell"] for r in census], dtype=np.int64)
     sizes = np.array([r["__n"] for r in census], dtype=np.int64)
-    # decode packed cell ids to per-dim digits: (C, d)
-    D = np.empty((len(cells), d), dtype=np.int64)
-    rem = cells.copy()
-    for i in range(d):
-        D[:, i] = rem % b
-        rem //= b
+    D = _cell_digits(cells, b, d)
 
     bulk_rows = []
     partial_rows = []

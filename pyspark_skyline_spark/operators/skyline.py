@@ -266,6 +266,17 @@ def _grid_surviving_cells(keyed: DataFrame, b: int, d: int) -> list[int]:
     return _surviving_cell_ids(cells, b, d)
 
 
+def _cell_digits(ids, b: int, d: int):
+    """The (n, d) per-dimension bucket digits of ``_mr_grid_key`` cell
+    ids (an int64 array)."""
+    import numpy as np
+
+    digits = np.empty((len(ids), d), dtype=np.int64)
+    for i in range(d):
+        digits[:, i] = ids // b**i % b
+    return digits
+
+
 def _surviving_cell_ids(cells: list[int], b: int, d: int) -> list[int]:
     """Cell ids NOT strictly dominated by any other id in ``cells``
     (digit-wise strict domination in min-space; see
@@ -278,11 +289,7 @@ def _surviving_cell_ids(cells: list[int], b: int, d: int) -> list[int]:
     if not cells:
         return []
     ids = np.asarray(cells, dtype=np.int64)
-    digits = np.empty((len(ids), d), dtype=np.int64)
-    rem = ids.copy()
-    for i in range(d):
-        digits[:, i] = rem % b
-        rem //= b
+    digits = _cell_digits(ids, b, d)
     survivors = []
     for idx, cid in enumerate(ids):
         dominated = ((digits < digits[idx]).all(axis=1)).any()

@@ -5,9 +5,16 @@ topology — per-partition local skylines maintained incrementally, each
 cell re-emitting its frontier when it changes (update mode; reference
 src/jobs/stream_job.py:87-153) — expressed as one stateful operator
 instead of a Kafka round-trip. Per-cell state is bounded by that cell's
-frontier (monotonicity under append-only input). Downstream, the global
-skyline is the batch operator over the union of emitted frontiers
-(stage-2 equivalent, reference stream_job.py:158-206).
+frontier (monotonicity under append-only input): a row with a NULL or
+NaN skyline dimension never enters state, by the batch family's one rule
+(``_has_values``). Downstream, the global skyline is the batch operator
+over the union of emitted frontiers (stage-2 equivalent, reference
+stream_job.py:158-206).
+
+``_cell_skyline`` is the one update behind both this module's
+``stateful_cell_skyline`` and ``windowed_stream_skyline``, which adds a
+tumbling window to the key, the late-row drop and the expiry of closed
+windows.
 
 Unlike the batch path, streaming cannot take a data-driven bounds pass,
 so the partition key derives from caller-provided ``bounds`` — the
@@ -25,15 +32,103 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
-from pyspark_skyline_spark.kernel import find_skyline_mask
+from pyspark_skyline_spark.kernel import _frontier_rows
 from pyspark_skyline_spark.operators.skyline import (
     _CELL,
+    _has_values,
     _minspace_exprs,
     _mr_dim_key,
     _normalize_dims,
 )
 
 __all__ = ["stateful_cell_skyline"]
+
+_WSTART = "window_start"
+
+
+def _cell_skyline(
+    stream_df: DataFrame,
+    dims,
+    bounds: dict[str, tuple[float, float]],
+    partitions: int,
+    window: tuple[str, str] | None = None,
+) -> DataFrame:
+    """Update-mode stream of per-cell local frontiers: input columns +
+    ``__sky_cell`` (+ ``window_start`` with ``window=(ts_col,
+    window_duration)``, which keys the state by ``(window_start, cell)``).
+    Each group's state is its frontier, pickled.
+
+    A row that fails ``_has_values`` gets cell -1, whose group returns
+    before it reads or writes state. The guard is a key rather than a
+    filter because Catalyst pushes a filter below ``withWatermark``, and
+    an incomparable row must still advance event time.
+
+    With a window, the caller has set the watermark on ``ts_col``; rows
+    behind it are dropped here, and a group's state expires by
+    EventTimeTimeout once the watermark passes its newest event.
+    """
+    dims = _normalize_dims(dims)
+    dim_cols = [c for c, _ in dims]
+    senses = [s for _, s in dims]
+    ts_col, window_duration = window or (None, None)
+
+    vs = _minspace_exprs(stream_df, dims, bounds)
+    key, _ = _mr_dim_key(vs, partitions)
+    keyed = stream_df.withColumn(
+        _CELL, F.when(_has_values(stream_df, dims), key).otherwise(-1)
+    )
+    keys = [_CELL]
+    if window:
+        keyed = keyed.withColumn(
+            _WSTART, F.window(F.col(ts_col), window_duration).getField("start")
+        )
+        keys.insert(0, _WSTART)
+
+    def update(key_tuple, pdfs, state):
+        if state.hasTimedOut:
+            # window closed: release the frontier state, emit nothing
+            # (every frontier version was already emitted update-mode)
+            state.remove()
+            return
+        if key_tuple[-1] < 0:  # the incomparable rows' cell
+            return
+        wm_ms = state.getCurrentWatermarkMs() if window else 0
+        batches = []
+        for pdf in pdfs:
+            # explicit late-data policy: arbitrary stateful ops receive
+            # late rows; drop anything behind the watermark
+            if wm_ms > 0:
+                pdf = pdf[pdf[ts_col].astype("int64") // 10**6 >= wm_ms]
+            if len(pdf):
+                batches.append(pdf)
+        if state.exists:
+            (blob,) = state.get
+            batches.append(pickle.loads(blob))
+        if not batches:
+            return
+        merged = pd.concat(batches, ignore_index=True)
+        frontier = _frontier_rows(merged, dim_cols, senses)
+        state.update((pickle.dumps(frontier),))
+        if window:
+            # Expiry anchor: the timeout must exceed the current
+            # watermark, and state kept past a window's close is only
+            # wasted memory, so anchor just past max(newest event seen,
+            # watermark). Early expiry is CORRECT (not just safe): every
+            # true frontier member survives whatever reduction it
+            # participates in, so it is emitted by some batch whether or
+            # not earlier state was dropped, and skyline(union of
+            # emissions) is unchanged.
+            ts_max_ms = int(pd.Timestamp(merged[ts_col].max()).value // 10**6)
+            state.setTimeoutTimestamp(max(ts_max_ms, wm_ms) + 1)
+        yield frontier
+
+    return keyed.groupBy(*keys).applyInPandasWithState(
+        update,
+        outputStructType=keyed.schema,
+        stateStructType=StructType([StructField("frontier_pkl", BinaryType(), True)]),
+        outputMode="update",
+        timeoutConf="EventTimeTimeout" if window else "NoTimeout",
+    )
 
 
 def stateful_cell_skyline(
@@ -49,36 +144,6 @@ def stateful_cell_skyline(
     global frontier; every emitted row set is a superset-correct
     candidate pool (a point only ever leaves a frontier by being
     dominated, so skyline(union of emissions) == skyline(all input)).
+    Rows with a NULL or NaN dimension are neither kept nor emitted.
     """
-    dims = _normalize_dims(dims)
-    dim_cols = [c for c, _ in dims]
-    senses = [s for _, s in dims]
-
-    vs = _minspace_exprs(stream_df, dims, bounds)
-    key, _ = _mr_dim_key(vs, partitions)
-    keyed = stream_df.withColumn(_CELL, key)
-
-    out_schema = keyed.schema
-    state_schema = StructType([StructField("frontier_pkl", BinaryType(), True)])
-
-    def update(key_tuple, pdfs, state):
-        batches = [pdf for pdf in pdfs if len(pdf)]
-        if state.exists:
-            (blob,) = state.get
-            prior = pickle.loads(blob)
-            batches.append(prior)
-        if not batches:
-            return
-        merged = pd.concat(batches, ignore_index=True)
-        mask = find_skyline_mask([merged[c] for c in dim_cols], senses)
-        frontier = merged[mask]
-        state.update((pickle.dumps(frontier),))
-        yield frontier
-
-    return keyed.groupBy(_CELL).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )
+    return _cell_skyline(stream_df, dims, bounds, partitions)

@@ -9,7 +9,9 @@ module is the single-pipeline Spark-native equivalent:
 * stage 1 = ``stateful_cell_skyline`` (``applyInPandasWithState``): the
   per-cell frontier state lives in the state store, each cell re-emits
   its frontier when it changes — exactly the reference's update-mode
-  stage-1 contract, minus the Kafka round-trip.
+  stage-1 contract, minus the Kafka round-trip. A row with a NULL or
+  NaN skyline dimension never enters that state, so stage 2 only ever
+  sees comparable rows, as in the batch operator.
 * stage 2 = the ``foreachBatch`` global merge: each micro-batch of
   emitted frontiers is folded into the running global frontier
   (``SkylineStreamState``) — the reference's complete-mode stage 2,

@@ -65,35 +65,37 @@ def test_windowed_stream_skyline_matches_batch(spark, sf_dir, tmp_path):
 
 def test_windowed_stream_skyline_drops_late_rows(spark, tmp_path):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # file 1: day-10 events; file 2 (arrives later): day-1 events — far
-    # behind the watermark set by file 1, so they must be dropped and
-    # their window must never emit
-    src = tmp_path / "late_stream"
-    on_time = spark.createDataFrame(
-        [(1, "2024-01-10 12:00:00", 5.0), (2, "2024-01-10 13:00:00", 7.0)],
-        "event_id long, ts string, value double",
-    ).select("event_id", F.col("ts").cast("timestamp").alias("ts"), "value")
-    late = spark.createDataFrame(
-        [(3, "2024-01-01 12:00:00", 9.0)],
-        "event_id long, ts string, value double",
-    ).select("event_id", F.col("ts").cast("timestamp").alias("ts"), "value")
-    on_time.coalesce(1).write.parquet(str(src))
-    late.coalesce(1).write.mode("append").parquet(str(src))
-    # the file source orders batches by modification time: force the
-    # late file strictly after the on-time one so batch order is
-    # deterministic
     import os
     import time
 
-    parts = sorted(src.glob("part-*.parquet"), key=lambda p: p.stat().st_mtime)
+    src = tmp_path / "late_stream"
+    files = [
+        # day-10 events: the watermark moves to 12:00
+        [(1, "2024-01-10 12:00:00", 5.0), (2, "2024-01-10 13:00:00", 7.0)],
+        # day-1 events, far behind that watermark: dropped, and their
+        # window never emits
+        [(3, "2024-01-01 12:00:00", 9.0)],
+        # a NaN row with the latest event time: it never enters state or
+        # the output, but it still moves the watermark to 19:00 ...
+        [(4, "2024-01-10 20:00:00", float("nan"))],
+        # ... so this row, on time against the 12:00 watermark, is late
+        [(5, "2024-01-10 14:00:00", 9.5)],
+    ]
+    # the file source orders batches by modification time: space the
+    # files' times out in write order so batch order is deterministic
+    seen = set()
     now = time.time()
-    os.utime(parts[0], (now - 100, now - 100))
-    for p in parts[1:]:
-        os.utime(p, (now, now))
+    for i, rows in enumerate(files):
+        spark.createDataFrame(rows, "event_id long, ts string, value double").select(
+            "event_id", F.col("ts").cast("timestamp").alias("ts"), "value"
+        ).coalesce(1).write.mode("append").parquet(str(src))
+        for p in set(src.glob("part-*.parquet")) - seen:
+            os.utime(p, (now - 100 + 10 * i, now - 100 + 10 * i))
+            seen.add(p)
     bounds = {"value": (0.0, 10.0), "event_id": (0.0, 10.0)}
 
     stream = (
-        spark.readStream.schema(on_time.schema)
+        spark.readStream.schema("event_id long, ts timestamp, value double")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
@@ -101,7 +103,7 @@ def test_windowed_stream_skyline_drops_late_rows(spark, tmp_path):
     starts = {r.window_start.day for r in emitted.select("window_start").collect()}
     assert starts == {10}  # the late day-1 window never emits
     ids = {r.event_id for r in emitted.collect()}
-    assert {1, 2}.issubset(ids) and 3 not in ids
+    assert ids == {1, 2}  # neither the NaN row nor the row it made late
 
 
 def test_windowed_stream_skyline_rejects_non_utc_session(spark, sf_dir):
