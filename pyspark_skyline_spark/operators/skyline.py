@@ -75,7 +75,9 @@ _LARGE_INPUT_BYTES = 4 * 1024**3
 #:   the partitioned plan wins (local[4] 8.4 -> 9.6, local[2] 7.8 -> 9.4).
 #: One task used less CPU time in every run. The cap is a quarter of
 #: the smallest size where the plans met; hosts with more than four
-#: cores are unmeasured.
+#: cores are unmeasured. These numbers were measured with the previous
+#: kernel (4096-row chunks, no prefix screen), which made both plans'
+#: kernel work slower; the cap is kept.
 _SINGLE_TASK_ROWS = 32768
 #: comparable-row count up to which a query that ``skyline()`` plans on
 #: its own runs as ONE codegen'd NOT-EXISTS broadcast-NL anti-join
@@ -90,6 +92,9 @@ _SINGLE_TASK_ROWS = 32768
 #:   but MORE at 8192 (d=3 1.59 -> 0.99, d=6 1.83 -> 1.36): its
 #:   O(n²) comparisons have no early exit when nothing is dominated.
 #: So the cap is 4096, the largest size where one task did not win.
+#: Measured with the previous kernel (4096-row chunks, no prefix
+#: screen); the re-check with the current one is in
+#: ``AB_kernel_blocking.json`` "antijoin_recheck".
 _ANTIJOIN_MAX = 4096
 
 # Make our kernel module picklable by value so applyInPandas closures run
@@ -516,23 +521,14 @@ def _filter_against(cand: DataFrame, K, sK, dim_cols, senses) -> DataFrame:
                 [to_min_space(pdf[c], s) for c, s in zip(dim_cols, senses)]
             )
             sC_all = C_all.sum(axis=1)
-            # ascending-sum chunk order: a chunk only needs the K prefix
-            # with sums <= its max, so sorted chunks compare against
-            # ~half of K on average instead of nearly all of it
+            # ascending-sum order: a row only meets the K prefix with
+            # sums <= its own, and ``_dominated_by`` bounds its own
+            # temporaries, so the whole batch goes in one call
             corder = np.argsort(sC_all, kind="stable")
             keep = np.ones(len(pdf), dtype=bool)
-            # chunk rows so the (m, k) boolean temporaries stay bounded
-            # (same memory budget as the kernel's BNL)
-            m_cap = max(32, 128_000_000 // max(len(Kb), 1))
-            for st in range(0, len(corder), m_cap):
-                idx = corder[st : st + m_cap]
-                C = np.ascontiguousarray(C_all[idx])
-                sC = sC_all[idx]
-                # dominators need sum <= max(sC): slice the sorted K
-                hi = int(np.searchsorted(sKb, sC[-1], side="right"))
-                if hi == 0:
-                    continue
-                keep[idx] = ~_dominated_by(C, Kb[:hi], sC, sKb[:hi])
+            keep[corder] = ~_dominated_by(
+                np.ascontiguousarray(C_all[corder]), Kb, sC_all[corder], sKb
+            )
             yield pdf[keep]
 
     return cand.mapInPandas(fn, schema=schema)

@@ -103,7 +103,10 @@ def _cell_skyline(
                 batches.append(pdf)
         if state.exists:
             (blob,) = state.get
-            batches.append(pickle.loads(blob))
+            prior = pickle.loads(blob)
+            # state written before incomparable rows were keyed out may
+            # still hold some: drop them as the frontier is read back
+            batches.append(prior[prior[dim_cols].notna().all(axis=1)])
         if not batches:
             return
         merged = pd.concat(batches, ignore_index=True)

@@ -7,7 +7,13 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from pyspark_skyline_spark.kernel import find_skyline_mask, to_min_space
+from pyspark_skyline_spark.kernel import (
+    _PREFIX_ROWS,
+    _SCREEN_CELLS,
+    _dominated_by,
+    find_skyline_mask,
+    to_min_space,
+)
 
 
 def brute_force_mask(cols, senses):
@@ -21,6 +27,19 @@ def brute_force_mask(cols, senses):
                 mask[i] = False
                 break
     return mask
+
+
+def dominated_rows(C, K):
+    """Vectorized O(len(C) * len(K)) oracle: is each row of C dominated
+    by some row of K (min-space)? NaN compares false, so a NaN row
+    neither dominates nor is dominated."""
+    out = np.zeros(len(C), dtype=bool)
+    for i in range(0, len(C), 256):
+        c = C[i : i + 256, None, :]
+        le = (K[None] <= c).all(axis=2)
+        lt = (K[None] < c).any(axis=2)
+        out[i : i + 256] = (le & lt).any(axis=1)
+    return out
 
 
 def test_empty():
@@ -177,3 +196,77 @@ def test_prune_rounds_equivalent(rounds):
     senses = ["min", "max", "min", "max"]
     base = find_skyline_mask(cols, senses, prune_rounds=8)
     assert find_skyline_mask(cols, senses, prune_rounds=rounds).tolist() == base.tolist()
+
+
+def _large_input(kind, rng):
+    """An input of 1500-5000 rows whose frontier is larger than the
+    screen's K prefix, on a coarse grid so coordinates tie, with exact
+    duplicates and NaN rows mixed in."""
+    if kind == "anticorrelated":
+        n, d = 4000, 4
+        energy = rng.normal(0.5, 0.05, size=n).clip(0.0, 1.0)
+        pts = rng.dirichlet(np.ones(d), size=n) * (energy[:, None] * d)
+        a = np.round(pts * 400)
+    elif kind == "sphere":
+        n, d = 2500, 3
+        x = np.abs(rng.normal(size=(n, d)))
+        a = np.round(x / np.linalg.norm(x, axis=1, keepdims=True) * 1000)
+    else:  # constant sum: every row in one equal-sum window
+        n, d = 1500, 3
+        a = rng.multinomial(60, np.ones(d) / d, size=n).astype(float)
+        a[rng.choice(n, 100, replace=False)] += 1.0  # dominated by a split
+    a = np.vstack([a, a[rng.choice(len(a), len(a) // 20, replace=False)]])
+    a[rng.choice(len(a), 15, replace=False), rng.integers(0, d, size=15)] = np.nan
+    return a[rng.permutation(len(a))]
+
+
+@pytest.mark.parametrize("rounds", [0, 8])
+@pytest.mark.parametrize("kind", ["anticorrelated", "sphere", "constant_sum"])
+def test_large_inputs_match_vectorized_bruteforce(kind, rounds):
+    # the kept set outgrows the screen's prefix and the BNL crosses
+    # several chunk boundaries, which the small inputs above never reach
+    rng = np.random.default_rng(11)
+    a = _large_input(kind, rng)
+    d = a.shape[1]
+    senses = ["min", "max"] * (d // 2) + ["min"] * (d % 2)
+    # a MAX dim holds the negated values, so the min-space shape (and
+    # the frontier's size) is the same as with every dim MIN
+    cols = [a[:, j] if s == "min" else -a[:, j] for j, s in enumerate(senses)]
+    want = ~dominated_rows(a, a)
+    assert want.sum() > _PREFIX_ROWS
+    got = find_skyline_mask(cols, senses, prune_rounds=rounds)
+    assert got.tolist() == want.tolist()
+
+
+_BIG_K = _PREFIX_ROWS + _SCREEN_CELLS // 2000 + 700
+
+
+@pytest.mark.parametrize("k", [_PREFIX_ROWS - 1, _PREFIX_ROWS, _PREFIX_ROWS + 1, _BIG_K])
+def test_dominated_by_across_prefix_and_tiles(k):
+    # K: mutually incomparable points (positive sphere orthant), sorted
+    # by sum as the screen requires. Each probe row is built from one K
+    # row, the last ones included, so some rows' only dominator sits
+    # past the prefix (or past the first rest tile at _BIG_K)
+    rng = np.random.default_rng(k)
+    x = np.abs(rng.normal(size=(k, 3)))
+    K = x / np.linalg.norm(x, axis=1, keepdims=True)
+    K = K[np.argsort(K.sum(axis=1), kind="stable")]
+    src = np.concatenate([np.arange(k - 5, k), rng.integers(0, k, size=2000)])
+    eps = np.zeros(3)
+    eps[0] = 1e-9
+    C = np.vstack(
+        [
+            K[src] + eps,  # dominated by its source row only
+            K[src[:200]],  # exact copies: never dominated
+            K[src[:200]] - eps,  # better than its source: not dominated
+            K[src[:100]] * 1.01,  # dominated by its source row and more
+            [[np.nan, 0.0, 0.0]],
+        ]
+    )
+    C = C[rng.permutation(len(C))]
+    got = _dominated_by(C, K, C.sum(axis=1), K.sum(axis=1))
+    want = dominated_rows(C, K)
+    assert got.tolist() == want.tolist()
+    # the rows dominated only by the last K row are found
+    last = K[-1] + eps
+    assert _dominated_by(last[None], K, last[None].sum(axis=1), K.sum(axis=1)).tolist() == [True]

@@ -21,6 +21,7 @@ from pyspark_skyline_spark.operators.skyline import (
     _minspace_exprs,
     _mr_dim_key,
 )
+from pyspark_skyline_spark.streaming import stateful
 from pyspark_skyline_spark.streaming.stateful import stateful_cell_skyline
 from pyspark_skyline_spark.streaming.windowed import windowed_stream_skyline
 
@@ -180,6 +181,29 @@ def test_cell_state_holds_only_comparable_frontiers(spark, tmp_path, name):
     ), "incomparable row emitted"
     stored = _stored_frontiers(spark, chk, keys)
     assert stored == _wanted_frontiers(spark, FILES[0] + FILES[1], keys)
+
+
+@pytest.mark.parametrize("name", sorted(OPERATORS))
+def test_cell_state_drops_incomparable_rows_of_older_state(
+    spark, tmp_path, monkeypatch, name
+):
+    # run 1 keys every row to a real cell, as the operator did before
+    # incomparable rows got cell -1, so its state holds NaN/NULL rows;
+    # run 2, the current code on the same checkpoint, must drop them
+    # when it reads that state back
+    op, keys = OPERATORS[name]
+    src, chk = str(tmp_path / "src"), str(tmp_path / "chk")
+    now = time.time()
+    _write_file(spark, src, "f0.parquet", FILES[0], now - 100)
+    with monkeypatch.context() as m:
+        m.setattr(stateful, "_has_values", lambda df, dims: F.lit(True))
+        assert _run(spark, op, src, chk)
+    _write_file(spark, src, "f1.parquet", FILES[1], now)
+    assert _run(spark, op, src, chk)
+
+    assert _stored_frontiers(spark, chk, keys) == _wanted_frontiers(
+        spark, FILES[0] + FILES[1], keys
+    )
 
 
 def test_stateful_cell_skyline_resumes_from_checkpoint(spark, tmp_path):
