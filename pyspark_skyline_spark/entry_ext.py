@@ -203,9 +203,9 @@ def _q_sessionize_events(spark, sf_dir):
 
 def _q_skyline_layers_orders(spark, sf_dir):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # project to the two layer dimensions before the peel loop (round
-    # 13, guide §4.1): every layer's grouped kernel, anti-join and
-    # checkpoint otherwise carries the full 9-column order rows
+    # project to the two layer dimensions first (round 13, guide
+    # §4.1): every kernel pass otherwise carries the full 9-column
+    # order rows
     orders = load_table(spark, sf_dir, "orders").select(
         "o_totalprice", "o_orderdate"
     )

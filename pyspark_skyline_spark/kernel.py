@@ -170,11 +170,28 @@ def find_skyline_mask(cols, senses, prune_rounds: int = 8) -> np.ndarray:
     return mask
 
 
-def _frontier_rows(pdf, dim_cols, senses):
+def _frontier_rows(pdf, dim_cols, senses, layers=0):
     """The rows of the pandas frame ``pdf`` on its skyline over the
     columns ``dim_cols``: the one kernel call of every Python pass of
-    the batch operator."""
-    return pdf[find_skyline_mask([pdf[c] for c in dim_cols], senses)]
+    the batch operator.
+
+    With ``layers``, the rows of its first ``layers`` skyline layers
+    instead, each labelled in the ``layer`` column (1 = the skyline,
+    i = the skyline once layers 1..i-1 are removed): one kernel call
+    per layer over the rows not yet labelled."""
+    if not layers:
+        return pdf[find_skyline_mask([pdf[c] for c in dim_cols], senses)]
+    cols = [pdf[c].to_numpy() for c in dim_cols]
+    label = np.zeros(len(pdf), dtype=np.int64)
+    rest = np.arange(len(pdf))
+    for layer in range(1, layers + 1):
+        if not len(rest):
+            break
+        front = find_skyline_mask([c[rest] for c in cols], senses)
+        label[rest[front]] = layer
+        rest = rest[~front]
+    kept = label > 0
+    return pdf[kept].assign(layer=label[kept])
 
 
 def _dominated_by(

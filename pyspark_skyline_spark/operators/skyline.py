@@ -46,7 +46,7 @@ from pyspark_skyline_spark.parser import parse_skyline_query
 
 __all__ = ["skyline", "skyline_sql", "skyline_antijoin", "skyline_layers", "skyline_witness", "representative_skyline", "windowed_skyline", "warm_up", "ALGORITHMS"]
 
-ALGORITHMS = ("MR_DIM", "MR_DIM_Q", "MR_GRID", "MR_ANGLE", "auto")
+ALGORITHMS = ("MR_DIM", "MR_GRID", "MR_ANGLE", "auto")
 
 _CELL = "__sky_cell"
 
@@ -222,27 +222,6 @@ def _mr_dim_key(vs, p: int):
     return _bucket(vs[0], p), p
 
 
-def _quantile_key(df: DataFrame, dims, p: int, relative_error: float = 0.01):
-    """Skew-resistant MR-DIM variant: cell boundaries from approximate
-    quantiles of the first dimension instead of equi-width over
-    (lo, hi) — equal-population cells regardless of the value
-    distribution (the reference's fixed-domain equi-width keying skews
-    with the data, SURVEY.md §4.3). Returns (key expr, ncells)."""
-    col0, _ = dims[0]
-    x = _numeric_expr(df, col0)
-    probs = [i / p for i in range(1, p)]
-    cuts = df.select(x.alias("__q")).approxQuantile("__q", probs, relative_error)
-    # strictly increasing cut points (duplicates collapse cells)
-    uniq: list[float] = []
-    for c in cuts:
-        if not uniq or c > uniq[-1]:
-            uniq.append(c)
-    key = F.lit(0).cast("long")
-    for c in uniq:
-        key = key + F.when(x > F.lit(float(c)), 1).otherwise(0)
-    return key, len(uniq) + 1
-
-
 def _mr_grid_key(vs, b: int):
     """MR-GRID packed cell id: per-dim min-space buckets, base-b packed
     (reference functions.py:76-135) as a native expression."""
@@ -394,8 +373,6 @@ def _default_param(algo: str, d: int, parallelism: int) -> int:
     target = max(2, parallelism) * 4  # a few cells per core for balance
     if algo == "MR_DIM":
         return min(target, 4096)
-    if algo == "MR_DIM_Q":
-        return min(target, 256)  # one WHEN per cut point: keep the chain sane
     if algo == "MR_GRID":
         b = 2
         while b**d - (b - 1) ** d < target and b**d < 2**31 and b < 64:
@@ -408,8 +385,9 @@ def _default_param(algo: str, d: int, parallelism: int) -> int:
     raise ValueError(f"unknown algorithm {algo!r}")
 
 
-def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=()):
-    """One per-(by + cell) skyline pass; keeps the cell col.
+def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=(), layers=0):
+    """One per-(by + cell) skyline pass (``_frontier_rows``, with
+    ``layers`` its first layers); keeps the cell col.
 
     The grouped kernel is Python/Arrow LATENCY-bound (per-group IPC
     round-trips), not byte-bound — but AQE coalesces the groupBy
@@ -438,14 +416,14 @@ def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=()):
         n = df_keyed.sparkSession.sparkContext.defaultParallelism
 
     def fn(pdf):
-        return _frontier_rows(pdf, dim_cols, senses)
+        return _frontier_rows(pdf, dim_cols, senses, layers)
 
     return (
         df_keyed.repartition(n, *keys).groupBy(*keys).applyInPandas(fn, schema=schema)
     )
 
 
-def _single_task_skyline(df: DataFrame, dim_cols, senses) -> DataFrame:
+def _single_task_skyline(df: DataFrame, dim_cols, senses, layers=0) -> DataFrame:
     """The whole skyline as ONE kernel call in one Python task, for an
     input of at most ``_SINGLE_TASK_ROWS`` rows. ``repartition(1)``
     rather than ``coalesce(1)``: the exchange carries at most that many
@@ -457,12 +435,13 @@ def _single_task_skyline(df: DataFrame, dim_cols, senses) -> DataFrame:
 
         pdfs = list(batches)
         if pdfs:
-            yield _frontier_rows(pd.concat(pdfs, ignore_index=True), dim_cols, senses)
+            pdf = pd.concat(pdfs, ignore_index=True)
+            yield _frontier_rows(pdf, dim_cols, senses, layers)
 
     return df.repartition(1).mapInPandas(fn, schema=df.schema)
 
 
-def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=()):
+def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=(), layers=0):
     """Combiner: reduce each Arrow batch with ONE batch-global kernel
     call BEFORE the shuffle, so the groupBy exchange only carries
     frontier candidates — the skyline analogue of map-side partial
@@ -480,11 +459,11 @@ def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=()):
             if len(pdf) == 0:
                 continue
             if not by:
-                yield _frontier_rows(pdf, dim_cols, senses)
+                yield _frontier_rows(pdf, dim_cols, senses, layers)
                 continue
             groups = pdf.groupby(list(by), dropna=False, sort=False).indices.values()
             yield pd.concat(
-                [_frontier_rows(pdf.iloc[g], dim_cols, senses) for g in groups]
+                [_frontier_rows(pdf.iloc[g], dim_cols, senses, layers) for g in groups]
             )
 
     return df_keyed.mapInPandas(fn, schema=schema)
@@ -599,7 +578,7 @@ def skyline(
         output, unlike the reference's coordinate-only structs)
     dims : list of ``(column, "min"|"max")`` or a query string
         ``"SKYLINE OF c1 MIN, c2 MAX"``
-    algo : MR_DIM | MR_DIM_Q | MR_GRID | MR_ANGLE | auto
+    algo : MR_DIM | MR_GRID | MR_ANGLE | auto
     partitions : fan-out parameter ``p`` (algorithm-specific, see
         reference README.md:47-60); derived from cluster parallelism
         when None
@@ -625,11 +604,11 @@ def skyline(
     ``bounds`` runs none, and a named algorithm keeps the reference's
     partitioning scheme at any size. Every other query is partitioned.
     Only this plan pays the per-dimension bounds aggregate
-    (``_compute_bounds``), and not with ``bounds`` or ``MR_DIM_Q``,
-    whose cells come from quantiles. It is keyed and reduced per cell,
-    then merged by one size-driven decision, read from ONE Catalyst
-    size estimate ``est`` of the input (``_estimated_bytes``; 0 when it
-    fails) and the dimension count ``d``:
+    (``_compute_bounds``), and not with ``bounds``. It is keyed and
+    reduced per cell, then merged by one size-driven decision, read
+    from ONE Catalyst size estimate ``est`` of the input
+    (``_estimated_bytes``; 0 when it fails) and the dimension count
+    ``d``:
 
     * **combiner** — iff ``est > _LARGE_INPUT_BYTES`` (4 GiB), each
       Arrow batch is reduced to its frontier before the shuffle
@@ -653,6 +632,14 @@ def skyline(
       at a time and re-run the kernel until one group remains; also
       the fallback past the cap, whose candidates are never collected.
 
+    ``skyline_layers`` runs this same plan with every kernel pass
+    keeping its group's first ``n_layers`` layers instead of its
+    skyline. Three steps can only drop dominated rows, so its plan
+    skips them: the anti-join tier (NOT EXISTS expresses layer 1 only;
+    the single task takes its inputs), MR_GRID's dominated-cell prune
+    (a dominated cell can hold layer-2 rows) and the probe with its
+    broadcast filter (which drops every dominated row).
+
     Rows with NULL or NaN in any skyline dimension are excluded, the
     rule the whole skyline family shares (``_comparable``).
     """
@@ -667,15 +654,19 @@ def _skyline(
     bounds: dict[str, tuple[float, float]] | None = None,
     by: list[str] | None = None,
     n: int | None = None,
+    layers: int = 0,
 ) -> DataFrame:
     """``skyline()``, for in-package callers that already know ``n``,
     the comparable row count of ``df``: passing it skips the count that
-    picks the size tier. Read only when ``skyline()`` plans on its own."""
+    picks the size tier. Read only when ``skyline()`` plans on its own.
+    ``layers`` > 0 is ``skyline_layers``: every kernel pass keeps and
+    labels its first ``layers`` layers, in the ``layer`` column that
+    ``df`` must carry."""
     dims = _normalize_dims(dims)
     d = len(dims)
     self_planned = algo == "auto" and partitions is None and not by and bounds is None
     algo = _pick_algo(algo, d)
-    if algo not in ("MR_DIM", "MR_DIM_Q", "MR_GRID", "MR_ANGLE"):
+    if algo not in ("MR_DIM", "MR_GRID", "MR_ANGLE"):
         raise ValueError(f"algo must be one of {ALGORITHMS}, got {algo!r}")
     df = _comparable(df, dims)
     dim_cols = [c for c, _ in dims]
@@ -684,7 +675,7 @@ def _skyline(
     if self_planned:
         if n is None:
             n = df.count()
-        if n <= _ANTIJOIN_MAX:
+        if n <= _ANTIJOIN_MAX and not layers:
             # the join's output keeps its streamed side's partitions, so
             # coalesce to k first: each task compares its rows with all
             # n, so its work is (n/k)·n, and k gives the cap
@@ -693,27 +684,24 @@ def _skyline(
             k = max(1, math.ceil(par * (n / _ANTIJOIN_MAX) ** 2))
             return _antijoin(df.coalesce(k), dims)
         if n <= _SINGLE_TASK_ROWS:
-            return _single_task_skyline(df, dim_cols, senses)
+            return _single_task_skyline(df, dim_cols, senses, layers)
 
     spark = df.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
     p = partitions or _default_param(algo, d, parallelism)
 
-    if algo == "MR_DIM_Q":
-        key, ncells = _quantile_key(df, dims, p)
+    if bounds is None:
+        bounds = _compute_bounds(df, dims)
+    vs = _minspace_exprs(df, dims, bounds)
+    if algo == "MR_DIM":
+        key, ncells = _mr_dim_key(vs, p)
+    elif algo == "MR_GRID":
+        key, ncells = _mr_grid_key(vs, p)
     else:
-        if bounds is None:
-            bounds = _compute_bounds(df, dims)
-        vs = _minspace_exprs(df, dims, bounds)
-        if algo == "MR_DIM":
-            key, ncells = _mr_dim_key(vs, p)
-        elif algo == "MR_GRID":
-            key, ncells = _mr_grid_key(vs, p)
-        else:
-            key, ncells = _mr_angle_key(vs, p)
+        key, ncells = _mr_angle_key(vs, p)
 
     keyed = df.withColumn(_CELL, key)
-    if algo == "MR_GRID" and d > 1:
+    if algo == "MR_GRID" and d > 1 and not layers:
         # Dominated-cell pruning: rows in cells strictly dominated by a
         # nonempty cell can never be skyline points (per group when
         # ``by`` is set — dominance never crosses groups).
@@ -764,12 +752,12 @@ def _skyline(
     if large:
         # pre-shuffle combiner: the exchange only carries per-batch
         # frontier survivors, not the whole table
-        keyed = _map_side_prereduce(keyed, dim_cols, senses, by)
+        keyed = _map_side_prereduce(keyed, dim_cols, senses, by, layers)
 
-    out = _local_skyline_pass(keyed, dim_cols, senses, by)
+    out = _local_skyline_pass(keyed, dim_cols, senses, by, layers)
 
     probe = not (d <= 4 and 0 < est <= _LARGE_INPUT_BYTES)
-    if probe and not by and ncells > 1:
+    if probe and not by and ncells > 1 and not layers:
         # Adaptive global merge: materialize the (small relative to the
         # input) local frontiers once, then pick the merge shape by
         # candidate count. The lazy checkpoint materializes inside the
@@ -787,7 +775,7 @@ def _skyline(
     while ncells > 1:
         ncells = max(1, math.ceil(ncells / _MERGE_FANOUT))
         out = out.withColumn(_CELL, F.pmod(F.col(_CELL), F.lit(ncells)))
-        out = _local_skyline_pass(out, dim_cols, senses, by)
+        out = _local_skyline_pass(out, dim_cols, senses, by, layers)
 
     return out.drop(_CELL)
 
@@ -1062,12 +1050,21 @@ def skyline_layers(
     without a scoring function; the iterative extension of the
     reference's single-layer operator).
 
-    Driver loop of ``n_layers`` skyline passes; each peel removes the
-    current frontier with a broadcast anti-join on the dimension
-    columns (a frontier is small relative to its dataset — broadcasting
-    it is the scale-correct join side). The shrinking remainder is
-    localCheckpointed per round so plan depth stays O(1) per layer
-    instead of O(layers) nested anti-joins.
+    Runs ``skyline()``'s own plan (``skyline_kwargs`` as there), with
+    every kernel pass keeping the rows whose layer within its group is
+    at most ``n_layers`` and writing that layer into ``layer``. This is
+    exact, because a row's layer is the length of the longest dominance
+    chain that ends at it:
+
+    * a chain inside a group is a chain of the whole input, so a row's
+      layer within its group is never above its global layer: keeping
+      local layers <= k keeps every row of global layer <= k, together
+      with all of its lower-layer dominators;
+    * a row of global layer above k keeps the first k members of its
+      longest chain, so the final single group labels it above k and
+      drops it.
+
+    This holds at every fold level, and with the salt and the combiner.
 
     Returns the rows of the first ``n_layers`` layers with a ``layer``
     column (1-based). Rows tied on all dimension columns land in the
@@ -1075,34 +1072,5 @@ def skyline_layers(
     """
     if n_layers <= 0:
         raise ValueError("n_layers must be positive")
-    dims_n = _normalize_dims(dims)
-    dim_cols = [c for c, _ in dims_n]
-    # one bounds pass for all peels: bounds only need to CONTAIN the
-    # data, and every remainder is a subset of df — saves one agg job
-    # per layer
-    if skyline_kwargs.get("bounds") is None:
-        skyline_kwargs["bounds"] = _compute_bounds(_comparable(df, dims_n), dims_n)
-    remainder = df
-    out: DataFrame | None = None
-    for layer in range(1, n_layers + 1):
-        # checkpoint each frontier: it feeds BOTH the peel anti-join and
-        # the final union, and without the lineage cut the whole
-        # local-pass + merge pipeline re-executes per consumer (round-13
-        # profile: the final union re-ran every layer's kernel passes).
-        # A frontier is small relative to its dataset, so materializing
-        # it is cheap; measured, the checkpointed loop is 3.4 s vs 4.5 s
-        # without at sf0.1.
-        front = skyline(remainder, dims_n, algo=algo, **skyline_kwargs).localCheckpoint(
-            eager=False
-        )
-        tagged = front.withColumn("layer", F.lit(layer).cast("long"))
-        out = tagged if out is None else out.unionByName(tagged)
-        if layer == n_layers:
-            break
-        # remove every row coordinate-tied with a frontier member: the
-        # next layer is the skyline of what remains
-        keys = front.select(*dim_cols).dropDuplicates()
-        remainder = remainder.join(
-            F.broadcast(keys), dim_cols, "left_anti"
-        ).localCheckpoint(eager=False)
-    return out
+    df = df.withColumn("layer", F.lit(0).cast("long"))
+    return _skyline(df, dims, algo, layers=n_layers, **skyline_kwargs)

@@ -113,18 +113,6 @@ def test_partition_param_invariance(lineitem):
         assert spark_skyline_set(lineitem, dims, algo=algo, partitions=p) == base, (algo, p)
 
 
-def test_quantile_keying_equivalent_on_skewed_data(spark):
-    # heavily skewed first dim: equi-width would put ~everything in one
-    # cell; quantile keying must still give the exact same skyline
-    import math
-    rows = [(math.exp(i / 50.0), float(i % 97)) for i in range(3000)]
-    df = spark.createDataFrame(rows, "a double, b double")
-    dims = [("a", "min"), ("b", "min")]
-    base = spark_skyline_set(df, dims, algo="MR_DIM")
-    assert spark_skyline_set(df, dims, algo="MR_DIM_Q") == base
-    assert spark_skyline_set(df, dims, algo="MR_DIM_Q", partitions=7) == base
-
-
 def test_grid_pruning_all_sense_combos_d3(spark, sf_dir):
     # SURVEY §7.3 risk: MR_GRID best-corner pruning under mixed MIN/MAX;
     # differential vs MR_DIM over all 8 sense combinations at d=3
@@ -305,6 +293,139 @@ def test_skyline_layers_properties(spark):
         for p in by_layer.get(i, ()):
             assert any(dominated(p, q) for q in by_layer[i - 1])
             assert not any(dominated(p, q) for q in by_layer[i])
+
+
+def brute_layers(rows, dim_idx, senses, k, group=lambda r: None):
+    """Brute-force onion peel over ``rows`` (tuples): the multiset of
+    ``(*row, layer)`` for the first ``k`` layers, peeled per ``group``
+    key; rows with a NULL or NaN dimension are excluded."""
+
+    def better(q, p):
+        no_worse = all(
+            (q[i] <= p[i]) if s == "min" else (q[i] >= p[i])
+            for i, s in zip(dim_idx, senses)
+        )
+        return no_worse and any(q[i] != p[i] for i in dim_idx)
+
+    def has_values(r):
+        return all(r[i] is not None and r[i] == r[i] for i in dim_idx)
+
+    groups = {}
+    for r in filter(has_values, rows):
+        groups.setdefault(group(r), []).append(r)
+    out = []
+    for rest in groups.values():
+        for layer in range(1, k + 1):
+            front = [p for p in rest if not any(better(q, p) for q in rest)]
+            out += [(*p, layer) for p in front]
+            rest = [p for p in rest if any(better(q, p) for q in rest)]
+    return sorted(out, key=repr)
+
+
+def test_skyline_layers_grouped_peel_stays_in_group(spark):
+    """A layer-1 row of one group does not remove an equal-coordinate
+    row of another group: group B keeps (1, 1) as its layer 2."""
+    from pyspark_skyline_spark.operators.skyline import skyline_layers
+
+    df = spark.createDataFrame(
+        [("A", 1, 1), ("B", 0, 0), ("B", 1, 1)], "g string, x long, y long"
+    )
+    out = skyline_layers(df, [("x", "min"), ("y", "min")], n_layers=2, by=["g"])
+    assert sorted(map(tuple, out.collect())) == [
+        ("A", 1, 1, 1),
+        ("B", 0, 0, 1),
+        ("B", 1, 1, 2),
+    ]
+
+
+# (merge_policy constants, est, skyline kwargs, ran counters that name
+# the plan) per plan that ``skyline_layers`` can take
+LAYER_PLANS = {
+    "single_task": ({}, None, {}, {"single": 1, "antijoin": 0, "local_pass": 0}),
+    "partitioned_salted": (PARTITIONED, 1, {"partitions": 2}, {"single": 0}),
+    "MR_DIM": (PARTITIONED, 1, {"algo": "MR_DIM"}, {"single": 0}),
+    "MR_GRID": (PARTITIONED, 1, {"algo": "MR_GRID"}, {"single": 0}),
+    "MR_ANGLE": (PARTITIONED, 1, {"algo": "MR_ANGLE"}, {"single": 0}),
+    # the size policy would probe and broadcast here: layers skip both
+    "combiner": (
+        {**PIN_BROADCAST, "_LARGE_INPUT_BYTES": -1},
+        1,
+        {},
+        {"combiner": 1, "probe": 0, "broadcast": 0},
+    ),
+    "by": (PARTITIONED, 1, {"by": ["g"]}, {"single": 0}),
+}
+
+
+@pytest.mark.parametrize("n_layers", [2, 40])
+@pytest.mark.parametrize("plan", list(LAYER_PLANS))
+def test_skyline_layers_match_brute_force_peel(spark, merge_policy, plan, n_layers):
+    """Every plan labels the same rows with the same layers as a
+    brute-force peel: ties on a small coordinate domain, exact
+    duplicates, NULL and NaN rows, mixed senses, a NULL group, and 40
+    layers, deeper than the input. Partitioned plans fold local layer
+    sets through more than one kernel pass."""
+    import random
+
+    from pyspark_skyline_spark.operators.skyline import skyline_layers
+
+    consts, est, kwargs, expect = LAYER_PLANS[plan]
+    rng = random.Random(23)
+    nan = float("nan")
+    rows = [
+        (
+            i,
+            rng.choice(["a", "b", None]),
+            float(rng.randrange(7)),
+            rng.randrange(7),
+            float(rng.randrange(7)),
+        )
+        for i in range(300)
+    ]
+    rows += rows[:12]  # exact duplicates, id included
+    rows += [(900, "a", nan, 1, 1.0), (901, "b", 1.0, None, 1.0), (902, None, None, 2, nan)]
+    df = spark.createDataFrame(rows, "id long, g string, x double, y long, z double")
+    dims = [("x", "min"), ("y", "max"), ("z", "min")]
+    group = (lambda r: r[1]) if "by" in kwargs else (lambda r: None)
+    want = brute_layers(rows, [2, 3, 4], ["min", "max", "min"], n_layers, group)
+    with merge_policy(est=est, **consts) as ran:
+        got = skyline_layers(df, dims, n_layers=n_layers, **kwargs).collect()
+    assert sorted(map(tuple, got), key=repr) == want
+    assert {k: ran[k] for k in expect} == expect
+    if plan != "single_task":
+        assert ran["local_pass"] >= 2  # at least one fold over local layers
+    if n_layers == 2:
+        assert max(r[-1] for r in want) == 2 and len(want) < len(rows) - 3
+    else:
+        assert max(r[-1] for r in want) < n_layers and len(want) == len(rows) - 3
+
+
+def test_skyline_layers_job_budget(spark, merge_policy):
+    """On a single-task-sized input, the Spark jobs of a layers query
+    do not grow with ``n_layers``: one plan labels every layer."""
+    from pyspark_skyline_spark.operators.skyline import skyline_layers
+
+    df = spark.range(0, 2000).select(
+        F.pmod(F.xxhash64("id"), F.lit(40)).alias("x"),
+        F.pmod(F.xxhash64("id", F.lit(1)), F.lit(40)).alias("y"),
+    )
+    dims = [("x", "min"), ("y", "min")]
+    sc = spark.sparkContext
+
+    def run(k):
+        group = f"layers-{k}"
+        sc.setJobGroup(group, group)
+        try:
+            with merge_policy() as ran:
+                rows = skyline_layers(df, dims, n_layers=k).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return jobs, ran["single"], max(r.layer for r in rows)
+
+    runs = [run(k) for k in (1, 4, 8)]
+    assert runs[0][0] == runs[1][0] == runs[2][0] >= 1
+    assert runs == [(runs[0][0], 1, k) for k in (1, 4, 8)]
 
 
 def test_grouped_grid_prune_keeps_null_group_keys(spark):
@@ -606,9 +727,9 @@ def test_single_task_gate_differential(spark, merge_policy):
     the partitioned plan, and returns the same multiset as the
     partitioned plan, over exact duplicates, mixed senses and
     date/timestamp dimensions. Only the partitioned plan pays the
-    bounds aggregate, and not for ``MR_DIM_Q``. An explicit algo,
-    ``partitions``, ``by`` or ``bounds`` stays partitioned, and the row
-    count costs the jobs of a plain ``count()`` and nothing more."""
+    bounds aggregate. An explicit algo, ``partitions``, ``by`` or
+    ``bounds`` stays partitioned, and the row count costs the jobs of a
+    plain ``count()`` and nothing more."""
     import datetime as dt
     import random
 
@@ -668,7 +789,6 @@ def test_single_task_gate_differential(spark, merge_policy):
     for kw in (
         {"algo": "MR_ANGLE"},
         {"algo": "MR_DIM"},
-        {"algo": "MR_DIM_Q"},  # cells from quantiles: no bounds aggregate
         {"partitions": 4},
         {"by": ["g"]},  # one group: the grouped frontier is the frontier
         {"bounds": bounds},
@@ -676,7 +796,7 @@ def test_single_task_gate_differential(spark, merge_policy):
         with merge_policy(**caps) as ran:
             got = bag(skyline(df, dims, **kw))
         assert paths(ran) == (0, 0, 1), kw
-        assert ran["bounds"] == int(not ("bounds" in kw or kw.get("algo") == "MR_DIM_Q")), kw
+        assert ran["bounds"] == int("bounds" not in kw), kw
         assert got == want, kw
 
     # empty input, and an input whose rows are all incomparable
