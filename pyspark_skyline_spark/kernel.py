@@ -23,15 +23,20 @@ reference's tuple-at-a-time Python loop, we
 2. pre-prune with a few pivot passes (each pivot is a guaranteed
    skyline point; everything it dominates dies in one vectorized sweep),
 3. run a single-pass incremental BNL over the survivors in ascending
-   dimension-sum order — in that order a later point can never dominate
-   an earlier kept one (dominance implies a strictly smaller sum), so
-   the kept set only grows and one pass suffices. Candidates go in
-   chunks of at most ``_CHUNK_ROWS``; each chunk is screened first
-   against the ``_PREFIX_ROWS`` smallest-sum kept rows, the strongest
-   dominators (the pivot pre-prune's idea, per chunk), and only its
-   survivors meet the rest of the kept set. Every (rows x kept-rows)
-   boolean temporary stays within ``_SCREEN_CELLS``, the one memory
-   budget of every caller of ``_dominated_by``.
+   dimension-sum order, equal sums in lexicographic order — in that
+   order a later point can never dominate an earlier kept one (a
+   dominator has a no larger float sum and, on an equal sum, is
+   lexicographically smaller), so the kept set only grows and one pass
+   suffices. Candidates go in chunks of at most ``_CHUNK_ROWS``; each
+   chunk is screened first against the ``_PREFIX_ROWS`` smallest-sum
+   kept rows, the strongest dominators (the pivot pre-prune's idea, per
+   chunk), and only its survivors meet the rest of the kept set. Every
+   (rows x kept-rows) boolean temporary stays within ``_SCREEN_CELLS``,
+   the one memory budget of every dominance screen.
+
+The k-skyband (``find_skyband_counts``, the rows with fewer than k
+dominators) runs the same BNL, with a screen that counts dominators
+instead of finding one.
 """
 
 from __future__ import annotations
@@ -40,7 +45,7 @@ import datetime
 
 import numpy as np
 
-__all__ = ["to_min_space", "find_skyline_mask", "skyline_of_array"]
+__all__ = ["to_min_space", "find_skyline_mask", "find_skyband_counts", "skyline_of_array"]
 
 #: senses accepted for each dimension
 MIN, MAX = "min", "max"
@@ -102,19 +107,16 @@ def find_skyline_mask(cols, senses, prune_rounds: int = 8) -> np.ndarray:
     prune_rounds : pivot pre-prune passes before the BNL (0 disables)
     """
     a = _min_matrix(cols, senses)
-    n, d = a.shape
+    n = len(a)
     mask = np.zeros(n, dtype=bool)
     if n == 0:
         return mask
-
-    sums = a.sum(axis=1)
-    order = np.argsort(sums, kind="stable")
-    s = a[order]  # rows in ascending sum order
-    ssum = sums[order]  # non-decreasing; same summation tree as kernels
+    order, ssum = _sum_order(a)
+    s = a[order]
 
     alive = np.ones(n, dtype=bool)
-    # Pivot pre-prune: the first alive row in sum order is a guaranteed
-    # skyline point (any dominator would have a smaller sum and, by
+    # Pivot pre-prune: the first alive row in ``_sum_order`` is a
+    # guaranteed skyline point (any dominator would come earlier and, by
     # transitivity, would have killed this row already). One vectorized
     # sweep removes everything it dominates.
     start = 0
@@ -130,75 +132,146 @@ def find_skyline_mask(cols, senses, prune_rounds: int = 8) -> np.ndarray:
         alive &= ~dead
         start += 1
 
-    # Chunked incremental BNL over survivors, ascending sum order: the
-    # kept set only grows (a later point can never dominate an earlier
-    # kept one), so candidates are screened chunk-at-a-time against the
-    # kept rows (``_dominated_by``: smallest sums first), then pairwise
-    # within the chunk. Chunking turns n Python iterations into n/m (the
-    # difference between 37 s and seconds at d=10 frontiers of ~25k).
-    idx_alive = np.nonzero(alive)[0]
-    kept_rows = np.empty((len(idx_alive), d), dtype=np.float64)
-    kept_sums = np.empty(len(idx_alive), dtype=np.float64)
-    k = 0
-    kept_src: list[np.ndarray] = []
-    pos = 0
-    while pos < len(idx_alive):
-        m = max(32, min(_CHUNK_ROWS, _SCREEN_CELLS // max(k, 1)))
-        chunk_idx = idx_alive[pos : pos + m]
-        pos += m
-        C = s[chunk_idx]  # (m, d)
-        sC = ssum[chunk_idx]
-        dom = _dominated_by(C, kept_rows[:k], sC, kept_sums[:k])
-        surv = np.nonzero(~dom)[0]
-        if len(surv) == 0:
-            continue
-        Cs = C[surv]
-        sCs = sC[surv]
-        # within-chunk pairwise (sound to use surviving chunk rows as
-        # dominators: a non-survivor's dominators dominate its victims
-        # too, by transitivity, and were already checked above)
-        dom2 = _dominated_by(Cs, Cs, sCs, sCs)
-        final = surv[~dom2]
-        if len(final):
-            kept_rows[k : k + len(final)] = C[final]
-            kept_sums[k : k + len(final)] = sC[final]
-            k += len(final)
-            kept_src.append(chunk_idx[final])
-
-    if kept_src:
-        mask[order[np.concatenate(kept_src)]] = True
+    kept, _ = _bnl(s, ssum, np.nonzero(alive)[0], 1, _screen)
+    mask[order[kept]] = True
     return mask
 
 
-def _frontier_rows(pdf, dim_cols, senses, layers=0):
+def find_skyband_counts(cols, senses, k: int) -> np.ndarray:
+    """Dominator count of each row (original row order), exact for the
+    rows with fewer than ``k`` dominators, the k-skyband (k = 1 is the
+    skyline); every other row reads ``k``. Arguments as in
+    ``find_skyline_mask``.
+
+    One BNL pass counts each row against the band rows kept before it
+    (``_bnl``). That is exact: every dominator of a band row is itself a
+    band row, and a row with a non-band dominator has at least ``k``
+    band-row dominators (those of a dominance-minimal non-band
+    dominator), so it is dropped."""
+    a = _min_matrix(cols, senses)
+    out = np.full(len(a), k, dtype=np.int64)
+    if len(a) == 0:
+        return out
+    order, ssum = _sum_order(a)
+    kept, cnt = _bnl(a[order], ssum, np.arange(len(a)), k, _count_screen)
+    out[order[kept]] = cnt
+    return out
+
+
+def _sum_order(a: np.ndarray):
+    """Row order of ``a`` by ascending row sum, rows of equal sum in
+    lexicographic order, and the sums in that order. A dominator is
+    all-≤ its victim, so its float sum is never larger (rounding is
+    monotone) and, on an equal sum, it is lexicographically smaller: in
+    this order every dominator comes before its victim. Only the rows
+    whose sum ties a neighbour are re-sorted, with one ``np.lexsort``
+    over them (a full lexsort costs about 8 argsorts)."""
+    sums = a.sum(axis=1)
+    order = np.argsort(sums, kind="stable")
+    ssum = sums[order]
+    same = ssum[1:] == ssum[:-1]
+    if same.any():
+        tie = np.zeros(len(order), dtype=bool)
+        tie[1:] = same
+        tie[:-1] |= same
+        t = order[tie]
+        order[tie] = t[np.lexsort((*a[t].T[::-1], sums[t]))]
+    return order, ssum
+
+
+def _bnl(s, ssum, rows, k, screen):
+    """Chunked incremental BNL over the ``rows`` of ``s`` (rows in
+    ``_sum_order``, their sums ``ssum``): the positions of the rows with
+    fewer than ``k`` dominators among ``rows``, and those counts.
+    ``screen`` is ``_screen`` (k = 1, the skyline) or ``_count_screen``.
+
+    In this order a row's dominators all come before it, so the kept set
+    only grows: candidates are counted chunk-at-a-time against the kept
+    rows (``_screen_tiles``: smallest sums first), then the survivors
+    among themselves. A dropped row dominates no survivor (its ``k``
+    kept dominators would dominate the survivor too, and drop it), so a
+    survivor's count over the kept rows and the chunk's survivors is
+    exact. Chunking turns n Python iterations into n/m (the difference
+    between 37 s and seconds at d=10 frontiers of ~25k)."""
+    d = s.shape[1]
+    kept_rows = np.empty((len(rows), d), dtype=np.float64)
+    kept_sums = np.empty(len(rows), dtype=np.float64)
+    n = 0
+    kept_src: list[np.ndarray] = []
+    kept_cnt: list[np.ndarray] = []
+    pos = 0
+    while pos < len(rows):
+        m = max(32, min(_CHUNK_ROWS, _SCREEN_CELLS // max(n, 1)))
+        chunk = rows[pos : pos + m]
+        pos += m
+        C = s[chunk]  # (m, d)
+        sC = ssum[chunk]
+        cnt = _screen_tiles(C, kept_rows[:n], sC, kept_sums[:n], k, screen)
+        surv = np.nonzero(cnt < k)[0]
+        if len(surv) == 0:
+            continue
+        Cs, sCs = C[surv], sC[surv]
+        cnt = cnt[surv] + _screen_tiles(Cs, Cs, sCs, sCs, k, screen)
+        final = cnt < k
+        if final.any():
+            kept = surv[final]
+            kept_rows[n : n + len(kept)] = C[kept]
+            kept_sums[n : n + len(kept)] = sC[kept]
+            n += len(kept)
+            kept_src.append(chunk[kept])
+            kept_cnt.append(cnt[final])
+    if not kept_src:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    return np.concatenate(kept_src), np.concatenate(kept_cnt)
+
+
+def _frontier_rows(pdf, dim_cols, senses, rank=None):
     """The rows of the pandas frame ``pdf`` on its skyline over the
     columns ``dim_cols``: the one kernel call of every Python pass of
     the batch operator.
 
-    With ``layers``, the rows of its first ``layers`` skyline layers
-    instead, each labelled in the ``layer`` column (1 = the skyline,
-    i = the skyline once layers 1..i-1 are removed): one kernel call
-    per layer over the rows not yet labelled."""
-    if not layers:
+    With ``rank = (kind, bound, col)``, the rows ranked within
+    ``bound`` instead, each with its rank in column ``col``:
+
+    * ``("layer", n, col)``: the rows of its first ``n`` skyline layers
+      (1 = the skyline, i = the skyline once layers 1..i-1 are removed),
+      one ``find_skyline_mask`` call per layer over the rows not yet
+      labelled;
+    * ``("band", k, col)``: the rows with fewer than ``k`` dominators,
+      with that count, from one ``find_skyband_counts`` call."""
+    if rank is None:
         return pdf[find_skyline_mask([pdf[c] for c in dim_cols], senses)]
+    kind, bound, col = rank
     cols = [pdf[c].to_numpy() for c in dim_cols]
-    label = np.zeros(len(pdf), dtype=np.int64)
-    rest = np.arange(len(pdf))
-    for layer in range(1, layers + 1):
-        if not len(rest):
-            break
-        front = find_skyline_mask([c[rest] for c in cols], senses)
-        label[rest[front]] = layer
-        rest = rest[~front]
-    kept = label > 0
-    return pdf[kept].assign(layer=label[kept])
+    if kind == "band":
+        value = find_skyband_counts(cols, senses, bound)
+        kept = value < bound
+    else:
+        value = np.zeros(len(pdf), dtype=np.int64)
+        rest = np.arange(len(pdf))
+        for layer in range(1, bound + 1):
+            if not len(rest):
+                break
+            front = find_skyline_mask([c[rest] for c in cols], senses)
+            value[rest[front]] = layer
+            rest = rest[~front]
+        kept = value > 0
+    return pdf[kept].assign(**{col: value[kept]})
 
 
 def _dominated_by(
     C: np.ndarray, K: np.ndarray, sC: np.ndarray, sK: np.ndarray
 ) -> np.ndarray:
     """For each row of C (m, d): is it dominated by any row of K (k, d)
-    in min-space?
+    in min-space? Contract as in ``_screen_tiles``."""
+    return _screen_tiles(C, K, sC, sK, 1, _screen) > 0
+
+
+def _screen_tiles(C, K, sC, sK, cap, screen) -> np.ndarray:
+    """For each row of C (m, d): how many rows of K (k, d) dominate it
+    in min-space, exact below ``cap``; a row leaves the screen once its
+    count reaches ``cap``. ``screen`` is ``_screen`` (does any row of a
+    block dominate: a count capped at 1) or ``_count_screen``.
 
     Requires ``sK`` non-decreasing (K sorted by row sum) and ``sC``/
     ``sK`` computed by the same ``np.sum(axis=1)`` over the same d, so
@@ -207,15 +280,15 @@ def _dominated_by(
 
     K is screened in column tiles, smallest sums first. The first tile
     is the ``_PREFIX_ROWS`` smallest-sum rows, the strongest dominators:
-    on a large frontier they kill most dominated rows, so only the
-    survivors meet the rest of K, in one tile as wide as the budget
-    allows for them. Every tile is screened in row blocks of at most
-    ``_SCREEN_CELLS`` pairs (``_screen``).
+    on a large frontier they settle most dominated rows, so only the
+    rows still below ``cap`` meet the rest of K, in one tile as wide as
+    the budget allows for them. Every tile is screened in row blocks of
+    at most ``_SCREEN_CELLS`` pairs.
     """
     m = len(C)
-    dom = np.zeros(m, dtype=bool)
+    cnt = np.zeros(m, dtype=np.int64)
     if m == 0:
-        return dom
+        return cnt
     k = int(np.searchsorted(sK, sC.max(), side="right"))
     live = np.arange(m)
     lo = 0
@@ -225,29 +298,24 @@ def _dominated_by(
             width = max(width, _SCREEN_CELLS // len(live))
         hi = min(k, lo + width)
         step = max(1, _SCREEN_CELLS // (hi - lo))
-        hit = np.concatenate(
-            [
-                _screen(C[b], K[lo:hi], sC[b], sK[lo:hi])
-                for b in (live[i : i + step] for i in range(0, len(live), step))
-            ]
-        )
-        dom[live[hit]] = True
-        live = live[~hit]
+        for i in range(0, len(live), step):
+            b = live[i : i + step]
+            cnt[b] += screen(C[b], K[lo:hi], sC[b], sK[lo:hi])
+        live = live[cnt[live] < cap]
         lo = hi
-    return dom
+    return cnt
 
 
-def _screen(
-    C: np.ndarray, K: np.ndarray, sC: np.ndarray, sK: np.ndarray
-) -> np.ndarray:
-    """``_dominated_by`` for one (C rows x K rows) block: only the
-    all-≤ matrix ``le`` is materialized ((m, k) bools, dimension at a
-    time); the strictness test collapses to a ``searchsorted`` prefix
-    bound plus a tiny equal-sum band check."""
+def _all_le(C: np.ndarray, K: np.ndarray, sC: np.ndarray, sK: np.ndarray):
+    """``(le, k)``: ``k`` counts the K rows with a sum up to
+    ``sC.max()``, and ``le`` is the (m, k) boolean matrix of the pairs
+    where that K row is ≤ the C row in every dimension, built a
+    dimension at a time. ``le`` is None when no pair can be all-≤
+    (checked after two dimensions)."""
     m, d = C.shape
     k = int(np.searchsorted(sK, sC.max(), side="right"))
     if k == 0:
-        return np.zeros(m, dtype=bool)
+        return None, 0
     # contiguous per-dimension rows: K[:, j] on a C-contiguous (k, d)
     # matrix strides d*8 bytes, so the broadcasted compare would touch a
     # full cache line per element — one transposed copy (k*d*8 bytes)
@@ -259,7 +327,21 @@ def _screen(
         np.less_equal(KT[j][None, :], C[:, j][:, None], out=cmp)
         le &= cmp
         if j == 1 and not le.any():
-            return np.zeros(m, dtype=bool)
+            return None, k
+    return le, k
+
+
+def _screen(
+    C: np.ndarray, K: np.ndarray, sC: np.ndarray, sK: np.ndarray
+) -> np.ndarray:
+    """``_dominated_by`` for one (C rows x K rows) block: only the
+    all-≤ matrix is materialized (``_all_le``); the strictness test
+    collapses to a ``searchsorted`` prefix bound plus a tiny equal-sum
+    band check."""
+    m = len(C)
+    le, k = _all_le(C, K, sC, sK)
+    if le is None:
+        return np.zeros(m, dtype=bool)
     first = le.argmax(axis=1)  # first all-≤ K row (0 when none)
     any_le = le[np.arange(m), first]
     lo = np.searchsorted(sK[:k], sC, side="left")
@@ -267,37 +349,61 @@ def _screen(
     # Equal-float-sum band: all-≤ + any coordinate difference ⇒ strict
     # somewhere ⇒ dominance. (All-≤ rows beyond the band would need a
     # larger sum, contradicting monotone summation, so none exist.)
-    # Only the pairs that are both all-≤ and inside the row's window reach
-    # the coordinate compare. Narrow windows (distinct sums: within a
-    # chunk each row's window is itself) are enumerated pair by pair;
-    # wide ones (a constant-sum input puts every row in one window) are
-    # cut out of ``le`` as one masked block: enumerating costs several
-    # int64 arrays per pair, the block a few boolean passes per cell,
-    # hence the factor 8.
-    band = np.nonzero(any_le & ~dom)[0]
-    if len(band):
-        b_lo = lo[band]
-        b_hi = np.searchsorted(sK[:k], sC[band], side="right")
-        cnt = b_hi - b_lo
-        total = int(cnt.sum())
-        if total:
-            c0, c1 = int(b_lo.min()), int(b_hi.max())
-            if total * 8 < len(band) * (c1 - c0):
-                rows = np.repeat(band, cnt)
-                ends = np.cumsum(cnt)
-                cols = np.arange(total) - np.repeat(ends - cnt - b_lo, cnt)
-                keep = le[rows, cols]
-                rows, cols = rows[keep], cols[keep]
-            else:
-                span = np.arange(c0, c1)
-                win = le[band, c0:c1]  # a copy: masked in place below
-                win &= span >= b_lo[:, None]
-                win &= span < b_hi[:, None]
-                r, cols = np.nonzero(win)
-                rows, cols = band[r], cols + c0
-            hit = (K[cols] != C[rows]).any(axis=1)
-            dom[rows[hit]] = True
+    rows, cols = _band_pairs(le, sK[:k], sC, np.nonzero(any_le & ~dom)[0], lo)
+    dom[rows[(K[cols] != C[rows]).any(axis=1)]] = True
     return dom
+
+
+def _count_screen(
+    C: np.ndarray, K: np.ndarray, sC: np.ndarray, sK: np.ndarray
+) -> np.ndarray:
+    """``_screen``'s count twin: for each C row, the number of rows of
+    the block that dominate it. An all-≤ K row dominates unless it is
+    identical (all-≤ rows beyond the equal-sum band would need a larger
+    sum), and identical rows share the sum, so the count is the all-≤
+    count less the identical rows of the band."""
+    m = len(C)
+    le, k = _all_le(C, K, sC, sK)
+    if le is None:
+        return np.zeros(m, dtype=np.int64)
+    cnt = np.count_nonzero(le, axis=1)
+    lo = np.searchsorted(sK[:k], sC, side="left")
+    rows, cols = _band_pairs(le, sK[:k], sC, np.nonzero(cnt)[0], lo)
+    same = ~(K[cols] != C[rows]).any(axis=1)
+    return cnt - np.bincount(rows[same], minlength=m)
+
+
+def _band_pairs(le, sK, sC, band, lo):
+    """``(rows, cols)`` of the all-≤ pairs in ``le`` between the
+    ``band`` rows of C and the K rows of equal sum, the window
+    ``[lo, hi)`` of ``sK``. Narrow windows (distinct sums: within a
+    chunk each row's window is itself) are enumerated pair by pair;
+    wide ones (a constant-sum input puts every row in one window) are
+    cut out of ``le`` as one masked block: enumerating costs several
+    int64 arrays per pair, the block a few boolean passes per cell,
+    hence the factor 8."""
+    none = np.empty(0, dtype=np.int64)
+    if not len(band):
+        return none, none
+    b_lo = lo[band]
+    b_hi = np.searchsorted(sK, sC[band], side="right")
+    cnt = b_hi - b_lo
+    total = int(cnt.sum())
+    if not total:
+        return none, none
+    c0, c1 = int(b_lo.min()), int(b_hi.max())
+    if total * 8 < len(band) * (c1 - c0):
+        rows = np.repeat(band, cnt)
+        ends = np.cumsum(cnt)
+        cols = np.arange(total) - np.repeat(ends - cnt - b_lo, cnt)
+        keep = le[rows, cols]
+        return rows[keep], cols[keep]
+    span = np.arange(c0, c1)
+    win = le[band, c0:c1]  # a copy: masked in place below
+    win &= span >= b_lo[:, None]
+    win &= span < b_hi[:, None]
+    r, cols = np.nonzero(win)
+    return band[r], cols + c0
 
 
 def skyline_of_array(cols, senses) -> np.ndarray:

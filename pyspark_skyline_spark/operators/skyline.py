@@ -250,17 +250,6 @@ def _grid_surviving_cells(keyed: DataFrame, b: int, d: int) -> list[int]:
     return _surviving_cell_ids(cells, b, d)
 
 
-def _cell_digits(ids, b: int, d: int):
-    """The (n, d) per-dimension bucket digits of ``_mr_grid_key`` cell
-    ids (an int64 array)."""
-    import numpy as np
-
-    digits = np.empty((len(ids), d), dtype=np.int64)
-    for i in range(d):
-        digits[:, i] = ids // b**i % b
-    return digits
-
-
 def _surviving_cell_ids(cells: list[int], b: int, d: int) -> list[int]:
     """Cell ids NOT strictly dominated by any other id in ``cells``
     (digit-wise strict domination in min-space; see
@@ -273,7 +262,7 @@ def _surviving_cell_ids(cells: list[int], b: int, d: int) -> list[int]:
     if not cells:
         return []
     ids = np.asarray(cells, dtype=np.int64)
-    digits = _cell_digits(ids, b, d)
+    digits = np.column_stack([ids // b**i % b for i in range(d)])
     survivors = []
     for idx, cid in enumerate(ids):
         dominated = ((digits < digits[idx]).all(axis=1)).any()
@@ -385,9 +374,9 @@ def _default_param(algo: str, d: int, parallelism: int) -> int:
     raise ValueError(f"unknown algorithm {algo!r}")
 
 
-def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=(), layers=0):
+def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=(), rank=None):
     """One per-(by + cell) skyline pass (``_frontier_rows``, with
-    ``layers`` its first layers); keeps the cell col.
+    ``rank`` its ranked rows); keeps the cell col.
 
     The grouped kernel is Python/Arrow LATENCY-bound (per-group IPC
     round-trips), not byte-bound — but AQE coalesces the groupBy
@@ -416,14 +405,14 @@ def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=(), layers=0):
         n = df_keyed.sparkSession.sparkContext.defaultParallelism
 
     def fn(pdf):
-        return _frontier_rows(pdf, dim_cols, senses, layers)
+        return _frontier_rows(pdf, dim_cols, senses, rank)
 
     return (
         df_keyed.repartition(n, *keys).groupBy(*keys).applyInPandas(fn, schema=schema)
     )
 
 
-def _single_task_skyline(df: DataFrame, dim_cols, senses, layers=0) -> DataFrame:
+def _single_task_skyline(df: DataFrame, dim_cols, senses, rank=None) -> DataFrame:
     """The whole skyline as ONE kernel call in one Python task, for an
     input of at most ``_SINGLE_TASK_ROWS`` rows. ``repartition(1)``
     rather than ``coalesce(1)``: the exchange carries at most that many
@@ -436,12 +425,12 @@ def _single_task_skyline(df: DataFrame, dim_cols, senses, layers=0) -> DataFrame
         pdfs = list(batches)
         if pdfs:
             pdf = pd.concat(pdfs, ignore_index=True)
-            yield _frontier_rows(pdf, dim_cols, senses, layers)
+            yield _frontier_rows(pdf, dim_cols, senses, rank)
 
     return df.repartition(1).mapInPandas(fn, schema=df.schema)
 
 
-def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=(), layers=0):
+def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=(), rank=None):
     """Combiner: reduce each Arrow batch with ONE batch-global kernel
     call BEFORE the shuffle, so the groupBy exchange only carries
     frontier candidates — the skyline analogue of map-side partial
@@ -459,11 +448,11 @@ def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=(), layers=0):
             if len(pdf) == 0:
                 continue
             if not by:
-                yield _frontier_rows(pdf, dim_cols, senses, layers)
+                yield _frontier_rows(pdf, dim_cols, senses, rank)
                 continue
             groups = pdf.groupby(list(by), dropna=False, sort=False).indices.values()
             yield pd.concat(
-                [_frontier_rows(pdf.iloc[g], dim_cols, senses, layers) for g in groups]
+                [_frontier_rows(pdf.iloc[g], dim_cols, senses, rank) for g in groups]
             )
 
     return df_keyed.mapInPandas(fn, schema=schema)
@@ -632,13 +621,15 @@ def skyline(
       at a time and re-run the kernel until one group remains; also
       the fallback past the cap, whose candidates are never collected.
 
-    ``skyline_layers`` runs this same plan with every kernel pass
-    keeping its group's first ``n_layers`` layers instead of its
-    skyline. Three steps can only drop dominated rows, so its plan
-    skips them: the anti-join tier (NOT EXISTS expresses layer 1 only;
-    the single task takes its inputs), MR_GRID's dominated-cell prune
-    (a dominated cell can hold layer-2 rows) and the probe with its
-    broadcast filter (which drops every dominated row).
+    ``skyline_layers`` and ``k_skyband`` run this same plan with every
+    kernel pass keeping its group's ranked rows instead of its skyline:
+    its first ``n_layers`` layers, or its rows with fewer than ``k``
+    dominators, with the rank in an output column. Three steps can only
+    drop dominated rows, so a ranked plan skips them: the anti-join tier
+    (NOT EXISTS expresses the skyline only; the single task takes its
+    inputs), MR_GRID's dominated-cell prune (a dominated cell can hold
+    layer-2 or band rows) and the probe with its broadcast filter (which
+    drops every dominated row).
 
     Rows with NULL or NaN in any skyline dimension are excluded, the
     rule the whole skyline family shares (``_comparable``).
@@ -654,14 +645,15 @@ def _skyline(
     bounds: dict[str, tuple[float, float]] | None = None,
     by: list[str] | None = None,
     n: int | None = None,
-    layers: int = 0,
+    rank: tuple | None = None,
 ) -> DataFrame:
     """``skyline()``, for in-package callers that already know ``n``,
     the comparable row count of ``df``: passing it skips the count that
     picks the size tier. Read only when ``skyline()`` plans on its own.
-    ``layers`` > 0 is ``skyline_layers``: every kernel pass keeps and
-    labels its first ``layers`` layers, in the ``layer`` column that
-    ``df`` must carry."""
+    ``rank`` is ``_frontier_rows``'s: ``("layer", n, col)`` for
+    ``skyline_layers``, ``("band", k, col)`` for ``k_skyband``. Every
+    kernel pass then keeps its group's ranked rows and writes the rank
+    into ``col``, a long column that ``df`` must carry."""
     dims = _normalize_dims(dims)
     d = len(dims)
     self_planned = algo == "auto" and partitions is None and not by and bounds is None
@@ -675,7 +667,7 @@ def _skyline(
     if self_planned:
         if n is None:
             n = df.count()
-        if n <= _ANTIJOIN_MAX and not layers:
+        if n <= _ANTIJOIN_MAX and rank is None:
             # the join's output keeps its streamed side's partitions, so
             # coalesce to k first: each task compares its rows with all
             # n, so its work is (n/k)·n, and k gives the cap
@@ -684,7 +676,7 @@ def _skyline(
             k = max(1, math.ceil(par * (n / _ANTIJOIN_MAX) ** 2))
             return _antijoin(df.coalesce(k), dims)
         if n <= _SINGLE_TASK_ROWS:
-            return _single_task_skyline(df, dim_cols, senses, layers)
+            return _single_task_skyline(df, dim_cols, senses, rank)
 
     spark = df.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
@@ -701,7 +693,7 @@ def _skyline(
         key, ncells = _mr_angle_key(vs, p)
 
     keyed = df.withColumn(_CELL, key)
-    if algo == "MR_GRID" and d > 1 and not layers:
+    if algo == "MR_GRID" and d > 1 and rank is None:
         # Dominated-cell pruning: rows in cells strictly dominated by a
         # nonempty cell can never be skyline points (per group when
         # ``by`` is set — dominance never crosses groups).
@@ -752,12 +744,12 @@ def _skyline(
     if large:
         # pre-shuffle combiner: the exchange only carries per-batch
         # frontier survivors, not the whole table
-        keyed = _map_side_prereduce(keyed, dim_cols, senses, by, layers)
+        keyed = _map_side_prereduce(keyed, dim_cols, senses, by, rank)
 
-    out = _local_skyline_pass(keyed, dim_cols, senses, by, layers)
+    out = _local_skyline_pass(keyed, dim_cols, senses, by, rank)
 
     probe = not (d <= 4 and 0 < est <= _LARGE_INPUT_BYTES)
-    if probe and not by and ncells > 1 and not layers:
+    if probe and not by and ncells > 1 and rank is None:
         # Adaptive global merge: materialize the (small relative to the
         # input) local frontiers once, then pick the merge shape by
         # candidate count. The lazy checkpoint materializes inside the
@@ -775,7 +767,7 @@ def _skyline(
     while ncells > 1:
         ncells = max(1, math.ceil(ncells / _MERGE_FANOUT))
         out = out.withColumn(_CELL, F.pmod(F.col(_CELL), F.lit(ncells)))
-        out = _local_skyline_pass(out, dim_cols, senses, by, layers)
+        out = _local_skyline_pass(out, dim_cols, senses, by, rank)
 
     return out.drop(_CELL)
 
@@ -1073,4 +1065,4 @@ def skyline_layers(
     if n_layers <= 0:
         raise ValueError("n_layers must be positive")
     df = df.withColumn("layer", F.lit(0).cast("long"))
-    return _skyline(df, dims, algo, layers=n_layers, **skyline_kwargs)
+    return _skyline(df, dims, algo, rank=("layer", n_layers, "layer"), **skyline_kwargs)

@@ -2,6 +2,7 @@
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +14,18 @@ from pyspark_skyline_spark.sources.streams import (
     kafka_json_sink_writer,
 )
 
-REF_CSV = "/root/reference/data/points_D_2_N_100_000.csv"
+REPO = str(Path(__file__).resolve().parents[1])
+
+
+def planted_csv(tmp_path):
+    """A headerless ``x1,x2`` integer point CSV (the reference's format)
+    with a planted 12-point frontier under ``x1 MIN, x2 MIN``: (i, 100 - i)
+    for i = 0..11, and for each of them 24 rows that it dominates."""
+    rows = [(i, 100 - i) for i in range(12)]
+    rows += [(i + a, 100 - i + b) for i in range(12) for a in range(5) for b in range(5) if a or b]
+    path = tmp_path / "points.csv"
+    path.write_text("".join(f"{x},{y}\n" for x, y in rows))
+    return str(path)
 
 
 def test_cli_batch_csv(tmp_path):
@@ -22,21 +34,21 @@ def test_cli_batch_csv(tmp_path):
         [
             sys.executable, "-m", "pyspark_skyline_spark.cli",
             "batch", "SKYLINE OF x1 MIN, x2 MIN", "MR_DIM", "8",
-            "--input", REF_CSV, "--dims", "2", "--output", str(out), "--cpus", "4",
+            "--input", planted_csv(tmp_path), "--dims", "2", "--output", str(out), "--cpus", "4",
         ],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
+        capture_output=True, text=True, timeout=300, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    assert "wrote 12 skyline rows" in r.stdout  # golden: 12 points (FIXTURES.md)
+    assert "wrote 12 skyline rows" in r.stdout  # the planted frontier
 
 
-def test_cli_stream_mode(spark, sf_dir, tmp_path):
+def test_cli_stream_mode(spark, tmp_path):
     # reference stream_job parity: the stream subcommand consumes a
     # directory through Structured Streaming and must produce the same
     # frontier as the batch path
     src = tmp_path / "pts_in"
     out = tmp_path / "sky_out"
-    pts = spark.read.schema("x1 INT, x2 INT").csv(REF_CSV)
+    pts = spark.read.schema("x1 INT, x2 INT").csv(planted_csv(tmp_path))
     pts.repartition(2).write.parquet(str(src))
     r = subprocess.run(
         [
@@ -44,17 +56,17 @@ def test_cli_stream_mode(spark, sf_dir, tmp_path):
             "stream", "SKYLINE OF x1 MIN, x2 MIN", "MR_DIM", "8",
             "--input-dir", str(src), "--output", str(out), "--cpus", "4",
         ],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo",
+        capture_output=True, text=True, timeout=600, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     got = spark.read.parquet(str(out)).select("x1", "x2").dropDuplicates()
-    assert got.count() == 12  # golden: 12 points (FIXTURES.md)
+    assert sorted(map(tuple, got.collect())) == [(i, 100 - i) for i in range(12)]
 
 
 def test_cli_rejects_bad_query():
     r = subprocess.run(
         [sys.executable, "-m", "pyspark_skyline_spark.cli", "batch", "NOT A QUERY"],
-        capture_output=True, text=True, timeout=120, cwd="/root/repo",
+        capture_output=True, text=True, timeout=120, cwd=REPO,
     )
     assert r.returncode != 0
 

@@ -11,6 +11,9 @@ from pyspark_skyline_spark.kernel import (
     _PREFIX_ROWS,
     _SCREEN_CELLS,
     _dominated_by,
+    _screen_tiles,
+    _count_screen,
+    find_skyband_counts,
     find_skyline_mask,
     to_min_space,
 )
@@ -29,17 +32,21 @@ def brute_force_mask(cols, senses):
     return mask
 
 
-def dominated_rows(C, K):
-    """Vectorized O(len(C) * len(K)) oracle: is each row of C dominated
-    by some row of K (min-space)? NaN compares false, so a NaN row
-    neither dominates nor is dominated."""
-    out = np.zeros(len(C), dtype=bool)
+def dominator_counts(C, K):
+    """Vectorized O(len(C) * len(K)) oracle: how many rows of K dominate
+    each row of C (min-space)? NaN compares false, so a NaN row neither
+    dominates nor is dominated."""
+    out = np.zeros(len(C), dtype=np.int64)
     for i in range(0, len(C), 256):
         c = C[i : i + 256, None, :]
         le = (K[None] <= c).all(axis=2)
         lt = (K[None] < c).any(axis=2)
-        out[i : i + 256] = (le & lt).any(axis=1)
+        out[i : i + 256] = (le & lt).sum(axis=1)
     return out
+
+
+def dominated_rows(C, K):
+    return dominator_counts(C, K) > 0
 
 
 def test_empty():
@@ -155,8 +162,20 @@ def test_constant_sum_matches_bruteforce(parts, d, senses):
 
 
 @pytest.mark.parametrize("rounds", [0, 8])
-@pytest.mark.parametrize("extra", [0, 20])
+@pytest.mark.parametrize("extra", [0, 20, "later_chunk"])
 def test_equal_float_sum_still_dominates(rounds, extra):
+    if extra == "later_chunk":
+        # every row's x + y rounds to 2**53. The first row, (2**53, 1),
+        # is dominated only by the last, (2**53, 0); the 599 rows between
+        # are incomparable to both and to each other. In input order the
+        # dominator falls into a later BNL chunk than its victim; the
+        # kernel must put it first
+        big = 2.0**53
+        arr = np.array([[big, 1.0]] + [[big - 8 * i, 8.0 * i] for i in range(1, 600)] + [[big, 0.0]])
+        mask = find_skyline_mask([arr[:, 0], arr[:, 1]], ["min"] * 2, prune_rounds=rounds)
+        assert mask.tolist() == [False] + [True] * 600
+        assert find_skyband_counts([arr[:, 0], arr[:, 1]], ["min"] * 2, 2).tolist() == [1] + [0] * 600
+        return
     # the first two rows' sums round to the same float, yet the first
     # dominates the second by 4e-17 in one coordinate; without pivot
     # rounds only the equal-sum band check can find that. The `extra`
@@ -270,3 +289,51 @@ def test_dominated_by_across_prefix_and_tiles(k):
     # the rows dominated only by the last K row are found
     last = K[-1] + eps
     assert _dominated_by(last[None], K, last[None].sum(axis=1), K.sum(axis=1)).tolist() == [True]
+    # the count screen over the same tiles: exact below its cap, at
+    # least the cap above it
+    want = dominator_counts(C, K)
+    for cap in (1, 2, len(K) + 1):
+        got = _screen_tiles(C, K, C.sum(axis=1), K.sum(axis=1), cap, _count_screen)
+        assert (got[want < cap] == want[want < cap]).all()
+        assert (got[want >= cap] >= cap).all()
+
+
+def brute_band_counts(a, k):
+    """Each row's dominator count among the rows of ``a``, read as ``k``
+    from ``k`` on (``find_skyband_counts``' contract)."""
+    return np.minimum(dominator_counts(a, a), k)
+
+
+@given(
+    data=st.lists(
+        st.tuples(st.integers(0, 6), st.integers(0, 6), st.integers(0, 6)),
+        min_size=1,
+        max_size=150,
+    ),
+    senses=st.lists(st.sampled_from(["min", "max"]), min_size=3, max_size=3),
+    k=st.integers(1, 6),
+    nan=st.booleans(),
+)
+@settings(max_examples=150, deadline=None)
+def test_skyband_counts_match_bruteforce(data, senses, k, nan):
+    # a 7-value domain: ties, exact duplicates and equal sums abound
+    arr = np.array(data, dtype=float)
+    if nan:
+        arr[0, 1] = np.nan
+    cols = [arr[:, j] for j in range(3)]
+    got = find_skyband_counts(cols, senses, k)
+    a = np.column_stack([to_min_space(c, s) for c, s in zip(cols, senses)])
+    assert got.tolist() == brute_band_counts(a, k).tolist()
+    if k == 1:
+        assert (got < 1).tolist() == find_skyline_mask(cols, senses).tolist()
+
+
+@pytest.mark.parametrize("k", [1, 3])
+@pytest.mark.parametrize("kind", ["anticorrelated", "sphere", "constant_sum"])
+def test_skyband_counts_large_inputs(kind, k):
+    # the band outgrows the screen's prefix and the BNL crosses several
+    # chunk boundaries; NaN rows count 0 and are never counted
+    a = _large_input(kind, np.random.default_rng(11))
+    got = find_skyband_counts([a[:, j] for j in range(a.shape[1])], ["min"] * a.shape[1], k)
+    assert got.tolist() == brute_band_counts(a, k).tolist()
+    assert (got < k).sum() > _PREFIX_ROWS

@@ -338,8 +338,35 @@ def test_skyline_layers_grouped_peel_stays_in_group(spark):
     ]
 
 
+def rank_input(spark):
+    """The rows (tuples) and frame of the ranked-plan tests: ties on a
+    7-value domain, exact duplicates, NULL and NaN rows and a NULL
+    group; their dimensions are ``RANK_DIMS``, at tuple index 2..4."""
+    import random
+
+    rng = random.Random(23)
+    nan = float("nan")
+    rows = [
+        (
+            i,
+            rng.choice(["a", "b", None]),
+            float(rng.randrange(7)),
+            rng.randrange(7),
+            float(rng.randrange(7)),
+        )
+        for i in range(300)
+    ]
+    rows += rows[:12]  # exact duplicates, id included
+    rows += [(900, "a", nan, 1, 1.0), (901, "b", 1.0, None, 1.0), (902, None, None, 2, nan)]
+    df = spark.createDataFrame(rows, "id long, g string, x double, y long, z double")
+    return rows, df
+
+
+RANK_DIMS = [("x", "min"), ("y", "max"), ("z", "min")]
+
 # (merge_policy constants, est, skyline kwargs, ran counters that name
-# the plan) per plan that ``skyline_layers`` can take
+# the plan) per plan that ``skyline_layers`` can take; ``k_skyband``
+# takes every one but ``by``
 LAYER_PLANS = {
     "single_task": ({}, None, {}, {"single": 1, "antijoin": 0, "local_pass": 0}),
     "partitioned_salted": (PARTITIONED, 1, {"partitions": 2}, {"single": 0}),
@@ -365,31 +392,14 @@ def test_skyline_layers_match_brute_force_peel(spark, merge_policy, plan, n_laye
     duplicates, NULL and NaN rows, mixed senses, a NULL group, and 40
     layers, deeper than the input. Partitioned plans fold local layer
     sets through more than one kernel pass."""
-    import random
-
     from pyspark_skyline_spark.operators.skyline import skyline_layers
 
     consts, est, kwargs, expect = LAYER_PLANS[plan]
-    rng = random.Random(23)
-    nan = float("nan")
-    rows = [
-        (
-            i,
-            rng.choice(["a", "b", None]),
-            float(rng.randrange(7)),
-            rng.randrange(7),
-            float(rng.randrange(7)),
-        )
-        for i in range(300)
-    ]
-    rows += rows[:12]  # exact duplicates, id included
-    rows += [(900, "a", nan, 1, 1.0), (901, "b", 1.0, None, 1.0), (902, None, None, 2, nan)]
-    df = spark.createDataFrame(rows, "id long, g string, x double, y long, z double")
-    dims = [("x", "min"), ("y", "max"), ("z", "min")]
+    rows, df = rank_input(spark)
     group = (lambda r: r[1]) if "by" in kwargs else (lambda r: None)
     want = brute_layers(rows, [2, 3, 4], ["min", "max", "min"], n_layers, group)
     with merge_policy(est=est, **consts) as ran:
-        got = skyline_layers(df, dims, n_layers=n_layers, **kwargs).collect()
+        got = skyline_layers(df, RANK_DIMS, n_layers=n_layers, **kwargs).collect()
     assert sorted(map(tuple, got), key=repr) == want
     assert {k: ran[k] for k in expect} == expect
     if plan != "single_task":
@@ -426,6 +436,83 @@ def test_skyline_layers_job_budget(spark, merge_policy):
     runs = [run(k) for k in (1, 4, 8)]
     assert runs[0][0] == runs[1][0] == runs[2][0] >= 1
     assert runs == [(runs[0][0], 1, k) for k in (1, 4, 8)]
+
+
+def brute_band(rows, dim_idx, senses, k):
+    """Brute-force k-skyband over ``rows`` (tuples): the multiset of
+    ``(*row, dominator count)`` for the rows with fewer than ``k``
+    dominators; rows with a NULL or NaN dimension are excluded."""
+
+    def better(q, p):
+        no_worse = all(
+            (q[i] <= p[i]) if s == "min" else (q[i] >= p[i])
+            for i, s in zip(dim_idx, senses)
+        )
+        return no_worse and any(q[i] != p[i] for i in dim_idx)
+
+    rows = [r for r in rows if all(r[i] is not None and r[i] == r[i] for i in dim_idx)]
+    counts = [(p, sum(better(q, p) for q in rows)) for p in rows]
+    return sorted(((*p, c) for p, c in counts if c < k), key=repr)
+
+
+@pytest.mark.parametrize("k", [1, 3, 400])
+@pytest.mark.parametrize("plan", [p for p in LAYER_PLANS if p != "by"])
+def test_k_skyband_match_brute_force_counts(spark, merge_policy, monkeypatch, plan, k):
+    """Every plan keeps the same rows with the same dominator counts as
+    brute force, on the layers tests' input: k = 1 (the skyline), 3,
+    and 400, above every count (all 312 comparable rows). A named
+    algorithm is reached through ``_pick_algo``, since ``k_skyband``
+    takes no ``algo``; partitioned plans fold local bands through more
+    than one kernel pass."""
+    from pyspark_skyline_spark.operators.skyband import k_skyband
+
+    consts, est, kwargs, expect = LAYER_PLANS[plan]
+    rows, df = rank_input(spark)
+    want = brute_band(rows, [2, 3, 4], ["min", "max", "min"], k)
+    if "algo" in kwargs:
+        monkeypatch.setattr(S, "_pick_algo", lambda algo, d: kwargs["algo"])
+    with merge_policy(est=est, **consts) as ran:
+        got = k_skyband(df, RANK_DIMS, k=k, partitions=kwargs.get("partitions")).collect()
+    assert sorted(map(tuple, got), key=repr) == want
+    assert {c: ran[c] for c in expect} == expect
+    if plan != "single_task":
+        assert ran["local_pass"] >= 2  # at least one fold over local bands
+    if k == 1:
+        sky = skyline(df, RANK_DIMS, partitions=kwargs.get("partitions"))
+        assert sorted(map(tuple, sky.collect()), key=repr) == [r[:-1] for r in want]
+    elif k == 3:
+        assert len(want) < len(rows) - 3 and max(r[-1] for r in want) == 2
+    else:
+        assert len(want) == len(rows) - 3
+
+
+def test_k_skyband_job_budget(spark, merge_policy):
+    """On a single-task-sized input, ``k_skyband`` runs the same Spark
+    jobs for every ``k``: the count that picks the tier and the one
+    kernel task."""
+    from pyspark_skyline_spark.operators.skyband import k_skyband
+
+    df = spark.range(0, 2000).select(
+        F.pmod(F.xxhash64("id"), F.lit(40)).alias("x"),
+        F.pmod(F.xxhash64("id", F.lit(1)), F.lit(40)).alias("y"),
+    )
+    dims = [("x", "min"), ("y", "min")]
+    sc = spark.sparkContext
+
+    def run(k):
+        group = f"band-{k}"
+        sc.setJobGroup(group, group)
+        try:
+            with merge_policy() as ran:
+                rows = k_skyband(df, dims, k=k).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return jobs, ran["single"], max(r.n_dominators for r in rows)
+
+    runs = [run(k) for k in (1, 4, 8)]
+    assert runs == [(runs[0][0], 1, k - 1) for k in (1, 4, 8)]
+    assert runs[0][0] >= 1
 
 
 def test_grouped_grid_prune_keeps_null_group_keys(spark):
