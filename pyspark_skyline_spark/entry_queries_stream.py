@@ -360,14 +360,7 @@ def _q_windowed_stream_skyline(spark, sf_dir):
         )
         q.awaitTermination()
     emissions = spark.table(name).drop("__sky_cell")
-    # stage-2 reduce sized to its input (round 13): emissions are
-    # per-window frontier updates — a few rows per window — and the
-    # windows themselves are the parallelism, so one cell per window
-    # (partitions=1) turns ~n_emissions one-row pandas groups x 2 kernel
-    # passes into one group per window x 1 pass. At scale the window
-    # count grows with the data; a giant single window would size
-    # partitions up instead.
-    reduced = skyline(emissions, dims, by=["window_start"], partitions=1)
+    reduced = skyline(emissions, dims, by=["window_start"])
     return reduced.select("window_start", "value", "event_id").dropDuplicates()
 
 

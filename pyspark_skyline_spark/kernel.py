@@ -225,10 +225,11 @@ def _bnl(s, ssum, rows, k, screen):
     return np.concatenate(kept_src), np.concatenate(kept_cnt)
 
 
-def _frontier_rows(pdf, dim_cols, senses, rank=None):
+def _frontier_rows(pdf, dim_cols, senses, rank=None, by=()):
     """The rows of the pandas frame ``pdf`` on its skyline over the
     columns ``dim_cols``: the one kernel call of every Python pass of
-    the batch operator.
+    the batch operator. With ``by``, one call per group of equal ``by``
+    values (pandas keys: NULL and NaN are one group).
 
     With ``rank = (kind, bound, col)``, the rows ranked within
     ``bound`` instead, each with its rank in column ``col``:
@@ -239,6 +240,13 @@ def _frontier_rows(pdf, dim_cols, senses, rank=None):
       labelled;
     * ``("band", k, col)``: the rows with fewer than ``k`` dominators,
       with that count, from one ``find_skyband_counts`` call."""
+    if by:
+        import pandas as pd
+
+        groups = pdf.groupby(list(by), dropna=False, sort=False).indices.values()
+        return pd.concat(
+            [_frontier_rows(pdf.iloc[g], dim_cols, senses, rank) for g in groups]
+        )
     if rank is None:
         return pdf[find_skyline_mask([pdf[c] for c in dim_cols], senses)]
     kind, bound, col = rank

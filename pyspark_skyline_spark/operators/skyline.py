@@ -16,10 +16,10 @@ schemes — MR_DIM, MR_GRID (with dominated-cell pruning), MR_ANGLE
   transform, lifting the reference's MIN-only MR_ANGLE restriction
   (src/utils/functions.py:327-329);
 * MR_GRID's dominated-cell prune is a driver-precomputed surviving-cell
-  ``isin`` filter (pure Catalyst, no UDF) — and unlike the reference's
-  best-corner rule (README.md:54-57), it only prunes cells strictly
-  dominated by a NONEMPTY cell, which is the sound generalization once
-  bounds are data-driven (see ``_grid_surviving_cells``);
+  broadcast semi-join (pure Catalyst, no UDF) — and unlike the
+  reference's best-corner rule (README.md:54-57), it only prunes cells
+  strictly dominated by a NONEMPTY cell, which is the sound
+  generalization once bounds are data-driven (see ``_grid_prune_grouped``);
 * local skylines run as a NumPy kernel in ``applyInPandas`` (Arrow
   batches, spillable groups) instead of ``collect_list`` + row UDF
   (src/jobs/batch_job.py:128-134);
@@ -29,7 +29,8 @@ schemes — MR_DIM, MR_GRID (with dominated-cell pruning), MR_ANGLE
   the partitioned plan's fixed costs would exceed the kernel work, skip
   it: up to ``_ANTIJOIN_MAX`` rows run as one codegen'd NOT-EXISTS
   anti-join, up to ``_SINGLE_TASK_ROWS`` as one kernel task. The batch
-  operator and the streaming state share this one size policy.
+  operator, grouped or not, and the streaming state share this one size
+  policy.
 
 Results are plain DataFrames preserving the full input row (the
 reference only returns the coordinate struct).
@@ -41,7 +42,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from pyspark_skyline_spark.kernel import _dominated_by, _frontier_rows, to_min_space
+from pyspark_skyline_spark.kernel import _dominated_by, _frontier_rows, _min_matrix
 from pyspark_skyline_spark.parser import parse_skyline_query
 
 __all__ = ["skyline", "skyline_sql", "skyline_antijoin", "skyline_layers", "skyline_witness", "representative_skyline", "windowed_skyline", "warm_up", "ALGORITHMS"]
@@ -232,28 +233,9 @@ def _mr_grid_key(vs, b: int):
     return key, b ** len(vs)
 
 
-def _grid_surviving_cells(keyed: DataFrame, b: int, d: int) -> list[int]:
-    """Sound dominated-cell prune: a cell is eliminated only if some
-    NONEMPTY cell strictly cell-dominates it (every digit strictly
-    smaller in min-space — bucket ranges are disjoint half-open
-    intervals, so cell-level strict dominance implies point-level
-    dominance by an existing point).
-
-    The reference prunes against the best CORNER cell unconditionally
-    (functions.py:138-192, README.md:54-57) — unsound when that corner
-    holds no data, which its fixed uniform [0,1e9] domain hid and our
-    data-driven bounds expose. One cheap count-by-cell pass (map-side
-    combined) + an O(ncells^2) driver check replaces it; the filter
-    stays a pure Catalyst ``isin``.
-    """
-    cells = [r[0] for r in keyed.select(_CELL).distinct().collect()]
-    return _surviving_cell_ids(cells, b, d)
-
-
 def _surviving_cell_ids(cells: list[int], b: int, d: int) -> list[int]:
     """Cell ids NOT strictly dominated by any other id in ``cells``
-    (digit-wise strict domination in min-space; see
-    ``_grid_surviving_cells``)."""
+    (digit-wise strict domination in min-space; see ``_grid_prune_grouped``)."""
     import numpy as np
 
     # NULL cell ids (a NULL dimension value yields a NULL key) are not
@@ -274,16 +256,25 @@ def _surviving_cell_ids(cells: list[int], b: int, d: int) -> list[int]:
 def _grid_prune_grouped(
     keyed: DataFrame, b: int, d: int, by: list[str], max_census: int = 65536
 ) -> DataFrame:
-    """Per-group dominated-cell prune for grouped skylines: the census
-    is the distinct (by..., cell) set, survivors are computed per group
-    on the driver, and the filter is a broadcast LEFT SEMI join on
-    (by..., cell) — the grouped analogue of the ungrouped ``isin``.
+    """MR_GRID's sound dominated-cell prune, per ``by`` group (one
+    group when ``by`` is empty): a cell is eliminated only if some
+    NONEMPTY cell of its group strictly cell-dominates it (every digit
+    strictly smaller in min-space — bucket ranges are disjoint half-open
+    intervals, so cell-level strict dominance implies point-level
+    dominance by an existing point).
 
-    The ungrouped census is bounded by ``b**d`` by construction, but the
-    grouped census grows with the number of groups, so it is only
-    collected when it fits under ``max_census`` rows (checked with a
-    ``limit(n+1)`` probe, never an unbounded collect); past the cap the
-    prune is skipped — correct either way, pruning is an optimization.
+    The reference prunes against the best CORNER cell unconditionally
+    (functions.py:138-192, README.md:54-57) — unsound when that corner
+    holds no data, which its fixed uniform [0,1e9] domain hid and our
+    data-driven bounds expose.
+
+    The census is the distinct (by..., cell) set, survivors are computed
+    per group on the driver, and the filter is a broadcast LEFT SEMI
+    join on (by..., cell). The census grows with the cell and group
+    counts, so it is only collected when it fits under ``max_census``
+    rows (checked with a ``limit(n+1)`` probe, never an unbounded
+    collect); past the cap the prune is skipped — correct either way,
+    pruning is an optimization.
     """
     from collections import defaultdict
 
@@ -412,12 +403,22 @@ def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=(), rank=None)
     )
 
 
-def _single_task_skyline(df: DataFrame, dim_cols, senses, rank=None) -> DataFrame:
-    """The whole skyline as ONE kernel call in one Python task, for an
-    input of at most ``_SINGLE_TASK_ROWS`` rows. ``repartition(1)``
-    rather than ``coalesce(1)``: the exchange carries at most that many
-    rows, while a coalesce would pull the whole upstream plan (e.g. a
-    scan with an expensive filter) into the one task."""
+def _single_task_skyline(df: DataFrame, dim_cols, senses, by=(), rank=None) -> DataFrame:
+    """The whole skyline as ONE kernel call per ``by`` group in one
+    Python task, for an input of at most ``_SINGLE_TASK_ROWS`` rows.
+    ``repartition(1)`` rather than ``coalesce(1)``: the exchange carries
+    at most that many rows, while a coalesce would pull the whole
+    upstream plan (e.g. a scan with an expensive filter) into the one
+    task. With ``by``, Spark groups the one partition (it is clustered
+    on any key, so no second exchange runs): groups then follow
+    ``groupBy``'s key semantics, where a NULL and a NaN key are two
+    groups and a struct key is one value, which pandas' groupby would
+    merge or refuse."""
+    one = df.repartition(1)
+    if by:
+        return one.groupBy(*by).applyInPandas(
+            lambda pdf: _frontier_rows(pdf, dim_cols, senses, rank), schema=df.schema
+        )
 
     def fn(batches):
         import pandas as pd
@@ -427,7 +428,7 @@ def _single_task_skyline(df: DataFrame, dim_cols, senses, rank=None) -> DataFram
             pdf = pd.concat(pdfs, ignore_index=True)
             yield _frontier_rows(pdf, dim_cols, senses, rank)
 
-    return df.repartition(1).mapInPandas(fn, schema=df.schema)
+    return one.mapInPandas(fn, schema=df.schema)
 
 
 def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=(), rank=None):
@@ -442,18 +443,9 @@ def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=(), rank=None)
     schema = df_keyed.schema
 
     def fn(batches):
-        import pandas as pd
-
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if not by:
-                yield _frontier_rows(pdf, dim_cols, senses, rank)
-                continue
-            groups = pdf.groupby(list(by), dropna=False, sort=False).indices.values()
-            yield pd.concat(
-                [_frontier_rows(pdf.iloc[g], dim_cols, senses, rank) for g in groups]
-            )
+            if len(pdf):
+                yield _frontier_rows(pdf, dim_cols, senses, rank, by)
 
     return df_keyed.mapInPandas(fn, schema=schema)
 
@@ -464,9 +456,7 @@ def _collect_minspace(cand: DataFrame, dim_cols, senses):
     import numpy as np
 
     pdf = cand.select(*dim_cols).toPandas()
-    K = np.column_stack(
-        [to_min_space(pdf[c], s) for c, s in zip(dim_cols, senses)]
-    )
+    K = _min_matrix([pdf[c] for c in dim_cols], senses)
     sK = K.sum(axis=1)
     order = np.argsort(sK, kind="stable")
     return np.ascontiguousarray(K[order]), sK[order]
@@ -485,9 +475,7 @@ def _filter_against(cand: DataFrame, K, sK, dim_cols, senses) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C_all = np.column_stack(
-                [to_min_space(pdf[c], s) for c, s in zip(dim_cols, senses)]
-            )
+            C_all = _min_matrix([pdf[c] for c in dim_cols], senses)
             sC_all = C_all.sum(axis=1)
             # ascending-sum order: a row only meets the K prefix with
             # sums <= its own, and ``_dominated_by`` bounds its own
@@ -576,22 +564,24 @@ def skyline(
     by : optional group columns
 
     Plan: when the caller leaves planning to ``skyline()`` (``algo=
-    "auto"``, no ``partitions``, ``by`` or ``bounds``), the comparable
-    row count ``n`` picks one of three tiers:
+    "auto"``, no ``partitions`` or ``bounds``), the comparable row
+    count ``n`` picks one of three tiers, with or without ``by``:
 
     * **anti-join** — ``n <= _ANTIJOIN_MAX`` (4096): one codegen'd
-      NOT-EXISTS broadcast-NL join (``_antijoin``) over the input
-      coalesced to at most ``defaultParallelism`` partitions; no Python
-      task. Every micro-batch of a steady stream folds here.
+      NOT-EXISTS join (``_antijoin``) over the input coalesced to at
+      most ``defaultParallelism`` partitions; no Python task. Ungrouped
+      it is a broadcast nested loop; with ``by`` a broadcast hash join
+      on the null-safe group keys. Every micro-batch of a steady stream
+      folds here.
     * **single task** — ``n <= _SINGLE_TASK_ROWS`` (32768): one kernel
-      call in one Python task (``_single_task_skyline``).
+      call per group in one Python task (``_single_task_skyline``).
     * **partitioned** — otherwise, as below.
 
     Neither small tier has a cell key, local pass, probe or merge. The
     row count is one plain ``count()``, run only when ``skyline()``
-    plans on its own: a named algorithm, ``partitions``, ``by`` or
-    ``bounds`` runs none, and a named algorithm keeps the reference's
-    partitioning scheme at any size. Every other query is partitioned.
+    plans on its own: a named algorithm, ``partitions`` or ``bounds``
+    runs none, and a named algorithm keeps the reference's partitioning
+    scheme at any size. Every other query is partitioned.
     Only this plan pays the per-dimension bounds aggregate
     (``_compute_bounds``), and not with ``bounds``. It is keyed and
     reduced per cell, then merged by one size-driven decision, read
@@ -626,8 +616,8 @@ def skyline(
     its first ``n_layers`` layers, or its rows with fewer than ``k``
     dominators, with the rank in an output column. Three steps can only
     drop dominated rows, so a ranked plan skips them: the anti-join tier
-    (NOT EXISTS expresses the skyline only; the single task takes its
-    inputs), MR_GRID's dominated-cell prune (a dominated cell can hold
+    (NOT EXISTS expresses the skyline only; the single task, grouped or
+    not, takes its inputs), MR_GRID's dominated-cell prune (a dominated cell can hold
     layer-2 or band rows) and the probe with its broadcast filter (which
     drops every dominated row).
 
@@ -656,13 +646,14 @@ def _skyline(
     into ``col``, a long column that ``df`` must carry."""
     dims = _normalize_dims(dims)
     d = len(dims)
-    self_planned = algo == "auto" and partitions is None and not by and bounds is None
+    self_planned = algo == "auto" and partitions is None and bounds is None
     algo = _pick_algo(algo, d)
     if algo not in ("MR_DIM", "MR_GRID", "MR_ANGLE"):
         raise ValueError(f"algo must be one of {ALGORITHMS}, got {algo!r}")
     df = _comparable(df, dims)
     dim_cols = [c for c, _ in dims]
     senses = [s for _, s in dims]
+    by = list(by or ())
 
     if self_planned:
         if n is None:
@@ -674,9 +665,9 @@ def _skyline(
             # defaultParallelism tasks and no task more work than that
             par = df.sparkSession.sparkContext.defaultParallelism
             k = max(1, math.ceil(par * (n / _ANTIJOIN_MAX) ** 2))
-            return _antijoin(df.coalesce(k), dims)
+            return _antijoin(df.coalesce(k), dims, by)
         if n <= _SINGLE_TASK_ROWS:
-            return _single_task_skyline(df, dim_cols, senses, rank)
+            return _single_task_skyline(df, dim_cols, senses, by, rank)
 
     spark = df.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
@@ -697,16 +688,7 @@ def _skyline(
         # Dominated-cell pruning: rows in cells strictly dominated by a
         # nonempty cell can never be skyline points (per group when
         # ``by`` is set — dominance never crosses groups).
-        if by:
-            keyed = _grid_prune_grouped(keyed, p, d, list(by))
-        else:
-            survivors = _grid_surviving_cells(keyed, p, d)
-            # NULL cells (NULL dim values) are incomparable: keep them
-            keyed = keyed.filter(
-                F.col(_CELL).isNull() | F.col(_CELL).isin(survivors)
-            )
-
-    by = list(by or ())
+        keyed = _grid_prune_grouped(keyed, p, d, by)
 
     # Giant-cell guard (SURVEY.md §7.3): a hot or lone cell would funnel
     # its whole population into ONE applyInPandas group — the OOM shape
@@ -715,23 +697,8 @@ def _skyline(
     # folds the salt back out, and skyline(union) == skyline(union of
     # partial skylines) keeps this exact. No-op when the cell count
     # already saturates the cluster.
-    # Grouped skylines with CALLER-SIZED cells (non-empty ``by`` AND an
-    # explicit SMALL ``partitions``) skip the salt (round 13): the
-    # guard's ncells-only arithmetic would salt a deliberately small
-    # cell count back up to parallelism x 4 sub-groups, defeating
-    # callers that size the split to known-small per-group populations
-    # (e.g. the post-stream frontier reduce: thousands of one-row
-    # pandas groups instead of one group per window). The skip is gated
-    # on ``partitions <= parallelism`` (ADVICE r13): a caller passing a
-    # LARGE partitions to increase parallelism is not vouching for
-    # small per-group populations, so the hot-by-group OOM guard stays;
-    # grouped calls at DEFAULT sizing keep it exactly as before.
     target_groups = max(2, parallelism) * 4
-    salt_mod = (
-        1
-        if (by and partitions is not None and partitions <= max(2, parallelism))
-        else max(1, math.ceil(target_groups / max(ncells, 1)))
-    )
+    salt_mod = max(1, math.ceil(target_groups / max(ncells, 1)))
     if salt_mod > 1:
         salt = F.pmod(
             F.xxhash64(*[F.col(c) for c in dim_cols]), F.lit(salt_mod)
@@ -772,23 +739,32 @@ def _skyline(
     return out.drop(_CELL)
 
 
-def _antijoin(df: DataFrame, dims) -> DataFrame:
+def _antijoin(df: DataFrame, dims, by=()) -> DataFrame:
     """Skyline of an already-comparable ``df`` (``_comparable``) as a
-    dominance ANTI-join: keep row p iff no row q is at least as good in
-    every dimension and strictly better in one. ``dims`` normalized.
+    dominance ANTI-join: keep row p iff no row q of its ``by`` group is
+    at least as good in every dimension and strictly better in one.
+    ``dims`` normalized.
 
-    The q side is ``df`` projected to its dimensions under fresh names,
-    so the broadcast carries only those and the condition needs no
-    ``alias``: an aliased self-join of a memory-sink table does not
-    resolve its second alias."""
+    The q side is ``df`` projected to its dimensions (and ``by``
+    columns) under fresh names, so the broadcast carries only those and
+    the condition needs no ``alias``: an aliased self-join of a
+    memory-sink table does not resolve its second alias. The group
+    terms are null-safe equalities, so a NULL key is one group, as in
+    ``groupBy``, and they make the join a broadcast hash join."""
     q_cols = [f"__sky_q{i}" for i in range(len(dims))]
-    q = df.select(*[F.col(f"`{c}`").alias(n) for (c, _), n in zip(dims, q_cols)])
-    dominated = _dominates(
+    g_cols = [f"__sky_g{i}" for i in range(len(by))]
+    src = [c for c, _ in dims] + list(by)
+    q = df.select(*[F.col(f"`{c}`").alias(n) for c, n in zip(src, q_cols + g_cols)])
+    cond = _dominates(
         [F.col(n) for n in q_cols],
         [F.col(f"`{c}`") for c, _ in dims],
         [s for _, s in dims],
     )
-    return df.join(q, dominated, "left_anti")
+    if by:
+        for c, n in zip(by, g_cols):
+            cond = cond & F.col(f"`{c}`").eqNullSafe(F.col(n))
+        q = F.broadcast(q)
+    return df.join(q, cond, "left_anti")
 
 
 def skyline_antijoin(df: DataFrame, dims) -> DataFrame:

@@ -9,9 +9,10 @@ candidate-skyline state table instead:
 * per micro-batch: the batch's comparable rows (``_comparable``),
   checkpointed once, are unioned with the current candidate set and
   the pool is reduced by ONE ``skyline()`` call. Its size policy picks
-  the plan: a steady stream's pools (a batch plus the frontier) take
-  the codegen'd NOT-EXISTS anti-join tier, a larger pool the single
-  kernel task or the partitioned plan. The pool's size is known
+  the plan, with or without ``by``: a steady stream's pools (a batch
+  plus the frontier) take the codegen'd NOT-EXISTS anti-join tier, a
+  larger pool the single kernel task or the partitioned plan, and only
+  the partitioned plan runs a bounds aggregate. The pool's size is known
   without a count of its own: the batch is counted as it is
   checkpointed, and the frontier's size is observed as it is
   checkpointed (``pyspark.sql.Observation``), so a batch runs one
@@ -31,7 +32,7 @@ input, the single task writes one partition), so a long-running stream
 neither grows its per-batch task count nor writes more part files per
 published version. ``localCheckpoint`` breaks lineage so plan depth
 stays O(1) in the number of batches. With ``by``, every fold is a
-grouped ``skyline()``: dominance never crosses groups.
+grouped ``skyline()`` of the same tier: dominance never crosses groups.
 
 Restart/recovery: pass ``state_dir`` (plus ``checkpointLocation`` on
 the query) to make the frontier DURABLE. Each update writes the new

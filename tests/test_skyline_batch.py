@@ -170,7 +170,7 @@ def test_map_side_combine_grouped(orders, merge_policy):
     dims = [("o_totalprice", "max"), ("o_orderdate", "min")]
     def run(combine):
         consts = {"_LARGE_INPUT_BYTES": -1} if combine else {}
-        with merge_policy(**consts) as ran:
+        with merge_policy(**PARTITIONED, **consts) as ran:
             res = skyline(orders, dims, by=["o_orderstatus"])
             got = sorted(
                 tuple(r)
@@ -814,13 +814,15 @@ def test_single_task_gate_differential(spark, merge_policy):
     the partitioned plan, and returns the same multiset as the
     partitioned plan, over exact duplicates, mixed senses and
     date/timestamp dimensions. Only the partitioned plan pays the
-    bounds aggregate. An explicit algo, ``partitions``, ``by`` or
-    ``bounds`` stays partitioned, and the row count costs the jobs of a
-    plain ``count()`` and nothing more."""
+    bounds aggregate. A grouped query takes the same tiers, counted over
+    all of its groups, and returns what a per-group anti-join returns;
+    a ranked grouped query skips the anti-join. An explicit algo,
+    ``partitions`` or ``bounds`` stays partitioned, and the row count
+    costs the jobs of a plain ``count()`` and nothing more."""
     import datetime as dt
     import random
 
-    from pyspark_skyline_spark.operators.skyline import skyline_antijoin
+    from pyspark_skyline_spark.operators.skyline import skyline_antijoin, skyline_layers
 
     caps = {"_ANTIJOIN_MAX": 64, "_SINGLE_TASK_ROWS": 128}
     schema = "id long, g int, x double, y long, day date, ts timestamp"
@@ -850,8 +852,25 @@ def test_single_task_gate_differential(spark, merge_policy):
         ]
         return spark.createDataFrame(rows, schema)
 
+    def grouped_frame(n):
+        """``frame(n - 1)`` split into groups 1 and NULL, plus group 2
+        of a single row: n comparable rows in three groups."""
+        g = F.when(F.col("id") % 3 == 0, F.lit(None)).otherwise(F.lit(1)).cast("int")
+        one = spark.createDataFrame([(950, 2, 9.0, 0, d0, t0)], schema)
+        return frame(n - 1).withColumn("g", g).unionByName(one)
+
+    def per_group(df):
+        return sorted(
+            (
+                tuple(r)
+                for v in (1, 2, None)
+                for r in skyline_antijoin(df.filter(F.col("g").eqNullSafe(v)), dims).collect()
+            ),
+            key=repr,
+        )
+
     def bag(df):
-        return sorted(map(tuple, df.collect()))
+        return sorted(map(tuple, df.collect()), key=repr)
 
     def paths(ran):
         return (ran["antijoin"], ran["single"], int(ran["local_pass"] > 0))
@@ -869,6 +888,30 @@ def test_single_task_gate_differential(spark, merge_policy):
         assert auto == part == bag(skyline_antijoin(df, dims)), n
         assert len(auto) >= 4 and not any(r[0] >= 900 for r in auto)
 
+    for n in (63, 64, 65, 127, 128, 129):
+        df = grouped_frame(n)
+        with merge_policy(**caps) as ran:
+            auto = bag(skyline(df, dims, by=["g"]))
+        assert ran["bounds"] == int(n > 128), n
+        assert paths(ran) == (int(n <= 64), int(64 < n <= 128), int(n > 128)), n
+        with merge_policy(**PARTITIONED) as ran:
+            part = bag(skyline(df, dims, by=["g"]))
+        assert paths(ran) == (0, 0, 1), n
+        assert ran["bounds"] == 1, n
+        assert auto == part == per_group(df), n
+        assert {r[1] for r in auto} == {1, 2, None}, n
+        assert (950, 2, 9.0, 0, d0, t0) in auto and not any(900 <= r[0] < 950 for r in auto)
+
+    # a ranked grouped query takes the single task below both caps
+    df = grouped_frame(63)
+    with merge_policy(**caps) as ran:
+        single = bag(skyline_layers(df, dims, n_layers=3, by=["g"]))
+    assert paths(ran) == (0, 1, 0) and ran["bounds"] == 0
+    with merge_policy(**PARTITIONED) as ran:
+        part = bag(skyline_layers(df, dims, n_layers=3, by=["g"]))
+    assert paths(ran) == (0, 0, 1)
+    assert single == part and {r[-1] for r in single} == {1, 2, 3}
+
     # under the caps, only a query skyline() plans on its own takes them
     df = frame(63)
     want = bag(skyline_antijoin(df, dims))
@@ -877,7 +920,6 @@ def test_single_task_gate_differential(spark, merge_policy):
         {"algo": "MR_ANGLE"},
         {"algo": "MR_DIM"},
         {"partitions": 4},
-        {"by": ["g"]},  # one group: the grouped frontier is the frontier
         {"bounds": bounds},
     ):
         with merge_policy(**caps) as ran:
@@ -888,10 +930,11 @@ def test_single_task_gate_differential(spark, merge_policy):
 
     # empty input, and an input whose rows are all incomparable
     for empty in (spark.createDataFrame([], schema), frame(4).filter("id >= 900")):
-        with merge_policy(**caps) as ran:
-            assert skyline(empty, dims).count() == 0
-        assert paths(ran) == (1, 0, 0)
-        assert ran["bounds"] == 0
+        for by in (None, ["g"]):
+            with merge_policy(**caps) as ran:
+                assert skyline(empty, dims, by=by).count() == 0
+            assert paths(ran) == (1, 0, 0)
+            assert ran["bounds"] == 0
 
     # building a small-tier query runs the jobs of a plain count() and
     # nothing more
@@ -905,12 +948,17 @@ def test_single_task_gate_differential(spark, merge_policy):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    for n, path in ((63, "antijoin"), (100, "single")):
-        df = frame(n)
+    for n, path, by in (
+        (63, "antijoin", None),
+        (100, "single", None),
+        (63, "antijoin", ["g"]),
+        (100, "single", ["g"]),
+    ):
+        df = frame(n) if by is None else grouped_frame(n)
         comparable = S._comparable(df, dims)
-        plain = jobs(lambda: comparable.count(), f"count-{n}")
+        plain = jobs(lambda: comparable.count(), f"count-{n}-{by}")
         with merge_policy(**caps) as ran:
-            built = jobs(lambda: skyline(df, dims), f"build-{n}")
-        assert ran[path] == 1 and ran["bounds"] == 0, path
-        assert built == plain >= 1, path
+            built = jobs(lambda: skyline(df, dims, by=by), f"build-{n}-{by}")
+        assert ran[path] == 1 and ran["bounds"] == 0, (path, by)
+        assert built == plain >= 1, (path, by)
 

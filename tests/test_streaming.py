@@ -60,10 +60,12 @@ def test_result_before_update_raises():
         state.result()
 
 
-def test_grouped_prefix_consistency(spark, sf_dir):
+def test_grouped_prefix_consistency(spark, sf_dir, merge_policy):
     """With ``by``, each fold is a grouped skyline(): after every batch
     the frontier equals skyline(prefix, by=...), which keeps rows that
-    another group's rows dominate."""
+    another group's rows dominate. Each fold is sized by the pool, so
+    these small pools take the anti-join tier and no bounds
+    aggregate."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     by = ["o_orderstatus"]
     cols = [*by, "o_totalprice", "o_orderdate"]
@@ -75,7 +77,9 @@ def test_grouped_prefix_consistency(spark, sf_dir):
     state = SkylineStreamState(DIMS, by=by)
     prefix = None
     for b in batches:
-        got = state.update(b)
+        with merge_policy() as ran:
+            got = state.update(b)
+        assert (ran["antijoin"], ran["single"], ran["bounds"], ran["local_pass"]) == (1, 0, 0, 0)
         prefix = b if prefix is None else prefix.unionByName(b)
         want = grouped_set(skyline(prefix, DIMS, by=by))
         assert grouped_set(got) == want
