@@ -4,7 +4,7 @@ LLM-data-pipeline operator library.
 Re-expresses the capabilities of the reference project
 miketheologitis/PySpark-Skyline (see SURVEY.md) as an idiomatic Spark
 DataFrame library: native Column expressions for partitioning keys,
-``applyInPandas`` NumPy kernels for the dominance test, and a
+``applyInArrow`` NumPy kernels for the dominance test, and a
 tree-structured final merge in place of the reference's single-task
 global reduce (reference: src/jobs/batch_job.py:183-188).
 """

@@ -1,7 +1,8 @@
 """Vectorized skyline (Pareto-frontier) kernel.
 
 Pure NumPy — no Spark imports — so it can be unit-tested standalone and
-shipped to executors inside ``applyInPandas`` closures.
+shipped to executors inside ``applyInArrow``/``mapInArrow`` closures,
+whose Arrow tables ``_frontier_rows`` filters with no pandas step.
 
 Semantics mirror the reference's dominance test and block-nested-loop
 (reference: src/utils/functions.py:6-27 ``is_dominated`` and
@@ -68,10 +69,10 @@ _CHUNK_ROWS = 512
 def to_min_space(values, sense: str) -> np.ndarray:
     """Convert one dimension to float64 "smaller is better" space.
 
-    Handles numeric dtypes, datetime64 and ``datetime.date`` objects
-    (how Arrow hands a Spark DATE column to pandas), converted to
-    microseconds since epoch, which stays exactly representable in
-    float64 until year ~2255. A missing time (None/NaT) becomes NaN,
+    Handles numeric dtypes, ``Decimal`` objects, datetime64 (Arrow DATE
+    and timestamp columns) and ``datetime.date`` objects (a DATE column
+    in pandas), times as microseconds since epoch, exactly representable
+    in float64 until year ~2255. A missing time (None/NaT) becomes NaN,
     like a NULL number. MAX dims are negated.
     """
     arr = np.asarray(values)
@@ -225,14 +226,14 @@ def _bnl(s, ssum, rows, k, screen):
     return np.concatenate(kept_src), np.concatenate(kept_cnt)
 
 
-def _frontier_rows(pdf, dim_cols, senses, rank=None, by=()):
-    """The rows of the pandas frame ``pdf`` on its skyline over the
+def _frontier_rows(t, dim_cols, senses, rank=None):
+    """The rows of the Arrow table ``t`` on its skyline over the
     columns ``dim_cols``: the one kernel call of every Python pass of
-    the batch operator. With ``by``, one call per group of equal ``by``
-    values (pandas keys: NULL and NaN are one group).
+    the batch operator. Rows are kept with ``t.filter``, so every
+    carried column comes back as it went in.
 
     With ``rank = (kind, bound, col)``, the rows ranked within
-    ``bound`` instead, each with its rank in column ``col``:
+    ``bound`` instead, each with its rank in the long column ``col``:
 
     * ``("layer", n, col)``: the rows of its first ``n`` skyline layers
       (1 = the skyline, i = the skyline once layers 1..i-1 are removed),
@@ -240,23 +241,18 @@ def _frontier_rows(pdf, dim_cols, senses, rank=None, by=()):
       labelled;
     * ``("band", k, col)``: the rows with fewer than ``k`` dominators,
       with that count, from one ``find_skyband_counts`` call."""
-    if by:
-        import pandas as pd
+    import pyarrow as pa
 
-        groups = pdf.groupby(list(by), dropna=False, sort=False).indices.values()
-        return pd.concat(
-            [_frontier_rows(pdf.iloc[g], dim_cols, senses, rank) for g in groups]
-        )
+    cols = [np.asarray(t[c]) for c in dim_cols]
     if rank is None:
-        return pdf[find_skyline_mask([pdf[c] for c in dim_cols], senses)]
+        return t.filter(pa.array(find_skyline_mask(cols, senses)))
     kind, bound, col = rank
-    cols = [pdf[c].to_numpy() for c in dim_cols]
     if kind == "band":
         value = find_skyband_counts(cols, senses, bound)
         kept = value < bound
     else:
-        value = np.zeros(len(pdf), dtype=np.int64)
-        rest = np.arange(len(pdf))
+        value = np.zeros(len(t), dtype=np.int64)
+        rest = np.arange(len(t))
         for layer in range(1, bound + 1):
             if not len(rest):
                 break
@@ -264,7 +260,8 @@ def _frontier_rows(pdf, dim_cols, senses, rank=None, by=()):
             value[rest[front]] = layer
             rest = rest[~front]
         kept = value > 0
-    return pdf[kept].assign(**{col: value[kept]})
+    t = t.set_column(t.schema.get_field_index(col), col, pa.array(value, pa.int64()))
+    return t.filter(pa.array(kept))
 
 
 def _dominated_by(

@@ -20,10 +20,10 @@ schemes — MR_DIM, MR_GRID (with dominated-cell pruning), MR_ANGLE
   reference's best-corner rule (README.md:54-57), it only prunes cells
   strictly dominated by a NONEMPTY cell, which is the sound
   generalization once bounds are data-driven (see ``_grid_prune_grouped``);
-* local skylines run as a NumPy kernel in ``applyInPandas`` (Arrow
-  batches, spillable groups) instead of ``collect_list`` + row UDF
-  (src/jobs/batch_job.py:128-134);
-* the final merge is a fan-in tree of ``applyInPandas`` passes instead
+* local skylines run as a NumPy kernel in ``applyInArrow`` (Arrow
+  tables in, filtered Arrow tables out, spillable groups) instead of
+  ``collect_list`` + row UDF (src/jobs/batch_job.py:128-134);
+* the final merge is a fan-in tree of ``applyInArrow`` passes instead
   of the reference's single global reduce task — its documented
   scalability wall (report p.3; SURVEY.md §4.3). Small inputs, where
   the partitioned plan's fixed costs would exceed the kernel work, skip
@@ -41,6 +41,7 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from pyspark_skyline_spark.kernel import _dominated_by, _frontier_rows, _min_matrix
 from pyspark_skyline_spark.parser import parse_skyline_query
@@ -98,7 +99,7 @@ _SINGLE_TASK_ROWS = 32768
 #: ``AB_kernel_blocking.json`` "antijoin_recheck".
 _ANTIJOIN_MAX = 4096
 
-# Make our kernel module picklable by value so applyInPandas closures run
+# Make our kernel module picklable by value so Arrow UDF closures run
 # on executors that don't have the package on their PYTHONPATH.
 try:  # pragma: no cover - defensive
     from pyspark import cloudpickle as _cp  # type: ignore[attr-defined]
@@ -377,17 +378,12 @@ def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=(), rank=None)
     explicit-numPartitions shuffles alone) — same shuffle count, full-
     width Python stage.
 
-    A ``mapInPandas`` incremental-fold variant (local pandas groupby,
-    ``frontier(g) = kernel(frontier(g) ∪ batch-rows(g))`` per Arrow
-    batch) was TRIED and MEASURED OFF in round 14: interleaved A/B at
-    sf0.1 showed it a wash-to-loss on the gate shapes (skyline_layers
-    consistently +0.3 s, two_stage +0.2 s, bare 2-d skyline +0.06 s;
-    only the MR_ANGLE 3-d row improved, within host noise) — at a few
-    thousand rows per group the per-group Arrow framing this removes
-    is already amortized, and the pandas groupby/iloc/concat bookkeeping
-    costs more than it saves. The fold-vs-antijoin differential test
-    (tiny Arrow batches, groups spanning batches) stays as a semantics
-    pin for any future retry."""
+    A per-Arrow-batch incremental fold (``frontier(g) = kernel(
+    frontier(g) ∪ batch-rows(g))``, grouping inside the task) was
+    measured off in round 14: a wash-to-loss on the sf0.1 gate shapes
+    (skyline_layers +0.3 s, two_stage +0.2 s), because at a few
+    thousand rows per group the per-group framing it removes is already
+    amortized."""
     schema = df_keyed.schema
     keys = [*by, _CELL]
     try:
@@ -395,11 +391,11 @@ def _local_skyline_pass(df_keyed: DataFrame, dim_cols, senses, by=(), rank=None)
     except (TypeError, ValueError):  # pragma: no cover - e.g. "auto"
         n = df_keyed.sparkSession.sparkContext.defaultParallelism
 
-    def fn(pdf):
-        return _frontier_rows(pdf, dim_cols, senses, rank)
+    def fn(t):
+        return _frontier_rows(t, dim_cols, senses, rank)
 
     return (
-        df_keyed.repartition(n, *keys).groupBy(*keys).applyInPandas(fn, schema=schema)
+        df_keyed.repartition(n, *keys).groupBy(*keys).applyInArrow(fn, schema=schema)
     )
 
 
@@ -409,26 +405,13 @@ def _single_task_skyline(df: DataFrame, dim_cols, senses, by=(), rank=None) -> D
     ``repartition(1)`` rather than ``coalesce(1)``: the exchange carries
     at most that many rows, while a coalesce would pull the whole
     upstream plan (e.g. a scan with an expensive filter) into the one
-    task. With ``by``, Spark groups the one partition (it is clustered
-    on any key, so no second exchange runs): groups then follow
-    ``groupBy``'s key semantics, where a NULL and a NaN key are two
-    groups and a struct key is one value, which pandas' groupby would
-    merge or refuse."""
-    one = df.repartition(1)
-    if by:
-        return one.groupBy(*by).applyInPandas(
-            lambda pdf: _frontier_rows(pdf, dim_cols, senses, rank), schema=df.schema
-        )
-
-    def fn(batches):
-        import pandas as pd
-
-        pdfs = list(batches)
-        if pdfs:
-            pdf = pd.concat(pdfs, ignore_index=True)
-            yield _frontier_rows(pdf, dim_cols, senses, rank)
-
-    return one.mapInPandas(fn, schema=df.schema)
+    task. One partition satisfies ``groupBy`` on any key, or on none,
+    so no second exchange runs, and groups follow ``groupBy``'s key
+    semantics: a NULL and a NaN key are two groups, a struct key is one
+    value."""
+    return df.repartition(1).groupBy(*by).applyInArrow(
+        lambda t: _frontier_rows(t, dim_cols, senses, rank), schema=df.schema
+    )
 
 
 def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=(), rank=None):
@@ -436,18 +419,30 @@ def _map_side_prereduce(df_keyed: DataFrame, dim_cols, senses, by=(), rank=None)
     call BEFORE the shuffle, so the groupBy exchange only carries
     frontier candidates — the skyline analogue of map-side partial
     aggregation. Removing a row dominated by ANY batch row (even from
-    another cell / ``by`` group boundary aside) is safe for the global
-    result by transitivity; with ``by`` groups dominance must stay
-    within-group, so there we reduce per group.
+    another cell) is safe for the global result by transitivity; with
+    ``by`` dominance must stay within a group, so each batch is split
+    by Arrow's hash grouper first. It keeps NULL and NaN keys apart and
+    splits 0.0 from -0.0, which ``groupBy`` merges: a finer split is
+    sound for a pre-reduce. It rejects nested keys, so ``_skyline``
+    runs no combiner on them.
     """
     schema = df_keyed.schema
 
     def fn(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield _frontier_rows(pdf, dim_cols, senses, rank, by)
+        import numpy as np
+        import pyarrow as pa
 
-    return df_keyed.mapInPandas(fn, schema=schema)
+        for batch in batches:
+            t = pa.Table.from_batches([batch])
+            parts = [t]
+            if by:
+                rows = t.append_column("__sky_row", pa.array(np.arange(len(t))))
+                groups = rows.group_by(by, use_threads=False).aggregate([("__sky_row", "list")])
+                parts = [t.take(g.values) for g in groups["__sky_row_list"]]
+            for part in parts:
+                yield from _frontier_rows(part, dim_cols, senses, rank).to_batches()
+
+    return df_keyed.mapInArrow(fn, schema=schema)
 
 
 def _collect_minspace(cand: DataFrame, dim_cols, senses):
@@ -455,8 +450,8 @@ def _collect_minspace(cand: DataFrame, dim_cols, senses):
     coordinate sum (dims only are collected, never full rows)."""
     import numpy as np
 
-    pdf = cand.select(*dim_cols).toPandas()
-    K = _min_matrix([pdf[c] for c in dim_cols], senses)
+    t = cand.select(*dim_cols).toArrow()
+    K = _min_matrix([t[c] for c in dim_cols], senses)
     sK = K.sum(axis=1)
     order = np.argsort(sK, kind="stable")
     return np.ascontiguousarray(K[order]), sK[order]
@@ -464,30 +459,30 @@ def _collect_minspace(cand: DataFrame, dim_cols, senses):
 
 def _filter_against(cand: DataFrame, K, sK, dim_cols, senses) -> DataFrame:
     """Drop every ``cand`` row dominated by any row of the broadcast
-    min-space matrix ``K`` (sorted by ascending sum) via mapInPandas."""
+    min-space matrix ``K`` (sorted by ascending sum) via mapInArrow."""
     import numpy as np
 
     bc = cand.sparkSession.sparkContext.broadcast((K, sK))
     schema = cand.schema
 
     def fn(batches):
+        import pyarrow as pa
+
         Kb, sKb = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C_all = _min_matrix([pdf[c] for c in dim_cols], senses)
+        for batch in batches:
+            C_all = _min_matrix([batch[c] for c in dim_cols], senses)
             sC_all = C_all.sum(axis=1)
             # ascending-sum order: a row only meets the K prefix with
             # sums <= its own, and ``_dominated_by`` bounds its own
             # temporaries, so the whole batch goes in one call
             corder = np.argsort(sC_all, kind="stable")
-            keep = np.ones(len(pdf), dtype=bool)
+            keep = np.ones(len(batch), dtype=bool)
             keep[corder] = ~_dominated_by(
                 np.ascontiguousarray(C_all[corder]), Kb, sC_all[corder], sKb
             )
-            yield pdf[keep]
+            yield batch.filter(pa.array(keep))
 
-    return cand.mapInPandas(fn, schema=schema)
+    return cand.mapInArrow(fn, schema=schema)
 
 
 def _broadcast_final_filter(
@@ -511,7 +506,7 @@ def _broadcast_final_filter(
     semantics), so they all survive — same as the tree merge. The
     intrinsic O(F² · d) verification of a genuinely huge frontier still
     runs — but across every core/executor instead of inside the tree
-    merge's final single ``applyInPandas`` group (68k-point frontiers:
+    merge's final single ``applyInArrow`` group (68k-point frontiers:
     minutes single-threaded, seconds parallel)."""
     import numpy as np
 
@@ -691,7 +686,7 @@ def _skyline(
         keyed = _grid_prune_grouped(keyed, p, d, by)
 
     # Giant-cell guard (SURVEY.md §7.3): a hot or lone cell would funnel
-    # its whole population into ONE applyInPandas group — the OOM shape
+    # its whole population into ONE applyInArrow group — the OOM shape
     # at scale. Salt the cell id so the first local pass splits every
     # cell into sub-groups (partial frontiers); the tree merge below
     # folds the salt back out, and skyline(union) == skyline(union of
@@ -707,10 +702,11 @@ def _skyline(
         ncells *= salt_mod
 
     est = _estimated_bytes(df)
-    large = est > _LARGE_INPUT_BYTES
-    if large:
+    nested = (ArrayType, MapType, StructType)
+    if est > _LARGE_INPUT_BYTES and not any(isinstance(df.schema[c].dataType, nested) for c in by):
         # pre-shuffle combiner: the exchange only carries per-batch
-        # frontier survivors, not the whole table
+        # frontier survivors, not the whole table. It splits ``by``
+        # groups with Arrow's hash grouper, which rejects nested keys.
         keyed = _map_side_prereduce(keyed, dim_cols, senses, by, rank)
 
     out = _local_skyline_pass(keyed, dim_cols, senses, by, rank)
@@ -947,7 +943,7 @@ def warm_up(
       code and lets async C2 land);
     * the Arrow serialization bridge both ways (first use lazy-inits
       writers/readers per JVM);
-    * the Python worker fleet: process spawn + numpy/pandas/kernel
+    * the Python worker fleet: process spawn + numpy/pyarrow/kernel
       imports (~1 s per worker if paid inside a real query).
 
     Bounded by construction: tiny input, no data dependence, a few
@@ -993,8 +989,8 @@ def windowed_skyline(
     tagged = df.withColumn("window_start", w["start"]).withColumn(
         "window_end", w["end"]
     )
-    # scalar (non-struct) group key so the map-side combiner's pandas
-    # groupby stays hashable
+    # scalar (non-struct) group keys, so a large input keeps the
+    # map-side combiner, whose Arrow hash grouper rejects a struct key
     return skyline(tagged, dims, by=["window_start", "window_end"], **kwargs)
 
 

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
-from pyspark_skyline_spark.kernel import _frontier_rows
+from pyspark_skyline_spark.kernel import find_skyline_mask
 from pyspark_skyline_spark.operators.skyline import (
     _CELL,
     _has_values,
@@ -110,7 +110,7 @@ def _cell_skyline(
         if not batches:
             return
         merged = pd.concat(batches, ignore_index=True)
-        frontier = _frontier_rows(merged, dim_cols, senses)
+        frontier = merged[find_skyline_mask([merged[c] for c in dim_cols], senses)]
         state.update((pickle.dumps(frontier),))
         if window:
             # Expiry anchor: the timeout must exceed the current

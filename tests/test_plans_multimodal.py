@@ -33,19 +33,35 @@ def test_join_skyline_uses_broadcast(spark, sf_dir):
     assert_broadcast_join(_q_join_skyline_customer_nation(spark, sf_dir))
 
 
-def test_skyline_plan_has_no_python_udf_before_grouping(spark, sf_dir):
+def test_skyline_plan_has_no_python_udf_before_grouping(spark, sf_dir, merge_policy):
     """Partition keying must be native expressions: the only Python
-    stages allowed are the applyInPandas kernels (FlatMapGroupsInPandas),
-    never row-wise BatchEvalPython (the reference's bottleneck)."""
+    stages allowed are the Arrow kernels (FlatMapGroupsInArrow, and the
+    broadcast filter's MapInArrow), never row-wise BatchEvalPython (the
+    reference's bottleneck). No tier of ``skyline()`` converts through
+    pandas: no plan has an ``…InPandas`` node."""
     from pyspark_skyline_spark import skyline
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    dims = [("l_extendedprice", "min"), ("l_quantity", "max")]
     for algo in ("MR_DIM", "MR_GRID", "MR_ANGLE"):
-        plan = formatted_plan(
-            skyline(li, [("l_extendedprice", "min"), ("l_quantity", "max")], algo=algo)
-        )
+        plan = formatted_plan(skyline(li, dims, algo=algo))
         assert "BatchEvalPython" not in plan, plan
-        assert "FlatMapGroupsInPandas" in plan
+        assert "FlatMapGroupsInArrow" in plan
+        assert "InPandas" not in plan, plan
+    partitioned = {"_ANTIJOIN_MAX": -1, "_SINGLE_TASK_ROWS": -1}
+    tiers = {
+        "antijoin": (None, {"_ANTIJOIN_MAX": 1 << 30}),
+        "single": (None, {"_ANTIJOIN_MAX": -1, "_SINGLE_TASK_ROWS": 1 << 30}),
+        "local_pass": (None, partitioned),
+        # a failed estimate probes this 2-d input
+        "broadcast": (0, {**partitioned, "_BROADCAST_MIN": -1}),
+    }
+    for path, (est, consts) in tiers.items():
+        with merge_policy(est=est, **consts) as ran:
+            plan = formatted_plan(skyline(li, dims))
+        assert ran[path] >= 1, path
+        assert "InPandas" not in plan, (path, plan)
+    assert "MapInArrow" in plan
 
 
 def test_multimodal_decode_fake(spark, sf_dir):

@@ -768,12 +768,11 @@ def test_skyline_excludes_nan_dims(spark, merge_policy):
 
 
 def test_local_pass_fold_matches_one_shot_group_kernel(spark, merge_policy):
-    """Round 14: _local_skyline_pass is a mapInPandas incremental fold
-    (per-batch, per-group) instead of one applyInPandas call per group.
-    Force groups to SPAN multiple Arrow batches (tiny
-    maxRecordsPerBatch) and pin the fold's output — including exact
-    coordinate-ties, which must all survive — against the one-shot
-    NOT-EXISTS anti-join semantics per group."""
+    """The partitioned plan's kernel passes, grouped and salted
+    ungrouped, with every group SPANNING many Arrow batches (tiny
+    maxRecordsPerBatch): each group's batches reach one kernel call
+    together, so the result, exact coordinate ties included (all of
+    them survive), is the per-group NOT-EXISTS anti-join's."""
     from pyspark.sql import functions as F
 
     from pyspark_skyline_spark.operators.skyline import skyline, skyline_antijoin
@@ -962,3 +961,168 @@ def test_single_task_gate_differential(spark, merge_policy):
         assert ran[path] == 1 and ran["bounds"] == 0, (path, by)
         assert built == plain >= 1, (path, by)
 
+
+
+def _canon(v):
+    """A value as collected, in a form that compares exactly: NaN as a
+    marker (NaN != NaN), Rows and lists as tuples, binary as bytes."""
+    if isinstance(v, float) and math.isnan(v):
+        return "NaN"
+    if isinstance(v, (tuple, list)):
+        return tuple(map(_canon, v))
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v)
+    return v
+
+
+def fidelity_input(spark):
+    """Rows (tuples) and frame of the carried-column fidelity test, on
+    the dimensions ``x`` min, ``y`` min at tuple index 2, 3: row (i, 24 - i)
+    is on the frontier, row (i, 25 - i) is not. Every group ``g`` holds
+    ids of 2^60 and above next to NULL ids (a pandas int column with a
+    NULL is float64, which rounds them) and NaN values of ``v``
+    (pandas writes NaN back as NULL), with DATE, timestamp, decimal,
+    string, binary, struct and array columns."""
+    import datetime as dt
+    from decimal import Decimal
+
+    n = 24
+    rows = []
+    for i in range(n):
+        for extra in (0, 1):
+            rows.append(
+                (
+                    None if i % 3 == 0 else (1 << 60) + 4 * i + 2 * extra + 1,
+                    i % 2,
+                    float(i),
+                    n - i + extra,
+                    float("nan") if i % 4 in (1, 2) else i / 8,
+                    dt.date(2024, 1, 1) + dt.timedelta(days=i),
+                    dt.datetime(2024, 1, 1, 12, 0, 0, 123457) + dt.timedelta(seconds=i),
+                    (Decimal(i) / 7).quantize(Decimal(10) ** -18),
+                    f"s{i}" if i % 5 else None,
+                    bytes([i, extra]),
+                    (i, f"t{extra}"),
+                    [i, None, extra],
+                )
+            )
+    schema = (
+        "id long, g int, x double, y long, v double, day date, ts timestamp, "
+        "dec decimal(38,18), s string, b binary, st struct<a: int, b: string>, "
+        "arr array<int>"
+    )
+    return rows, spark.createDataFrame(rows, schema)
+
+
+FIDELITY_DIMS = [("x", "min"), ("y", "min")]
+
+# (merge_policy constants, est, skyline kwargs, ran counters that name
+# the plan) for every plan of the fidelity test
+FIDELITY_PLANS = {
+    "antijoin": ({}, None, {}, {"antijoin": 1, "single": 0}),
+    "single_task": ({"_ANTIJOIN_MAX": -1}, None, {}, {"single": 1}),
+    "single_task_by": ({"_ANTIJOIN_MAX": -1}, None, {"by": ["g"]}, {"single": 1}),
+    "partitioned_salted": (PARTITIONED, 1, {"partitions": 2}, {"single": 0, "combiner": 0}),
+    "combiner": (PARTITIONED, 5 * 1024**3, {}, {"combiner": 1, "broadcast": 0}),
+    "combiner_by": (PARTITIONED, 5 * 1024**3, {"by": ["g"]}, {"combiner": 1}),
+    # a failed estimate probes this 2-d input, with no combiner
+    "broadcast": (PIN_BROADCAST, 0, {}, {"broadcast": 1, "combiner": 0}),
+    "MR_DIM": ({}, 1, {"algo": "MR_DIM"}, {"single": 0, "antijoin": 0}),
+    "MR_GRID": ({}, 1, {"algo": "MR_GRID"}, {"single": 0, "antijoin": 0}),
+    "MR_ANGLE": ({}, 1, {"algo": "MR_ANGLE"}, {"single": 0, "antijoin": 0}),
+}
+
+
+@pytest.mark.parametrize("plan", list(FIDELITY_PLANS))
+def test_carried_columns_come_back_unchanged(spark, merge_policy, plan):
+    """Output rows are the input rows unchanged on every plan: the
+    anti-join's rows, compared value for value, with NaN as NaN."""
+    from pyspark_skyline_spark.operators.skyline import skyline_antijoin
+
+    rows, df = fidelity_input(spark)
+    frontier = sorted((_canon(r) for r in rows if r[3] == 24 - r[2]), key=repr)
+    anchor = sorted(map(_canon, skyline_antijoin(df, FIDELITY_DIMS).collect()), key=repr)
+    assert anchor == frontier
+    consts, est, kwargs, expect = FIDELITY_PLANS[plan]
+    with merge_policy(est=est, **consts) as ran:
+        got = skyline(df, FIDELITY_DIMS, **kwargs).collect()
+    assert {k: ran[k] for k in expect} == expect
+    assert sorted(map(_canon, got), key=repr) == anchor
+
+
+@pytest.mark.parametrize(
+    "consts, kwargs",
+    [({}, {}), (PARTITIONED, {"partitions": 2})],
+    ids=["single_task", "partitioned_salted"],
+)
+def test_ranked_plans_carry_columns_unchanged(spark, merge_policy, consts, kwargs):
+    """``skyline_layers`` and ``k_skyband`` return the fidelity input's
+    rows unchanged, with the rank a brute force gives them."""
+    from pyspark_skyline_spark.operators.skyband import k_skyband
+    from pyspark_skyline_spark.operators.skyline import skyline_layers
+
+    rows, df = fidelity_input(spark)
+    senses = ["min", "min"]
+
+    def canon(rs):
+        return sorted(map(_canon, rs), key=repr)
+
+    with merge_policy(est=1, **consts) as ran:
+        layers = skyline_layers(df, FIDELITY_DIMS, n_layers=2, **kwargs).collect()
+        band = k_skyband(df, FIDELITY_DIMS, k=2, **kwargs).collect()
+    assert ran["single"] == (0 if consts else 2)
+    assert canon(layers) == canon(brute_layers(rows, [2, 3], senses, 2, lambda r: None))
+    assert canon(band) == canon(brute_band(rows, [2, 3], senses, 2))
+
+
+def test_combiner_keeps_null_and_nan_keys_apart(spark, merge_policy):
+    """The map-side combiner splits a batch by ``by`` key as ``groupBy``
+    does for a NULL and a NaN key of a float column: two groups, so the
+    NaN group's (1, 1) does not drop the NULL group's (2, 2)."""
+    nan = float("nan")
+    rows = [
+        (1.0, 0.0, 5.0),
+        (1.0, 5.0, 0.0),
+        (nan, 1.0, 1.0),
+        (nan, 3.0, 3.0),
+        (None, 2.0, 2.0),
+        (None, 4.0, 4.0),
+    ]
+    # one partition: every row meets the combiner in one Arrow batch
+    df = spark.createDataFrame(rows, "g double, x double, y double").coalesce(1)
+    dims = [("x", "min"), ("y", "min")]
+    with merge_policy(est=5 * 1024**3, **PARTITIONED) as ran:
+        got = skyline(df, dims, by=["g"]).collect()
+    assert ran["combiner"] == 1
+    want = [(1.0, 0.0, 5.0), (1.0, 5.0, 0.0), (nan, 1.0, 1.0), (None, 2.0, 2.0)]
+    assert sorted(map(_canon, got), key=repr) == sorted(map(_canon, want), key=repr)
+
+
+def test_combiner_skipped_on_struct_key(spark, merge_policy):
+    """Arrow's hash grouper rejects a struct key, so a grouped skyline
+    on one runs no combiner, and returns the per-group anti-join."""
+    from pyspark_skyline_spark.operators.skyline import skyline_antijoin
+
+    rows = [
+        (1, 0.0, 5.0),
+        (1, 5.0, 0.0),
+        (1, 6.0, 6.0),
+        (2, 1.0, 1.0),
+        (None, 2.0, 2.0),
+        (None, 0.5, 9.0),
+        (None, 3.0, 3.0),
+    ]
+    df = spark.createDataFrame(rows, "g long, x double, y double").withColumn(
+        "k", F.struct("g")
+    )
+    dims = [("x", "min"), ("y", "min")]
+    with merge_policy(est=5 * 1024**3, **PARTITIONED) as ran:
+        got = skyline(df, dims, by=["k"]).collect()
+    assert ran["combiner"] == 0 and ran["local_pass"] > 0
+    want = [
+        r
+        for g in (1, 2, None)
+        for r in skyline_antijoin(df.filter(F.col("g").eqNullSafe(F.lit(g))), dims).collect()
+    ]
+    assert len(want) == 5
+    assert sorted(map(_canon, got), key=repr) == sorted(map(_canon, want), key=repr)

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_skyline_spark import skyline
-from pyspark_skyline_spark.kernel import _frontier_rows
+from pyspark_skyline_spark.kernel import find_skyline_mask
 from pyspark_skyline_spark.operators.skyline import (
     _CELL,
     _comparable,
@@ -136,7 +136,7 @@ def _stored_frontiers(spark, chk, keys):
 
 
 def _wanted_frontiers(spark, rows, keys):
-    """{group key: ``_frontier_rows`` of the group's comparable rows}."""
+    """{group key: the kernel's frontier of the group's comparable rows}."""
     df = _comparable(spark.createDataFrame(rows, SCHEMA), EDIMS)
     key, _ = _mr_dim_key(_minspace_exprs(df, EDIMS, EBOUNDS), CELLS)
     df = df.withColumn(_CELL, key).withColumn(
@@ -144,7 +144,7 @@ def _wanted_frontiers(spark, rows, keys):
     )
     pdf = df.toPandas()
     return {
-        g: _pairs(_frontier_rows(part, [c for c, _ in EDIMS], ["max", "min"]))
+        g: _pairs(part[find_skyline_mask([part[c] for c, _ in EDIMS], ["max", "min"])])
         for g, part in pdf.groupby(keys)
     }
 
